@@ -3,6 +3,7 @@ watermarked windowed aggregates (run with availableNow over a temp
 landing dir — real streaming machinery, bounded runtime)."""
 
 import json
+import os
 import time
 
 import pytest
@@ -53,6 +54,46 @@ def test_stream_upsert_each_batch(spark, tmp_path):
     q2.awaitTermination(60)
     got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
     assert got == {1: "a", 2: "B", 3: "c"}
+
+
+def _files(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
+def test_stream_empty_drop_writes_nothing(spark, tmp_path):
+    """An empty landing file runs a 0-row micro-batch: with no table
+    yet it creates nothing, and an existing table keeps every file."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    target = tmp_path / "silver"
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        q = upsert_each_batch(
+            stream_json_landing(spark, str(landing), SCHEMA),
+            str(target),
+            keys=["k"],
+            partition_by=["part"],
+            checkpoint=ckpt,
+        )
+        q.awaitTermination(60)
+        return [p["numInputRows"] for p in q.recentProgress]
+
+    (landing / "empty1.json").write_text("")
+    assert drain() == [0]
+    assert not target.exists()
+
+    spark.createDataFrame([(1, "p1", "a")], SCHEMA).write.partitionBy(
+        "part"
+    ).parquet(str(target))
+    before = _files(target)
+    (landing / "empty2.json").write_text("")
+    assert drain() == [0]
+    assert _files(target) == before
 
 
 def test_windowed_event_counts_streaming_plan(spark, tmp_path):

@@ -12,6 +12,9 @@ python tools/check_counts.py
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== benchmark unit tests =="
+python3 -m pytest perfbench/tests -q
+
 echo "== oracle gate ($SF) =="
 python tools/oracle_check.py "$SF"
 

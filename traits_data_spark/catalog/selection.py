@@ -17,7 +17,6 @@ from traits_data_spark.catalog._shared import (
     dsir_counts,
     dsir_select,
     dsir_select_sampled,
-    dsir_train,
     merge_dsir_counts,
     hash_split,
     name_search,

@@ -14,9 +14,11 @@ partitions. (On a Delta/Iceberg table this whole function is
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_, or_
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
@@ -84,56 +86,71 @@ def upsert_parquet_partition(
 
     Only partitions present in ``updates`` — plus, when ``deletes`` is
     given, partitions holding a retracted key — are read back and
-    rewritten (semi-join pushdown on partition values), so cost scales
-    with the delta, not the table.
+    rewritten, so cost scales with the delta, not the table:
+
+    - the touched partition values are collected on the driver by one
+      ``distinct().collect()`` (bounded by the touched-partition count);
+      nothing touched on an existing table returns without a write;
+    - the table scan is statically pruned to them by a literal
+      predicate (null-safe, so a NULL partition matches), which shows
+      as the scan's ``PartitionFilters``;
+    - the MERGE runs once, inside the dynamic-overwrite write.
 
     ``deletes`` mirrors the reference's stale-file delete (an upstream
     re-fetch answering "No statistical data" retracts the key —
     UPDATERS/wyscout-bronze-batch.py:60-76): matching rows are dropped
     during the rewrite. Dynamic partition overwrite only replaces
     partitions PRESENT in the written frame, so a partition the
-    retraction fully empties would otherwise survive as stale files —
-    those directories are removed explicitly through the Hadoop
+    retraction fully empties would otherwise survive as stale files.
+    The write observes the partitions it keeps (``DataFrame.observe``);
+    touched minus kept are removed afterwards through the Hadoop
     FileSystem (the portable spelling of the reference's S3
-    delete_object), bounded by the touched-partition count.
+    delete_object).
+
+    An empty ``updates`` on a first write creates no table.
     """
     spark = updates.sparkSession
+    parts = list(partition_by)
     existing = None
-    touched = updates.select(*partition_by).distinct()
     try:
         target = spark.read.parquet(path)
+    except AnalysisException:
+        target = None  # first write
+    if target is None:
+        if updates.isEmpty():
+            return
+    else:
+        touched_df = updates.select(*parts)
         if deletes is not None:
             # Partitions holding a retracted key are touched too, even
             # when no update lands there.
-            del_parts = (
+            touched_df = touched_df.union(
                 target.join(
                     F.broadcast(deletes.select(*keys).distinct()),
                     list(keys),
                     "left_semi",
-                )
-                .select(*partition_by)
-                .distinct()
+                ).select(*parts)
             )
-            touched = touched.union(del_parts).distinct()
-        # Restrict to touched partitions: semi-join on partition values.
-        existing = target.join(
-            F.broadcast(touched), list(partition_by), "left_semi"
+        touched = [tuple(r) for r in touched_df.distinct().collect()]
+        if not touched:
+            return
+        in_touched = (
+            reduce(and_, (F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(parts, vals)))
+            for vals in touched
         )
-    except AnalysisException:
-        pass  # first write
+        existing = target.filter(reduce(or_, in_touched))
     merged = merge_upsert(existing, updates, keys, deletes=deletes)
-    # Fully-emptied partitions: touched but absent from the rewrite.
-    # Computed (collected) BEFORE the overwrite — the plan reads the
-    # files the write is about to replace.
-    emptied = []
+    # Partitions the rewrite keeps, observed by the write itself.
+    kept_obs = None
     if deletes is not None and existing is not None:
-        emptied = touched.join(
-            merged.select(*partition_by).distinct(),
-            list(partition_by),
-            "left_anti",
-        ).collect()
+        kept_obs = Observation()
+        merged = merged.observe(kept_obs, F.collect_set(F.struct(*parts)).alias("kept"))
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    merged.write.mode("overwrite").partitionBy(*parts).parquet(path)
+    if kept_obs is None:
+        return
+    kept = {tuple(r) for r in kept_obs.get["kept"]}
+    emptied = [vals for vals in touched if vals not in kept]
     if not emptied:
         return
     sc = spark.sparkContext
@@ -141,9 +158,9 @@ def upsert_parquet_partition(
     hconf = sc._jsc.hadoopConfiguration()
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(hconf)
-    for row in emptied:
+    for vals in emptied:
         sub = "/".join(
-            f"{col}={_partition_dir_value(row[col])}" for col in partition_by
+            f"{col}={_partition_dir_value(v)}" for col, v in zip(parts, vals)
         )
         p = jvm.org.apache.hadoop.fs.Path(path + "/" + sub)
         if fs.exists(p):

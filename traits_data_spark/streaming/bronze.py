@@ -49,8 +49,8 @@ def upsert_each_batch(
     (the Auto-Loader pattern); drop it for continuous micro-batches."""
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        # An empty micro-batch touches no partition: the upsert returns
+        # without a write (and creates no table on a first write).
         upsert_parquet_partition(batch, target_path, keys, partition_by)
 
     writer = stream_df.writeStream.foreachBatch(_merge).option(
