@@ -31,7 +31,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full E1 silver pipeline (profile build →
     meta re-join → ANY/season totals self-join → cast contract) on
     sf0.001."""
-    return catalog.q_silver_e1(spark, SMOKE_SF_DIR)
+    return catalog.QUERIES["silver_e1"](spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -33,10 +33,13 @@ from __future__ import annotations
 import json
 import os
 import random
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from traits_data_spark.catalog.registry import TABLE  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -56,253 +59,20 @@ FLAGSHIPS = [
     "training_prep",
 ]
 
-# The headline set: the flagship pipelines plus every operator family
-# with real weight at scale (shuffle-heavy, window-heavy, sketching,
-# similarity). Names map to traits_data_spark.catalog entries.
+# The headline set: the flagships, then every other row the catalog
+# table marks benched (table order; main() shuffles the tail). The
+# unbenched rows and why they are skipped are documented on
+# ``traits_data_spark.catalog.registry.TABLE``; every catalog query lands
+# in exactly one of the two lists, so a new query can never silently
+# skip the bench_compare regression gate.
 BENCH_QUERIES = FLAGSHIPS + [
-    "group_zscores",
-    "last_n_filter",
-    "dedup_keep_best",
-    "rollup_grouping_sets",
-    "exact_dedup",
-    "lsh_candidates",
-    "jaccard_verify",
-    "ngram_jaccard",
-    "simhash",
-    "simhash_near_dups",
-    "dup_clusters",
-    "decontaminate",
-    "repetition_features",
-    "cosine_topk",
-    "cosine_topk_quantized",
-    "lsh_topk",
-    "lsh_topk_multiprobe",
-    "ivf_topk",
-    "quantize_embeddings",
-    "knn_label_eval",
-    "char_entropy",
-    "embedding_near_dups",
-    "event_sessions",
-    "event_stats",
-    "quality_features",
-    "quality_classifier",
-    "line_dedup",
-    "semantic_dedup",
-    "identify_language",
-    "token_counts",
-    "document_fingerprint",
-    "redact_pii",
-    "event_windows",
-    "funnel_steps",
-    "cohort_retention",
-    "decayed_engagement",
-    "hll_distinct",
-    "kmeans_clusters",
-    "ivf_topk_kmeans",
-    "cms_top_terms",
-    "sampled_quantiles",
-    "substring_dups",
-    "remove_dup_substrings",
-    "bloom_decontaminate",
-    "shuffle_shards",
-    "mixture_plan",
-    "gopher_rules",
-    "containment_pairs",
-    "epoch_expand",
-    "kmv_overlap",
-    "corpus_report",
-    "snapshot_diff",
-    "incremental_near_dups",
-    "event_transitions",
-    "hourly_anomalies",
-    "funnel_within",
-    "price_histogram",
-    "merge_upsert",
-    "asof_join",
-    "range_join",
-    "kmv_distinct",
-    "rolling_agg",
-    "tfidf_top_terms",
-    "stratified_sample",
-    "temperature_sample",
-    "token_budget",
-    "pivot_stats",
-    "zorder_values",
-    "incremental_merge",
-    "continuous_rollup",
-    "top_terms",
-    "chunk_docs",
-    "cdc_chunks",
-    "pack_sequences",
-    "pack_best_fit",
-    "image_metadata",
-    "audio_metadata",
-    "split_contamination",
-    "bpe_token_counts",
-    "curate_corpus_bpe",
-    "incremental_exact_dedup",
-    "bpe_token_counts_large",
-    "ann_recall",
-    "video_metadata",
-    "bpe_merge_token_counts",
-    "lm_perplexity",
-    "webm_metadata",
-    "curate_corpus_ppl",
-    "lm_perplexity_sampled",
-    "winnow_fingerprints",
-    "winnow_matches",
-    "tokenizer_fertility",
-    "pq_topk",
-    "bm25_topk",
-    "unigram_token_counts",
-    "ivfpq_topk",
-    "dsir_select",
-    "dsir_select_sampled",
-    "matryoshka_recall",
-    "hard_negatives",
-    "vocab_drift",
-    "scd2_merge",
-    "copy_pagerank",
-    "pq_incremental_encode",
-    "bpe_train",
-    "bpe_train_tokens",
-    "train_bigram_lm",
-    "bm25_topk_champion",
-    "ridge_stats",
-    # round 12: trainer triad completion + classifier loop + layout
-    "unigram_train",
-    "unigram_train_tokens",
-    "train_quality_classifier",
-    "balanced_shards",
-    "shard_local_near_dups",
-    "curate_corpus_trained",
-    # round 13: multi-assignment recall, sharded-dedup flagship, DSIR
-    # trainer chain, serving name search
-    "shard_local_near_dups_m2",
-    "semantic_dedup_sharded",
-    "dsir_train",
-    "dsir_train_select",
-    "name_search",
-    "near_dup_recall_report",
-    "curate_corpus_dsir",
-    # round 13 second batch: hybrid retrieval fusion, semantic decon,
-    # Kneser-Ney LM trainer
-    "hybrid_topk_rrf",
-    "semantic_decontaminate",
-    "train_kn_lm",
-    "kn_doc_scores",
-    "decontamination_report",
-    "hybrid_topk_weighted",
-    "curriculum_shards",
-    "source_diversity",
-    # round 14: modified-KN trainer (KenLM's smoothing class),
-    # add-mergeable DSIR count-index chain
-    "train_mkn_lm",
-    "dsir_train_counts",
-    "curriculum_pack",
-    # round 15: order-3 interpolated KN (trigram index + continuation
-    # backoff chain + train-then-score); DSIR count-index consumption
-    # inside the curation chain
-    "train_kn3_lm",
-    "kn3_doc_scores",
-    "curate_corpus_dsir_counts",
-    "train_mkn3_lm",
-    # round 16: keyed-retraction MERGE, order-4 modified KN
-    "merge_upsert_delete",
-    "train_mkn4_lm",
-    "kn4_doc_scores",
+    name for name, _, _, benched in TABLE
+    if benched and name not in FLAGSHIPS
 ]
+BENCH_EXCLUDED = {name for name, _, _, benched in TABLE if not benched}
 
-# --- Tiered board (round-15 verdict task 5; default re-pinned to
-# FULL by round-16 verdict task 2) ----------------------------------
-# The round-15 verdict asked for a fast tier (flagships + WATCHLIST +
-# RECENT) on most rounds; the round-16 verdict then found the
-# round-counting default would have silently shrunk the NEXT driver
-# board to ~20 queries, making its headline total incomparable and
-# tail regressions invisible — so FULL is now the default and the
-# fast tier is explicit opt-in via SPARK_GRAFT_BENCH_TIER=fast (for
-# quick local iteration only; a fast board can never be pinned as
-# anchor, and bench_compare restricts to the common query subset so
-# a fast board still compares against the full anchor cleanly).
-# Contract noted in BASELINE.md.
-
-WATCHLIST = [
-    "hybrid_topk_rrf",
-    "semantic_dedup_sharded",
-    "remove_dup_substrings",
-    "dsir_select",
-    "ngram_jaccard",
-    "profile_build_multi_pass",
-]
-
-RECENT = [
-    "train_kn3_lm",
-    "kn3_doc_scores",
-    "curate_corpus_dsir_counts",
-    "train_mkn3_lm",
-    "merge_upsert_delete",
-    "train_mkn4_lm",
-    "kn4_doc_scores",
-]
-
-
-def inferred_round(here: str) -> int:
-    import glob as _glob
-    import re as _re
-
-    ns = []
-    for p in _glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = _re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            ns.append(int(m.group(1)))
-    return (max(ns) + 1) if ns else 1
-
-
-def board_tier(here: str, anchor_queries) -> str:
-    mode = os.environ.get("SPARK_GRAFT_BENCH_TIER", "auto")
-    if mode in ("full", "fast"):
-        return mode
-    return "full"
-
-# Catalog entries EXPLICITLY excluded from the bench board. Every
-# catalog query must appear in exactly one of BENCH_QUERIES /
-# BENCH_EXCLUDED (tests/test_catalog_window.py asserts the union) so
-# a new query can never silently skip the bench_compare regression
-# gate — an unbenched regression would otherwise be invisible.
-# Exclusion reasons:
-# - tiny relational/scalar utilities whose whole runtime is session
-#   overhead (sub-100 ms plans: cumcount, scalar_funcs, hash_split,
-#   json_props, ...) — the flagship plans exercise the same operators
-#   under real data weight;
-# - rows-only binary/packing entries (multimodal_features,
-#   audio_features) whose cost is the synthetic payload decode, and
-#   per-group sub-steps of benched composites (minhash_sigs is inside
-#   lsh_candidates; source_mixture is inside mixture_plan).
-BENCH_EXCLUDED = {
-    "any_union_agg",
-    "audio_features",
-    "chunk_dedup",
-    "cluster_split",
-    "cumcount",
-    "distinct_dims",
-    "feature_filter",
-    "filter_small_groups",
-    "frame_samples",
-    "hash_split",
-    "incremental_new_keys",
-    "json_props",
-    "minhash_sigs",
-    "mismatch_join",
-    "multimodal_features",
-    "null_zero_profile",
-    "outer_join_fill",
-    "percentile_profile",
-    "salted_stats",
-    "scalar_funcs",
-    "source_mixture",
-    "topk_per_group",
-    "with_group_rank",
-}
+# Committed boards are named BENCH_r<round>.json.
+BENCH_FILE = re.compile(r"BENCH_r(\d+)\.json")
 
 # Fixed tail-capture budget on the driver side: the driver records the
 # LAST 2000 chars of stdout, and this line prints last — so the line
@@ -435,34 +205,7 @@ def main() -> None:
     spark = get_spark("traits-data-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Fail loudly on unknown names: a misspelled or not-yet-registered
-    # query silently vanishing from the headline produced a committed
-    # baseline that never benched the round's new flagships once —
-    # never again.
-    missing = [n for n in BENCH_QUERIES if n not in catalog.QUERIES]
-    if missing:
-        raise SystemExit(
-            f"BENCH_QUERIES not in catalog.QUERIES: {missing}"
-        )
-
-    # Tiered board: FULL unless explicitly opted out (see the TIER
-    # contract above); the anchor-pinning step must only ever pin a
-    # board whose "tier" field reads "full".
-    tier = board_tier(here, None)
-    rnd = inferred_round(here)
-    if tier == "fast":
-        keep = set(FLAGSHIPS) | set(WATCHLIST) | set(RECENT)
-        board = [n for n in BENCH_QUERIES if n in keep]
-        print(
-            f"bench: FAST tier (inferred round {rnd}, env opt-in) — "
-            f"{len(board)}/{len(BENCH_QUERIES)} queries (flagships + "
-            "watchlist + last-two-rounds); unset SPARK_GRAFT_BENCH_TIER "
-            "for the comparable full board"
-        )
-    else:
-        board = list(BENCH_QUERIES)
-        print(f"bench: FULL tier (inferred round {rnd}) — "
-              f"{len(board)} queries")
+    print(f"bench: {len(BENCH_QUERIES)} queries")
     # Flagships keep their fixed fresh-JVM slots; the long tail runs in
     # a RANDOMIZED order so a query's slot position (GC pressure /
     # code-cache churn accumulating through the shared session) averages
@@ -472,7 +215,7 @@ def main() -> None:
     # SPARK_GRAFT_BENCH_SEED to reproduce a specific order.
     seed_env = os.environ.get("SPARK_GRAFT_BENCH_SEED")
     seed = int(seed_env) if seed_env else int.from_bytes(os.urandom(4), "big")
-    tail = [n for n in board if n not in FLAGSHIPS]
+    tail = BENCH_QUERIES[len(FLAGSHIPS):]
     random.Random(seed).shuffle(tail)
     bench_queries = FLAGSHIPS + tail
 
@@ -561,9 +304,13 @@ def main() -> None:
         # minima across boards built from the same commit
         "git_sha": git_sha(here),
         "reps_tail": reps,
-        # tier contract: only a "full" board may be pinned as anchor
-        "tier": tier,
-        "round": rnd,
+        # bench_results.json only gains fields: "tier" has one value
+        # left, and "round" is one past the newest committed board
+        "tier": "full",
+        "round": 1 + max(
+            (int(m.group(1)) for m in map(BENCH_FILE.fullmatch, os.listdir(here)) if m),
+            default=0,
+        ),
     }
     out_path = os.path.join(here, "bench_results.json")
     with open(out_path, "w") as fh:

@@ -6,16 +6,32 @@ entries inside that window so adding a query can never silently evict a
 flagship or a previously-failed query from the attested set.
 """
 
+import hashlib
+import json
+import os
+
 from traits_data_spark import catalog
 
 DRIVER_WINDOW = 50
 
+QUERIES_ORDER_SHA = (
+    "8307085fb14cc535450e0ffbb74f97948b37767de09abac753cfc5646d2e24ef"
+)
+QUERIES_BUILDERS_SHA = (
+    "0bba31ef2269d600746acdcb07eff6c2634998875edef076fa3254acb916d3a7"
+)
+ORACLES_SHA = (
+    "2f1912c5a68e2994227713e6b0b1c31957b463f7cf4b84a43c5aff72d4d14a58"
+)
+BENCHED_SHA = (
+    "3c8b7affe82599a595b977c72c65b0ce651c1b05108d5ad646656ead8457d323"
+)
+
 # Flagship pipelines, every query that ever failed a round's gate
 # (asof_join / range_join failed round 3's oracle before the timestamp
 # fix), entries the driver has not attested recently, and the newest
-# round-6 additions. Round 6 rotated the three declared rows-only
-# entries (multimodal_features / audio_features / pack_best_fit) past
-# the boundary so every window row carries a full value-hash oracle.
+# additions. Which entries rotated out of the window, and when, is the
+# ledger in COVERAGE.md (generated by tools/check_counts.py).
 LOAD_BEARING = [
     "silver_e1",
     "gold_ratings",
@@ -25,93 +41,23 @@ LOAD_BEARING = [
     "training_prep",
     "asof_join",
     "range_join",
-    # image_metadata + audio_metadata rotated out round 11 (driver-green
-    # rounds 4-10; webm/video_metadata keep the binary-metadata family
-    # in-window)
-    # split_contamination + quality_classifier rotated out round 11
-    # (driver-green rounds 6-10)
-    # line_dedup / semantic_dedup / kmeans_clusters / ivf_topk_kmeans
-    # (+ copy_pagerank, incremental_near_dups) rotated out round 13
-    # (driver-green rounds 10-12) to reserve slots for the round-13
-    # additions
-    # cms_top_terms + sampled_quantiles rotated out round 11
-    # (driver-green rounds 5-10)
-    # substring_dups rotated out round 11 (driver-green rounds 5-10)
-    # remove_dup_substrings rotated out round 13 second batch
-    # (driver-green rounds 10-12) to make room for hybrid_topk_rrf
-    # event_transitions / hourly_anomalies rotated out round 10
-    # (driver-green rounds 6-9)
-    # funnel_within rotated out round 10 (driver-green rounds 6-9)
-    # price_histogram rotated out round 10 (driver-green rounds 6-9)
-    # dup_clusters rotated out round 13 (driver-green rounds 6-12; CC
-    # stays in-window via semantic_dedup_sharded)
-    # lsh_candidates rotated out round 13 second batch (driver-green
-    # rounds 11-12) to make room for semantic_decontaminate; the LSH
-    # family stays in-window via near_dup_recall_report
-    # round-7 additions still in-window (epoch_expand / kmv_overlap /
-    # snapshot_diff / shuffle_shards / containment_pairs rotated out
-    # round 10 — driver-green rounds 7 through 9;
-    # bloom_decontaminate + mixture_plan + gopher_rules rotated out
-    # round 15 — driver-green rounds 7-14; decon stays in-window via
-    # semantic_decontaminate + decontamination_report, mixture via
-    # curate_corpus + the dsir entries, quality rules via
-    # curate_corpus's Gopher gate and clean_corpus)
     "curate_corpus",
-    # corpus_report rotated out round 16 (driver-green rounds 7-15;
-    # corpus-stats family stays via curate_corpus + source_diversity)
-    # round-8 additions (bpe_token_counts + incremental_exact_dedup
-    # rotated out round 10 — driver-green rounds 8 AND 9; funnel_steps /
-    # cohort_retention / decayed_engagement / hll_distinct rotated out
-    # round 8)
-    # curate_corpus_bpe rotated out round 16 (driver-green rounds 8-15;
-    # BPE family stays via bpe_token_counts_large +
-    # bpe_merge_token_counts + tokenizer_fertility)
-    # round-9 additions: must be driver-attested before rotating out
-    # (feature_filter / kmv_distinct rotated out — driver-green rounds
-    # 4 through 8)
     "bpe_token_counts_large",
-    # ann_recall rotated out round 16 (driver-green rounds 9-15; ANN
-    # eval stays via near_dup_recall_report + pq_topk/ivfpq_topk)
     "video_metadata",
-    # round-10 additions: must be driver-attested before rotating out
     "bpe_merge_token_counts",
-    # webm_metadata rotated out round 13 second batch (driver-green
-    # rounds 10-12) to make room for decontamination_report; the
-    # binary-metadata family stays in-window via video_metadata
-    # lm_perplexity rotated out round 13 second batch (driver-green
-    # rounds 10-12) to make room for kn_doc_scores; the perplexity
-    # family stays in-window via lm_perplexity_sampled +
-    # curate_corpus_ppl
     "curate_corpus_ppl",
     "lm_perplexity_sampled",
-    # winnow_fingerprints rotated out round 16 (driver-green rounds
-    # 10-15; winnow stays via winnow_matches)
     "winnow_matches",
     "tokenizer_fertility",
     "pq_topk",
     "bm25_topk",
-    # unigram_token_counts rotated out round 13 second batch
-    # (driver-green rounds 10-12) to make room for train_kn_lm; the
-    # unigram family stays in-window via unigram_train_tokens
     "ivfpq_topk",
-    # round-11 cohort (pq_incremental_encode / bpe_train /
-    # bpe_train_tokens / train_bigram_lm / bm25_topk_champion /
-    # ridge_stats) rotated out round 14 — driver-green rounds 11-13 —
-    # to attest the round-13 below-window entries and reserve slots for
-    # the round-14 additions
-    # scd2_merge / dsir_select / dsir_select_sampled / matryoshka_recall
-    # rotated out round 12 (driver-green rounds 10 AND 11) to reserve
-    # slots for the round-12 additions BEFORE adding them
-    # hard_negatives + vocab_drift rotated out round 12 (driver-green
-    # rounds 10 AND 11)
-    # round-12 additions: must be driver-attested before rotating out
     "unigram_train",
     "unigram_train_tokens",
     "train_quality_classifier",
     "balanced_shards",
     "shard_local_near_dups",
     "curate_corpus_trained",
-    # round-13 additions: must be driver-attested before rotating out
     "shard_local_near_dups_m2",
     "semantic_dedup_sharded",
     "dsir_train",
@@ -119,35 +65,24 @@ LOAD_BEARING = [
     "name_search",
     "near_dup_recall_report",
     "curate_corpus_dsir",
-    # round-13 second batch: hybrid lexical+dense retrieval fusion,
-    # embedding-space decontamination, Kneser-Ney LM trainer
     "hybrid_topk_rrf",
     "semantic_decontaminate",
     "train_kn_lm",
     "kn_doc_scores",
     "decontamination_report",
-    # round-14 rotations IN: the three round-13 below-window entries the
-    # driver never attested (judge spot-checked hash-match in r13)
     "hybrid_topk_weighted",
     "curriculum_shards",
     "source_diversity",
-    # round-14 additions: must be driver-attested before rotating out
     "train_mkn_lm",
     "dsir_train_counts",
     "curriculum_pack",
-    # round-15 additions: must be driver-attested before rotating out
     "train_kn3_lm",
     "kn3_doc_scores",
     "curate_corpus_dsir_counts",
-    # round-16: train_mkn3_lm rotated in (the only never-driver-attested
-    # entry, r15 judge-verified) + the keyed-retraction MERGE
     "train_mkn3_lm",
     "merge_upsert_delete",
     "train_mkn4_lm",
     "kn4_doc_scores",
-    # rolling_agg / tfidf_top_terms / stratified_sample /
-    # incremental_merge / pack_sequences rotated out round 10
-    # (driver-green rounds 4 through 9)
 ]
 
 # Rows-only-by-contract entries must sit OUTSIDE the window so every
@@ -222,39 +157,45 @@ def test_bench_board_covers_every_catalog_query():
 
 
 def test_bench_lists_have_no_duplicates_and_tiers_are_subsets():
-    """BENCH_QUERIES must be duplicate-free (a textual re-add would
-    double-bench a query and skew the headline), and the fast-tier
-    ingredients (FLAGSHIPS / WATCHLIST / RECENT) must all be benched
-    names — a watchlist typo would silently drop the query from every
-    fast round."""
+    """BENCH_QUERIES must be duplicate-free (a double-benched query
+    skews the headline), and every flagship must be a benched name."""
     import bench
 
     q = bench.BENCH_QUERIES
     dups = sorted({x for x in q if q.count(x) > 1})
     assert not dups, f"duplicated in BENCH_QUERIES: {dups}"
-    benched = set(q)
-    for lst in (bench.FLAGSHIPS, bench.WATCHLIST, bench.RECENT):
-        stray = sorted(set(lst) - benched)
-        assert not stray, f"tier names not benched: {stray}"
+    stray = sorted(set(bench.FLAGSHIPS) - set(q))
+    assert not stray, f"flagships not benched: {stray}"
+    assert q[: len(bench.FLAGSHIPS)] == bench.FLAGSHIPS
 
 
-def test_board_tier_contract(tmp_path, monkeypatch):
-    """FULL is the default in every configuration (round-16 verdict
-    task 2: the round-counting default silently shrank driver boards);
-    fast is explicit env opt-in only."""
+def _sha(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def test_registry_contract_snapshot():
+    """Pins the registry's driver-facing contract: the key order of
+    QUERIES (the driver window), the builder behind every name, every
+    oracle's SQL text and the benched set. Eleven oracles embed the
+    absolute path of the package's committed parquet models, so that
+    directory is replaced by a placeholder before hashing."""
     import bench
 
-    here = str(tmp_path)
-    allq = {q: 1.0 for q in bench.BENCH_QUERIES}
-    # full regardless of anchor presence or inferred round
-    assert bench.board_tier(here, None) == "full"
-    (tmp_path / "BENCH_r15.json").write_text("{}")
-    assert bench.inferred_round(here) == 16
-    assert bench.board_tier(here, allq) == "full"
-    (tmp_path / "BENCH_r16.json").write_text("{}")
-    assert bench.board_tier(here, allq) == "full"
-    # env override is the only way to get a fast board
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_TIER", "fast")
-    assert bench.board_tier(here, allq) == "fast"
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_TIER", "full")
-    assert bench.board_tier(here, allq) == "full"
+    pkg_dir = os.path.dirname(os.path.dirname(catalog.__file__))
+    oracles = {
+        name: sql.replace(pkg_dir, "<pkg>")
+        for name, sql in catalog.oracle_sqls().items()
+    }
+    assert len(catalog.QUERIES) == 170
+    assert len(oracles) == 167
+    assert len(bench.BENCH_QUERIES) == 147
+    assert len(bench.BENCH_EXCLUDED) == 23
+    assert _sha("\n".join(catalog.QUERIES)) == QUERIES_ORDER_SHA
+    assert _sha(
+        "\n".join(
+            f"{n}={f.__module__}.{f.__qualname__}"
+            for n, f in catalog.QUERIES.items()
+        )
+    ) == QUERIES_BUILDERS_SHA
+    assert _sha(json.dumps(sorted(oracles.items()))) == ORACLES_SHA
+    assert _sha("\n".join(sorted(bench.BENCH_QUERIES))) == BENCHED_SHA

@@ -13,7 +13,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from traits_data_spark import catalog
+from traits_data_spark.catalog import events, joins
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,14 +29,14 @@ def duck():
 
 
 def test_events_ts_is_naive_micros(spark):
-    ev = catalog._events(spark, SF)
+    ev = events._events(spark, SF)
     assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
 
 
 def test_ts_us_matches_duckdb_epoch_us(spark, duck):
     got = {
         r["event_id"]: r["ts_us"]
-        for r in catalog._events_us(spark, SF).limit(50).collect()
+        for r in joins._events_us(spark, SF).limit(50).collect()
     }
     want = dict(
         duck.execute(
@@ -50,12 +50,12 @@ def test_ts_us_matches_duckdb_epoch_us(spark, duck):
 def test_event_windows_matches_duckdb(spark, duck):
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["value_cents"])
-        for r in catalog.q_event_windows(spark, SF).collect()
+        for r in events.q_event_windows(spark, SF).collect()
     }
     want = {
         (ws, et): (n, vc)
         for ws, et, n, vc in duck.execute(
-            catalog._EVENT_WINDOWS_SQL
+            events._EVENT_WINDOWS_SQL
         ).fetchall()
     }
     assert got == want
@@ -64,14 +64,14 @@ def test_event_windows_matches_duckdb(spark, duck):
 def test_event_sessions_spot_matches_duckdb(spark, duck):
     got = {
         r["event_id"]: r["session_seq"]
-        for r in catalog.q_event_sessions(spark, SF)
+        for r in events.q_event_sessions(spark, SF)
         .filter(F.col("user_id") < 5)
         .collect()
     }
     want = dict(
         duck.execute(
             "SELECT event_id, session_seq FROM ("
-            + catalog._EVENT_SESSIONS_SQL
+            + events._EVENT_SESSIONS_SQL
             + ") WHERE user_id < 5"
         ).fetchall()
     )

@@ -58,10 +58,11 @@ def test_merge_rejects_unknown_fn(spark):
 def test_continuous_rollup_boundary_bucket_merges(spark):
     """The mid-hour cutoff bucket must appear once with the merged
     totals, equal to flat aggregation over all events."""
-    from traits_data_spark import catalog
+    from traits_data_spark.catalog.events import q_event_windows
+    from traits_data_spark.catalog.sketches import q_continuous_rollup
 
-    out = catalog.q_continuous_rollup(spark, "/root/testdata/sf0.001")
-    flat = catalog.q_event_windows(spark, "/root/testdata/sf0.001")
+    out = q_continuous_rollup(spark, "/root/testdata/sf0.001")
+    flat = q_event_windows(spark, "/root/testdata/sf0.001")
     o = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["value_cents"])
         for r in out.collect()

@@ -115,7 +115,7 @@ def test_balanced_shards_single_shard_and_errors(spark):
 def test_balanced_shards_catalog_sizes(spark, sf_dir, embeddings):
     """Every embedding gets a shard and sizes differ by at most one —
     (pos*6) DIV total chunks as |{pos: pos*6 // total == s}|."""
-    from traits_data_spark.catalog import q_balanced_shards
+    from traits_data_spark.catalog.ann import q_balanced_shards
 
     got = q_balanced_shards(spark, sf_dir).collect()
     sizes = {}

@@ -80,7 +80,7 @@ def test_pack_bucketed_ids_are_prefixed(spark, documents):
 
 
 def test_training_prep_no_split_leakage(spark, sf_dir):
-    from traits_data_spark.catalog import q_training_prep
+    from traits_data_spark.catalog.selection import q_training_prep
 
     out = q_training_prep(spark, sf_dir).collect()
     assert out
@@ -96,7 +96,10 @@ def test_training_prep_pack_window_is_bucketed(spark, sf_dir):
     """The flagship's pack window must partition on (split, bucket),
     never split alone — a split-only window serializes ~90% of the
     corpus (the train split) into one running-sum task at scale."""
-    from traits_data_spark.catalog import _PREP_BUCKETS, q_training_prep
+    from traits_data_spark.catalog.selection import (
+        _PREP_BUCKETS,
+        q_training_prep,
+    )
 
     df = q_training_prep(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()

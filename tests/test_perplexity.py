@@ -145,7 +145,7 @@ def test_curate_corpus_ppl_variant_filters_real_docs(spark):
     clears the NLL ceiling. NOT a subset check: the filter runs before
     dedup (the CCNet position), so dropping a duplicate's low-id copy
     legitimately promotes a different surviving doc_id."""
-    from traits_data_spark.catalog import (
+    from traits_data_spark.catalog.corpus import (
         CURATE_PPL_MAX_NLL_MICRO,
         q_curate_corpus,
         q_curate_corpus_ppl,
@@ -295,12 +295,14 @@ def test_curate_trained_gate_mechanics_and_size(spark, sf_dir):
     distillation pattern."""
     from pyspark.sql import functions as F
 
-    from traits_data_spark.catalog import (
-        CURATE_TQC_MIN_PRED_PICO,
-        DECON_BENCH_SOURCE,
-        _tqc_scores,
+    from traits_data_spark.catalog.corpus import (
         q_curate_corpus,
         q_curate_corpus_ppl,
+    )
+    from traits_data_spark.catalog.dedup import DECON_BENCH_SOURCE
+    from traits_data_spark.catalog.text import (
+        CURATE_TQC_MIN_PRED_PICO,
+        _tqc_scores,
         q_curate_corpus_trained,
     )
 

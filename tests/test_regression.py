@@ -73,7 +73,7 @@ def test_catalog_ridge_query_weights_near_unit(spark, sf_dir):
     must solve to intercept ~0 and unit feature weights — the
     end-to-end sanity that the distributed stats feed a working
     trainer."""
-    from traits_data_spark.catalog import RIDGE_BUCKETS, q_ridge_stats
+    from traits_data_spark.catalog.text import RIDGE_BUCKETS, q_ridge_stats
 
     rows = q_ridge_stats(spark, sf_dir).collect()
     w = ridge_solve(rows, k=RIDGE_BUCKETS + 1, lam=0.0)

@@ -237,7 +237,7 @@ def test_curate_dsir_gate_mechanics(spark, sf_dir):
     ceil(n/2) integer-rank arithmetic."""
     from pyspark.sql import functions as F
 
-    from traits_data_spark.catalog import DECON_BENCH_SOURCE
+    from traits_data_spark.catalog.dedup import DECON_BENCH_SOURCE
     from traits_data_spark.catalog.selection import (
         CURATE_DSIR_KEEP_BP,
         q_curate_corpus_dsir,
@@ -299,3 +299,22 @@ def test_dsir_counts_incremental_merge_parity(spark, documents):
         dsir_train()
     with pytest.raises(ValueError, match="at least one part"):
         merge_dsir_counts()
+
+
+def test_dsir_model_rows_rejects_out_of_range_bucket(spark):
+    """A count row whose bucket falls outside the fixed spine (an index
+    built with another bucket count) is an error, not silently dropped."""
+    import pytest
+
+    from traits_data_spark.catalog.selection import (
+        _DSIR_N_BUCKETS,
+        _dsir_model_rows,
+    )
+
+    ddl = "bucket bigint, c_target bigint, c_raw bigint"
+    ok = spark.createDataFrame([(0, 1, 2), (_DSIR_N_BUCKETS - 1, 0, 3)], ddl)
+    assert len(_dsir_model_rows(ok)) == _DSIR_N_BUCKETS
+    for bad in (_DSIR_N_BUCKETS, -1):
+        counts = spark.createDataFrame([(0, 1, 2), (bad, 1, 1)], ddl)
+        with pytest.raises(ValueError, match="outside"):
+            _dsir_model_rows(counts)

@@ -578,7 +578,7 @@ def test_tuned_ann_presets_stay_deployable(spark, embeddings):
     if a preset or the signature path regresses into the round-9
     situation (recall 0.02-0.12 presets shipped as defaults), this
     fails before the driver gate ever sees it."""
-    from traits_data_spark.catalog import (
+    from traits_data_spark.catalog.ann import (
         ANN_TUNED_PLANES,
         ANN_TUNED_TABLES,
         ANN_TUNED_PROBE_BITS,
@@ -638,7 +638,7 @@ def test_pq_topk_rerank_deployable_recall(spark, embeddings):
     retrieve-by-ADC then exact re-rank must keep mean recall@5 >= 0.8
     against exact L2 on the eval corpus — pins the deployable
     operating point like the tuned-LSH floor test."""
-    from traits_data_spark.catalog import (
+    from traits_data_spark.catalog.ann import (
         PQ_CODES,
         PQ_ITER,
         PQ_M,
@@ -776,7 +776,7 @@ def test_ivfpq_shipped_preset_recall_floor(spark, embeddings):
     """The shipped IVF-PQ preset (catalog IVFPQ_*) must keep mean
     recall@5 >= 0.8 against exact L2 on the eval corpus — pins the
     deployable operating point like the PQ and tuned-LSH floors."""
-    from traits_data_spark.catalog import (
+    from traits_data_spark.catalog.ann import (
         IVFPQ_CODES,
         IVFPQ_M,
         IVFPQ_PROBE,
@@ -969,7 +969,7 @@ def test_keyed_near_dups_shard_local_recall(spark, embeddings):
     global pairs at ~1/n_shards of the comparisons."""
     from pyspark.sql import functions as F
 
-    from traits_data_spark.catalog import (
+    from traits_data_spark.catalog.ann import (
         BALANCED_SHARDS_N,
         KMEANS_ITER,
         KMEANS_K,

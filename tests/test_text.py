@@ -1320,7 +1320,7 @@ def test_bpe_train_oracles_survive_vocab_collapse(spark, tmp_path):
     Spark AND DuckDB on the collapsing corpus and requires equality."""
     import duckdb
 
-    from traits_data_spark.catalog import (
+    from traits_data_spark.catalog.text import (
         _bpe_train_sql,
         _bpe_train_tokens_sql,
         q_bpe_train,

@@ -48,7 +48,7 @@ def test_ilog2_rejects_nonpositive():
 
 def test_ilog2_python_matches_duckdb_recursive_cte():
     # the SQL twin the oracles embed must agree bit-for-bit
-    from traits_data_spark.catalog import _ilog2_ctes
+    from traits_data_spark.catalog.text import _ilog2_ctes
 
     vals = (
         [1, 2, 3, 5, 9, 10, 31, 1023, 1024, 1025, (1 << 29) - 1,

@@ -166,7 +166,9 @@ def test_upsert_two_column_partitions_with_null(spark, tmp_path):
     empties ``a=x/b=__HIVE_DEFAULT_PARTITION__`` (removed), partially
     retracts ``a=x/b=1`` (survivor kept), an update into the NULL
     partition ``a=__HIVE_DEFAULT_PARTITION__/b=3`` keeps its other row,
-    and the untouched ``a=y/b=2`` keeps its exact files."""
+    and the untouched ``a=y/b=2`` keeps its exact files. Emptying every
+    leaf under ``a=__HIVE_DEFAULT_PARTITION__`` removes that parent
+    too."""
     path = str(tmp_path / "t")
     schema = "k INT, v STRING, a STRING, b INT"
     base = spark.createDataFrame(
@@ -215,6 +217,18 @@ def test_upsert_two_column_partitions_with_null(spark, tmp_path):
         deletes=deletes,
     )
     assert _listing(path) == before
+    # retracting both rows of a=NULL/b=3 empties its leaf; the emptied
+    # parent a=NULL/ goes too, while a=x/ still holds b=1
+    upsert_parquet_partition(
+        spark.createDataFrame([], schema),
+        path,
+        keys=["k"],
+        partition_by=["a", "b"],
+        deletes=spark.createDataFrame([(4,), (7,)], "k INT"),
+    )
+    assert not os.path.exists(os.path.join(path, "a=__HIVE_DEFAULT_PARTITION__"))
+    assert os.path.isdir(os.path.join(path, "a=x", "b=1"))
+    assert sorted(r["k"] for r in spark.read.parquet(path).collect()) == [2, 5]
 
 
 def test_incremental_new_keys_anti_join(spark):

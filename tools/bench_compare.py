@@ -44,20 +44,6 @@ def main() -> int:
         res = json.load(f)
     with open(anc_path) as f:
         anc = json.load(f)
-    if anc.get("tier") == "fast":
-        # The tier contract (bench.py): a fast board covers only the
-        # flagship/watchlist/recent subset and must never be the
-        # anchor — comparisons against it would silently lose the
-        # tail regression gate.
-        raise SystemExit(
-            f"bench_compare: anchor {os.path.basename(anc_path)} is a "
-            "FAST-tier board — re-pin from a full board"
-        )
-    if res.get("tier") == "fast":
-        print(
-            f"bench_compare: fast-tier board ({len(res.get('queries', {}))}"
-            " queries) — tail queries compare on full rounds only"
-        )
 
     # Per-query minima across the current and previous COMPARABLE
     # board (written by bench_gated before each run): min-of-sessions,

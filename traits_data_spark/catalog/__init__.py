@@ -22,671 +22,19 @@ and the SQL text, so the oracle recomputes the exact same sketches.
 
 from __future__ import annotations
 
-from traits_data_spark.catalog._shared import (
-    BPE_CAP,
-    BPE_MERGE_COUNTS_PATH,
-    BPE_VOCAB,
-    BPE_VOCAB_LARGE_PATH,
-    CURATE_STOPS,
-    Callable,
-    DSIR_MODEL_PATH,
-    DataFrame,
-    F,
-    Feature,
-    FeatureStore,
-    GoldSpec,
-    LANG_MARKERS,
-    MINHASH_PRIME,
-    Mapping,
-    ProfileSpec,
-    QueryFn,
-    SparkSession,
-    UNIGRAM_COUNTS_PATH,
-    UNIGRAM_MAX_WORD_LEN,
-    UNIGRAM_TRAIN_EM_ITERS,
-    UNIGRAM_TRAIN_MAX_PIECE_LEN,
-    UNIGRAM_TRAIN_MAX_WORD_LEN,
-    UNIGRAM_TRAIN_SEED_CAP,
-    UNIGRAM_TRAIN_UNK_Q20,
-    UNIGRAM_TRAIN_VOCAB_SIZE,
-    WORD_LM_BIGRAM_PATH,
-    WORD_LM_CONTEXT_PATH,
-    WeightsHierarchy,
-    Window,
-    _DSIR_N_BUCKETS,
-    _H28,
-    _H60,
-    _NORM,
-    _SHINGLES,
-    _docs_wide,
-    _hash_coeffs,
-    _hyperplanes,
-    _prepare,
-    _t,
-    age_at,
-    ann_recall,
-    annotations,
-    asof_join,
-    attach_any_season_totals,
-    attach_meta,
-    bloom_decontaminate,
-    bm25_topk,
-    bpe_effective_vocab,
-    bpe_merge_token_counts,
-    bpe_token_counts,
-    bpe_token_counts_table,
-    bpe_train,
-    bpe_train_token_counts,
-    build_profiles,
-    build_ratings,
-    cdc_chunks,
-    char_entropy,
-    chunk_documents,
-    classifier_score,
-    clean_corpus,
-    cms_estimate,
-    cohort_retention,
-    containment_verify,
-    content_hash_index,
-    cosine_topk_bruteforce,
-    cosine_topk_quantized,
-    count_min_sketch,
-    cumcount,
-    curate_corpus,
-    decayed_engagement,
-    dedup_clusters,
-    dedup_keep_best,
-    dedup_lines,
-    dequantize_int8,
-    dim_join,
-    distinct_dims,
-    document_fingerprint,
-    dsir_select,
-    dsir_select_sampled,
-    embedding_near_dups,
-    enforce_cast_contract,
-    epoch_expand,
-    exact_dedup,
-    extract_audio_features,
-    extract_audio_metadata,
-    extract_image_features,
-    extract_image_metadata,
-    extract_video_metadata,
-    filter_small_groups,
-    frame_sample_plan,
-    funnel_steps,
-    gopher_rules,
-    group_zscores,
-    hard_negative_mining,
-    hash_split,
-    histogram_sketch,
-    hll_estimate,
-    hll_registers,
-    hyperplane_bucket_index,
-    identify_language,
-    incremental_embedding_near_dups,
-    incremental_exact_dedup,
-    incremental_new_keys,
-    ivf_topk_hyperplane,
-    ivf_topk_kmeans,
-    ivfpq_topk,
-    jaccard_verify,
-    kmeans_clusters,
-    kmeans_fit,
-    kmv_distinct,
-    kmv_set_ops,
-    knn_label_eval,
-    last_n_filter,
-    load_bpe_merges,
-    load_bpe_vocab,
-    load_dsir_model,
-    load_unigram_vocab,
-    load_word_lm,
-    lsh_bucketed_topk,
-    lsh_topk_multiprobe,
-    map_lookup,
-    matryoshka_recall,
-    merge_aggregate_states,
-    merge_upsert,
-    minhash_lsh_candidates,
-    minhash_signatures_df,
-    mismatch_join,
-    mixture_plan,
-    ngram_decontaminate,
-    ngram_jaccard_pairs,
-    normalized_text,
-    null_zero_profile,
-    pack_best_fit,
-    pack_contiguous,
-    pagerank,
-    percentile_profile,
-    pivot_wide,
-    portable_hash64,
-    pq_encode,
-    pq_fit,
-    pq_topk,
-    probe_masks,
-    quality_features,
-    quantize_int8,
-    range_join_binned,
-    redact_pii,
-    remove_dup_substrings,
-    repetition_features,
-    rolling_range_agg,
-    rollup_grouping_sets,
-    sampled_quantiles,
-    scd2_merge,
-    score_perplexity,
-    score_perplexity_sampled,
-    sessionize,
-    shuffle_shards,
-    simhash64,
-    simhash_near_dups,
-    snapshot_diff,
-    stratified_sample,
-    substring_dup_profile,
-    surrogate_key,
-    synthetic_media_table,
-    synthetic_mp4_media,
-    synthetic_png_media,
-    synthetic_wav_media,
-    synthetic_webm_media,
-    temperature_sample,
-    temperature_weights,
-    tfidf_top_terms,
-    token_budget_filter,
-    token_counts,
-    train_bigram_lm,
-    unigram_token_counts,
-    unigram_train,
-    unigram_train_token_counts,
-    union_with_coarse_group,
-    vocab_drift,
-    widen_if_narrow,
-    winnow_fingerprints,
-    winnow_matches,
-    with_group_rank,
-    word_array,
-    zvalue,
-    zvalue_sql,
-)
+from traits_data_spark.catalog.registry import QUERIES, oracle_sqls
 from traits_data_spark.catalog.relational import (
-    FEATURES,
     FEATURE_STORE,
     GOLD_SPEC,
-    PLAYTIME_THRESHOLD,
     PROFILE_SPEC,
     WEIGHTS,
-    WEIGHTS_CSV,
-    _ANY_AGG_SQL,
-    _BASE_COLS,
-    _CUMCOUNT_SQL,
-    _DEDUP_BEST_SQL,
-    _GOLD_OUT,
-    _GROUP_RANK_SQL,
-    _GROUP_ZSCORES_SQL,
-    _LAST_N_SQL,
-    _LI_KEYS,
-    _SMALL_GROUPS_SQL,
-    _TOPK_SQL,
-    _gold_sql,
-    _profile_sql,
-    _silver_e1_sql,
-    q_any_union_agg,
-    q_cumcount,
-    q_dedup_keep_best,
-    q_filter_small_groups,
-    q_gold_ratings,
-    q_group_zscores,
-    q_last_n_filter,
-    q_profile_build,
-    q_profile_build_multi_pass,
-    q_rollup_grouping_sets,
-    q_silver_e1,
-    q_topk_per_group,
-    q_with_group_rank,
 )
-from traits_data_spark.catalog.dedup import (
-    BANDS,
-    BLOOM_DECON_BENCH,
-    BLOOM_DECON_MIN,
-    BLOOM_DECON_N,
-    DECON_BENCH_SOURCE,
-    DECON_N,
-    NUM_HASHES,
-    SIMHASH_BANDS,
-    SIMHASH_MAX_HAMMING,
-    _EXACT_DEDUP_SQL,
-    _WORD_NGRAMS,
-    _bloom_decontaminate_sql,
-    _cluster_split_sql,
-    _containment_sql,
-    _decontaminate_sql,
-    _dup_clusters_sql,
-    _jaccard_sql,
-    _lsh_candidates_sql,
-    _minhash_sigs_sql,
-    _minhash_sql_parts,
-    _ngram_jaccard_sql,
-    _ngrams_sql,
-    _simhash_near_dups_sql,
-    _simhash_sql,
-    _split_contamination_sql,
-    q_bloom_decontaminate,
-    q_cluster_split,
-    q_containment_pairs,
-    q_decontaminate,
-    q_dup_clusters,
-    q_exact_dedup,
-    q_jaccard_verify,
-    q_lsh_candidates,
-    q_minhash_sigs,
-    q_ngram_jaccard,
-    q_simhash,
-    q_simhash_near_dups,
-    q_split_contamination,
-)
-from traits_data_spark.catalog.quality import (
-    GOPHER_MIN_WORDS,
-    MIXTURE_BUDGET,
-    MIXTURE_WEIGHTS,
-    MIX_ALPHA,
-    MIX_TARGET_FRAC,
-    REP_NS,
-    SHUFFLE_N_SHARDS,
-    SHUFFLE_SALT,
-    TOKEN_BUDGET,
-    _SHUFFLE_SHARDS_SQL,
-    _TOKEN_BUDGET_SQL,
-    _epoch_expand_sql,
-    _gopher_conds,
-    _gopher_keep_sql,
-    _gopher_metrics_sql,
-    _gopher_rules_sql,
-    _mixture_plan_sql,
-    _redact_pii_sql,
-    _repetition_sql,
-    _source_mixture_sql,
-    _temperature_sample_sql,
-    q_epoch_expand,
-    q_gopher_rules,
-    q_mixture_plan,
-    q_redact_pii,
-    q_repetition_features,
-    q_shuffle_shards,
-    q_source_mixture,
-    q_temperature_sample,
-    q_token_budget,
-)
-from traits_data_spark.catalog.ann import (
-    ANN_TUNED_PLANES,
-    ANN_TUNED_PROBE_BITS,
-    ANN_TUNED_TABLES,
-    BALANCED_SHARDS_N,
-    EMB_DIM,
-    HARD_NEG_K_NEG,
-    HARD_NEG_K_POS,
-    IVFPQ_CODES,
-    IVFPQ_M,
-    IVFPQ_PROBE,
-    IVFPQ_RERANK,
-    IVF_KMEANS_PROBE,
-    IVF_PLANES,
-    IVF_PROBE,
-    IVF_SCALE,
-    IVF_SEED,
-    IVF_TUNED_PROBE,
-    KMEANS_ITER,
-    KMEANS_K,
-    MATRYOSHKA_DIMS,
-    MULTIPROBE_TABLES,
-    NEAR_DUP_PLANES,
-    NEAR_DUP_THRESHOLD,
-    N_PLANES,
-    PQ_CODES,
-    PQ_INC_CODES,
-    PQ_INC_M,
-    PQ_ITER,
-    PQ_M,
-    PQ_RERANK,
-    TOPK,
-    _COSINE_SQL,
-    _HARD_NEG_SQL,
-    _KNN_EVAL_SQL,
-    _QUANTIZE_SQL,
-    _QUANT_TOPK_SQL,
-    _QUERY_PRED,
-    _ann_recall_sql,
-    _balanced_shards_sql,
-    _bucket_sql,
-    _incremental_near_dups_sql,
-    _ivf_kmeans_sql,
-    _ivf_sql,
-    _ivfpq_sql,
-    _kmeans_assign_cte,
-    _kmeans_cent_ctes,
-    _kmeans_sql,
-    _lsh_multiprobe_probed_sql,
-    _lsh_multiprobe_sql,
-    _lsh_topk_sql,
-    _matryoshka_sql,
-    _near_dups_sql,
-    _pq_incremental_encode_sql,
-    _pq_topk_sql,
-    _semantic_dedup_sql,
-    _truncated_cosine_sql,
-    q_ann_recall,
-    q_balanced_shards,
-    q_shard_local_near_dups,
-    SHARD_TARGET_SIZE,
-    _balanced_shards_ctes,
-    _shard_local_near_dups_sql,
-    _bshard_layout_ctes,
-    _m2_pair_ctes,
-    _shard_local_near_dups_m2_sql,
-    _semantic_dedup_sharded_sql,
-    q_shard_local_near_dups_m2,
-    q_semantic_dedup_sharded,
-    q_near_dup_recall_report,
-    _near_dup_recall_report_sql,
-    q_cosine_topk,
-    q_cosine_topk_quantized,
-    q_embedding_near_dups,
-    q_hard_negatives,
-    q_incremental_near_dups,
-    q_ivf_topk,
-    q_ivf_topk_kmeans,
-    q_ivfpq_topk,
-    q_kmeans_clusters,
-    q_knn_label_eval,
-    q_lsh_topk,
-    q_lsh_topk_multiprobe,
-    q_matryoshka_recall,
-    q_pq_incremental_encode,
-    q_pq_topk,
-    q_quantize_embeddings,
-    q_semantic_dedup,
-)
-from traits_data_spark.catalog.corpus import (
-    CURATE_BPE_BUDGET,
-    CURATE_BUDGET,
-    CURATE_PPL_MAX_NLL_MICRO,
-    CURATE_WEIGHTS,
-    _SCD2_SQL,
-    _SNAPSHOT_DIFF_SQL,
-    _bpe_tok_ctes,
-    _corpus_report_sql,
-    _curate_call,
-    _curate_corpus_sql,
-    _lm_chain,
-    _lm_filter_ctes,
-    _near_dup_drop_sql,
-    q_corpus_report,
-    q_curate_corpus,
-    q_curate_corpus_bpe,
-    q_curate_corpus_ppl,
-    q_scd2_merge,
-    q_snapshot_diff,
-)
-from traits_data_spark.catalog.text import (
-    BM25_B,
-    BM25_CHAMPION_N,
-    BM25_K,
-    BM25_K1,
-    BPE_TRAIN_MAX_WORD_LEN,
-    BPE_TRAIN_MERGES,
-    CLASSIFIER_BIAS,
-    CLASSIFIER_THRESHOLD,
-    CLASSIFIER_WEIGHTS,
-    LINE_WRAP_RE,
-    LM_SAMPLED_BUCKETS,
-    LM_SAMPLED_RATE_BP,
-    RIDGE_BUCKETS,
-    TQC_FEATURES,
-    TQC_LAM,
-    WINNOW_K,
-    WINNOW_MAX_FP_DOCS,
-    WINNOW_MIN_SHARED,
-    WINNOW_W,
-    _BM25_QUERY_PRED,
-    _BPE_MERGE_TOKEN_SQL,
-    _CHAR_ENTROPY_SQL,
-    _FINGERPRINT_SQL,
-    _INCREMENTAL_EXACT_DEDUP_SQL,
-    _LM_PERPLEXITY_SAMPLED_SQL,
-    _LM_PERPLEXITY_SQL,
-    _LM_SCORE_CTES,
-    _LN2,
-    _QUALITY_SQL,
-    _TOKEN_SQL,
-    _TRAIN_BIGRAM_LM_SQL,
-    _UNIGRAM_TOKEN_SQL,
-    _WINNOW_SQL,
-    _bm25_sql,
-    _bpe_merge_chain_ctes,
-    _bpe_token_large_sql,
-    _bpe_token_sql,
-    _bpe_train_sql,
-    _bpe_train_tokens_sql,
-    _clean_corpus_sql,
-    _ilog2_ctes,
-    _langid_sql,
-    _line_dedup_sql,
-    _quality_classifier_sql,
-    _ridge_stats_sql,
-    _tokenizer_fertility_sql,
-    _tqc_features,
-    _train_quality_classifier_sql,
-    _unigram_estep_ctes,
-    _unigram_score_ctes,
-    _unigram_train_chain_ctes,
-    _unigram_train_sql,
-    _unigram_train_tokens_sql,
-    _unigram_viterbi_ctes,
-    _winnow_matches_sql,
-    q_bm25_topk,
-    q_bm25_topk_champion,
-    q_bpe_merge_token_counts,
-    q_bpe_token_counts,
-    q_bpe_token_counts_large,
-    q_bpe_train,
-    q_bpe_train_tokens,
-    q_char_entropy,
-    q_clean_corpus,
-    q_document_fingerprint,
-    q_identify_language,
-    q_incremental_exact_dedup,
-    q_line_dedup,
-    q_lm_perplexity,
-    q_lm_perplexity_sampled,
-    q_quality_classifier,
-    q_quality_features,
-    q_ridge_stats,
-    q_token_counts,
-    q_tokenizer_fertility,
-    q_train_bigram_lm,
-    q_train_quality_classifier,
-    q_curate_corpus_trained,
-    _curate_corpus_trained_sql,
-    _tqc_pred_ctes,
-    _tqc_scores,
-    CURATE_TQC_MIN_PRED_PICO,
-    q_unigram_token_counts,
-    q_unigram_train,
-    q_unigram_train_tokens,
-    q_winnow_fingerprints,
-    q_winnow_matches,
-)
-from traits_data_spark.catalog.events import (
-    _COHORT_SQL,
-    _DECAYED_SQL,
-    _EVENTS_SCHEMA,
-    _EVENT_SESSIONS_SQL,
-    _EVENT_WINDOWS_SQL,
-    _FUNNEL_STEPS,
-    _FUNNEL_WITHIN_US,
-    _HLL_REM,
-    _TRANSITIONS_SQL,
-    _TS_US,
-    _events,
-    _funnel_sql,
-    _hll_sql,
-    _hourly_anomalies_sql,
-    q_cohort_retention,
-    q_decayed_engagement,
-    q_event_sessions,
-    q_event_transitions,
-    q_event_windows,
-    q_funnel_steps,
-    q_funnel_within,
-    q_hll_distinct,
-    q_hourly_anomalies,
-)
-from traits_data_spark.catalog.joins import (
-    CDC_MODULUS,
-    CDC_WINDOW,
-    EVENT_STATS_CATALOGUE,
-    SUBSTR_WINDOW,
-    _ASOF_SQL,
-    _AUDIO_META_SQL,
-    _DISTINCT_DIMS_SQL,
-    _EVENT_STATS_SQL,
-    _FEATURE_FILTER_SQL,
-    _FRAME_EVERY_N,
-    _FRAME_SQL,
-    _HASH_SPLIT_SQL,
-    _IMAGE_META_SQL,
-    _INCREMENTAL_SQL,
-    _JSON_PROPS_SQL,
-    _MERGE_DELETE_SQL,
-    _MERGE_SQL,
-    _MISMATCH_SQL,
-    _NULL_ZERO_SQL,
-    _ORD_COLS,
-    _OUTER_JOIN_SQL,
-    _PERCENTILE_SQL,
-    _RANGE_JOIN_SQL,
-    _SALTED_STATS_SQL,
-    _SCALAR_SQL,
-    _VIDEO_META_SQL,
-    _WEBM_META_SQL,
-    _cdc_sql,
-    _chunk_dedup_sql,
-    _events_us,
-    _remove_dup_substrings_sql,
-    _substring_dups_sql,
-    q_asof_join,
-    q_audio_features,
-    q_audio_metadata,
-    q_cdc_chunks,
-    q_chunk_dedup,
-    q_distinct_dims,
-    q_event_stats,
-    q_feature_filter,
-    q_frame_samples,
-    q_hash_split,
-    q_image_metadata,
-    q_incremental_new_keys,
-    q_json_props,
-    q_merge_upsert,
-    q_merge_upsert_delete,
-    q_mismatch_join,
-    q_multimodal_features,
-    q_null_zero_profile,
-    q_outer_join_fill,
-    q_percentile_profile,
-    q_range_join,
-    q_remove_dup_substrings,
-    q_salted_stats,
-    q_scalar_funcs,
-    q_substring_dups,
-    q_video_metadata,
-    q_webm_metadata,
-)
-from traits_data_spark.catalog.sketches import (
-    CMS_DEPTH,
-    CMS_WIDTH,
-    HIST_BINS,
-    HIST_HI,
-    HIST_LO,
-    _CENTS,
-    _CHUNK,
-    _CONTINUOUS_ROLLUP_SQL,
-    _KMV_K,
-    _KMV_OVERLAP_K,
-    _OVERLAP,
-    _PACK_BUCKETS,
-    _PACK_BUDGET,
-    _PIVOT_SQL,
-    _ROLLING_SQL,
-    _ROLLUP_CUTOFF_US,
-    _SQ_RATE_BP,
-    _STATE_AGGS,
-    _STRATA_FRACTIONS,
-    _TFIDF_K,
-    _TFIDF_SQL,
-    _TOP_TERMS_N,
-    _WORDS_SQL,
-    _chunk_sql,
-    _cms_sql,
-    _incremental_merge_sql,
-    _kmv_overlap_sql,
-    _kmv_sql,
-    _pack_sql,
-    _price_histogram_sql,
-    _sampled_quantiles_sql,
-    _stratified_sql,
-    _top_terms_sql,
-    q_chunk_docs,
-    q_cms_top_terms,
-    q_continuous_rollup,
-    q_incremental_merge,
-    q_kmv_distinct,
-    q_kmv_overlap,
-    q_pack_best_fit,
-    q_pack_sequences,
-    q_pivot_stats,
-    q_price_histogram,
-    q_rolling_agg,
-    q_sampled_quantiles,
-    q_stratified_sample,
-    q_tfidf_top_terms,
-    q_top_terms,
-)
-from traits_data_spark.catalog.selection import (
-    DSIR_KEEP_BP,
-    DSIR_SAMPLED_RATE_BP,
-    PAGERANK_DAMPING_PCT,
-    PAGERANK_ITERS,
-    VOCAB_DRIFT_TOP_N,
-    _DSIR_SELECT_SAMPLED_SQL,
-    _DSIR_SELECT_SQL,
-    _DSIR_WEIGHT_CTES,
-    _PREP_BUCKETS,
-    _PREP_TOKEN_BUDGET,
-    _VOCAB_DRIFT_SQL,
-    _Z_COLS,
-    _NAME_SEARCH_SQL,
-    NAME_SEARCH_QUERY,
-    _copy_pagerank_sql,
-    _dsir_train_ctes,
-    _dsir_train_select_sql,
-    _dsir_train_sql,
-    _training_prep_sql,
-    _zorder_sql,
-    q_copy_pagerank,
-    q_dsir_select,
-    q_dsir_select_sampled,
-    q_curate_corpus_dsir,
-    _curate_corpus_dsir_sql,
-    q_dsir_train,
-    q_dsir_train_select,
-    q_name_search,
-    q_training_prep,
-    q_vocab_drift,
-    q_zorder_values,
-)
-from traits_data_spark.catalog.registry import (
-    QUERIES,
-    oracle_sqls,
-)
+
+__all__ = [
+    "FEATURE_STORE",
+    "GOLD_SPEC",
+    "PROFILE_SPEC",
+    "QUERIES",
+    "WEIGHTS",
+    "oracle_sqls",
+]

@@ -69,7 +69,6 @@ from traits_data_spark.operators.selection import (
     dsir_counts,
     dsir_select,
     dsir_select_sampled,
-    dsir_train,
     load_dsir_model,
     merge_dsir_counts,
 )

@@ -528,12 +528,20 @@ def _dsir_model_rows(counts: DataFrame) -> list[tuple[int, int, int, int]]:
     the corpus slice to ≤10k count rows; the four 20-round unrolled
     ilog2 projections, the dense-spine join, the count-table persist
     and the totals cross-join all leave the distributed plan. Returns
-    the full dense model: ``(bucket, c_target, c_raw, delta_q20)``."""
+    the full dense model: ``(bucket, c_target, c_raw, delta_q20)``.
+    Raises ``ValueError`` on a bucket outside ``[0, _DSIR_N_BUCKETS)``
+    (an index built with another bucket count)."""
     from traits_data_spark.functions.intmath import ilog2_q20
 
     n = int(_DSIR_N_BUCKETS)
     seen = {int(r["bucket"]): (int(r["c_target"]), int(r["c_raw"]))
             for r in counts.collect()}
+    stray = sorted(b for b in seen if not 0 <= b < n)
+    if stray:
+        raise ValueError(
+            f"DSIR count index has buckets outside [0, {n}): {stray[:5]}"
+            " — it was built with a different bucket count"
+        )
     ct_tot = sum(c for c, _ in seen.values()) + n
     cr_tot = sum(c for _, c in seen.values()) + n
     il_ct_tot = ilog2_q20(ct_tot)

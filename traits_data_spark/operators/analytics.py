@@ -32,7 +32,7 @@ def _floor_div(col_name: str, divisor: int) -> Column:
     """Floor division as ``(x - pmod(x, d)) DIV d`` — floors for
     negative (pre-1970) inputs where bare ``DIV`` truncates toward
     zero; matches the oracles' pmod-based form and the hour bucketing
-    in catalog.q_event_windows."""
+    in catalog/events.py::q_event_windows."""
     return F.expr(
         f"({col_name} - pmod({col_name}, {divisor})) DIV {divisor}"
     ).cast("long")

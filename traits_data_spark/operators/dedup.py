@@ -238,35 +238,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(
-    shingles: Column,
-    num_hashes: int = 32,
-    seed: int = 42,
-) -> list[Column]:
-    """MinHash as per-row array expressions: for each of ``num_hashes``
-    universal hash functions ``(a*h + b) mod p``, the min over the
-    shingle set.
-
-    Coefficients are derived deterministically from ``seed`` via a
-    small LCG so the signature is reproducible anywhere (including a
-    SQL oracle).
-
-    NOTE: each returned Column inlines the md5 shingle hash, so
-    Catalyst evaluates it ``num_hashes`` times per row. Prefer
-    ``minhash_signatures_df`` (explode + aggregate: hashes each
-    shingle exactly once) anywhere performance matters.
-    """
-    coeffs = _hash_coeffs(num_hashes, seed)
-    h = F.transform(shingles, lambda s: _portable_hash_expr(s, MINHASH_HEX_CHARS))
-    sigs = []
-    for i, (a, b) in enumerate(coeffs):
-        perm = F.transform(
-            h, lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
-        )
-        sigs.append(F.array_min(perm).alias(f"mh_{i}"))
-    return sigs
-
-
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str,
@@ -283,10 +254,13 @@ def minhash_signatures_df(
     rows. Map-side partial aggregation collapses each partition to
     |docs|×num_hashes longs before the exchange, so the shuffle moves
     signatures, not shingles — the formulation that survives 100 TB
-    (and is ~10× faster than the inlined array expressions even
+    (and is ~10× faster than inlined per-row array expressions even
     locally; the md5 work dominates).
 
-    Produces bit-identical signatures to ``minhash_signature``.
+    Signature ``i`` is the min over the document's shingle hashes ``h``
+    of ``(a_i*h + b_i) mod MINHASH_PRIME``, with the coefficients drawn
+    by ``_hash_coeffs(num_hashes, seed)`` — the same values the SQL
+    oracles recompute.
     """
     coeffs = _hash_coeffs(num_hashes, seed)
     narrow = df.select(F.col(id_col).alias("id"), F.col(text_col))

@@ -96,8 +96,7 @@ def curate_corpus(
        corpus-scale callers that never passed ``max_bucket_size``
        silently lost the quadratic-bucket guard when the default
        moved to ``None`` for oracle parity. Scale callers should pass
-       ``max_bucket_size=1000`` explicitly (or use
-       ``curate_corpus_at_scale``, which pins it).
+       ``max_bucket_size=1000`` explicitly.
 
     ``bpe_vocab``: when given, the mixture is budgeted in SUBWORD
     tokens (greedy longest-match against this vocab — see
@@ -258,12 +257,3 @@ def curate_corpus(
     return shuffle_shards(
         sampled, id_col, n_shards=n_shards, salt=shard_salt
     )
-
-
-def curate_corpus_at_scale(*args, max_bucket_size: int | None = 1000, **kwargs):
-    """``curate_corpus`` with the quadratic-LSH-bucket guard ON by
-    default (``max_bucket_size=1000``, the ``minhash_lsh_candidates``
-    production default). Use this entry point for corpus-scale runs;
-    the bare ``curate_corpus`` default is ``None`` only because the
-    DuckDB parity oracle has no bucket cap."""
-    return curate_corpus(*args, max_bucket_size=max_bucket_size, **kwargs)

@@ -105,7 +105,8 @@ def upsert_parquet_partition(
     The write observes the partitions it keeps (``DataFrame.observe``);
     touched minus kept are removed afterwards through the Hadoop
     FileSystem (the portable spelling of the reference's S3
-    delete_object).
+    delete_object), together with any parent partition directory the
+    removal leaves empty.
 
     An empty ``updates`` on a first write creates no table.
     """
@@ -159,11 +160,15 @@ def upsert_parquet_partition(
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(hconf)
     for vals in emptied:
-        sub = "/".join(
-            f"{col}={_partition_dir_value(v)}" for col, v in zip(parts, vals)
-        )
-        p = jvm.org.apache.hadoop.fs.Path(path + "/" + sub)
-        if fs.exists(p):
+        dirs = [f"{col}={_partition_dir_value(v)}" for col, v in zip(parts, vals)]
+        # The leaf, then each ancestor the removal left empty, stopping
+        # below the table root (a one-column layout has no ancestors).
+        for depth in range(len(dirs), 0, -1):
+            p = jvm.org.apache.hadoop.fs.Path(path + "/" + "/".join(dirs[:depth]))
+            if not fs.exists(p):
+                continue
+            if depth < len(dirs) and len(fs.listStatus(p)) > 0:
+                break
             fs.delete(p, True)
 
 
