@@ -140,7 +140,9 @@ MAX_SCANS = {
     # vocab-sized (bpe_train audits 0 raw scans, like copy_pagerank)
     "bpe_train": 2,
     "bpe_train_tokens": 3,
-    "train_bigram_lm": 3,
+    # the bigram count table is barriered at build time, so the final
+    # plan reads only the checkpoint (0 raw scans)
+    "train_bigram_lm": 0,
     # one corpus scan, one featurize shuffle, single-row stats agg
     "ridge_stats": 2,
     # corpus scanned once at the word-count checkpoint; EM runs on the
@@ -180,32 +182,18 @@ MAX_SCANS = {
     # full curation chain + the in-plan DSIR trainer/rank gate
     # (documents x3: chain, train-slice grams, rank grams)
     "curate_corpus_dsir": 8,
-    # order-3 KN from text: the trigram type table feeds counts + 4
-    # derived aggregates + 3 one-row stat frames, each re-deriving
-    # from the corpus explode (8 scans). The round-15 A/B at sf0.1
-    # measured persisting the type table SLOWER (min-of-4 4.26 s vs
-    # 3.16 s plain — materialization cost > duplicate page-cached
-    # scans); at 100 TB the nightly path is the persisted counts=
-    # index, where the corpus is scanned once at count time and the
-    # model re-derives corpus-free.
-    "train_kn3_lm": 8,
-    # the trainer's 8 + the scoring trigram stream's own corpus pass
-    "kn3_doc_scores": 9,
-    # same aggregate fan as train_kn3_lm (richer bucket columns ride
-    # the same groupBys)
-    "train_mkn3_lm": 8,
     # same chain as curate_corpus_dsir with the count-index gate (the
     # dsir_counts slices + merge replace the in-plan text retrain)
     "curate_corpus_dsir_counts": 8,
-    # order-4 chain: one more level than mkn3 fans the corpus through
-    # 11 derivations (counts4/ctx4/c3/ctx3/c2/ctx2/pred + 3 discount
-    # globs + nbb). Persisting counts4 measured a WASH at sf0.1
-    # (min 8.74 s persisted vs 8.88 s plain, round 16) — plain keeps
-    # the kn3 convention; at 100 TB the nightly path is the persisted
-    # counts= index where the corpus is scanned once at count time.
-    "train_mkn4_lm": 11,
-    # the trainer's 11 + the scoring fourgram stream's own corpus pass
-    "kn4_doc_scores": 12,
+    # KN family from text: the count table and every continuation
+    # table are barriered at build time, so the corpus is read while
+    # building and the final trainer plans hold 0 raw scans; each
+    # scorer adds one corpus pass for its n-gram stream
+    "train_kn3_lm": 0,
+    "kn3_doc_scores": 1,
+    "train_mkn3_lm": 0,
+    "train_mkn4_lm": 0,
+    "kn4_doc_scores": 1,
 }
 
 
