@@ -709,10 +709,10 @@ def test_train_mkn_lm_matches_fraction_reference(spark, docs):
     count term non-negative without breaking the unit-mass identity."""
     from fractions import Fraction
 
-    from traits_data_spark.operators.text import train_mkn_lm
+    from traits_data_spark.operators.text import train_kn_lm
 
     df = spark.createDataFrame([(d,) for d in docs], ["text"])
-    rows = train_mkn_lm(df).collect()
+    rows = train_kn_lm(df, modified=True).collect()
     ref, ((d1, d2, d3, DD), nbb) = _ref_mkn(docs)
     got = {(r["u"], r["w"]): r for r in rows}
     assert set(got) == set(ref)
@@ -815,10 +815,10 @@ def test_train_kn3_lm_matches_fraction_reference(spark, docs):
     exactly 1."""
     from fractions import Fraction
 
-    from traits_data_spark.operators.text import train_kn3_lm
+    from traits_data_spark.operators.text import train_kn_lm
 
     df = spark.createDataFrame([(d,) for d in docs], ["text"])
-    rows = train_kn3_lm(df).collect()
+    rows = train_kn_lm(df, order=3).collect()
     ref, aux, c3 = _ref_kn3(docs)
     got = {(r["u"], r["v"], r["w"]): r for r in rows}
     assert set(got) == set(ref)
@@ -930,10 +930,10 @@ def _ref_mkn3(docs, max_word_len=32):
 def _assert_mkn3_matches(spark, docs):
     from fractions import Fraction
 
-    from traits_data_spark.operators.text import train_mkn3_lm
+    from traits_data_spark.operators.text import train_kn_lm
 
     df = spark.createDataFrame([(d,) for d in docs], ["text"])
-    rows = train_mkn3_lm(df, keep_ratio=True).collect()
+    rows = train_kn_lm(df, order=3, modified=True, keep_ratio=True).collect()
     ref, aux, t, e = _ref_mkn3(docs)
     got = {(r["u"], r["v"], r["w"]): r for r in rows}
     assert set(got) == set(ref)
@@ -1145,10 +1145,10 @@ def _ref_mkn4(docs, max_word_len=32):
 
 
 def _assert_mkn4_matches(spark, docs):
-    from traits_data_spark.operators.text import train_mkn4_lm
+    from traits_data_spark.operators.text import train_kn_lm
 
     df = spark.createDataFrame([(d,) for d in docs], ["text"])
-    rows = train_mkn4_lm(df, keep_ratio=True).collect()
+    rows = train_kn_lm(df, order=4, modified=True, keep_ratio=True).collect()
     ref, A, B, E = _ref_mkn4(docs)
     got = {(r["t"], r["u"], r["v"], r["w"]): r for r in rows}
     assert set(got) == set(ref)

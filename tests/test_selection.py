@@ -270,7 +270,7 @@ def test_curate_dsir_gate_mechanics(spark, sf_dir):
 
 def test_dsir_counts_incremental_merge_parity(spark, documents):
     """The add-mergeable DSIR count-index contract (the LM family's
-    word_bigram_counts discipline applied to selection): per-slice
+    word_ngram_counts discipline applied to selection): per-slice
     dsir_counts merged by keyed sum equal counts over the union, and
     dsir_train(counts=) re-derives the bit-identical model with no
     text touched. Passing both df and counts (or neither) is a

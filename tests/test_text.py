@@ -881,43 +881,52 @@ def test_kn_doc_scores_hand_computed(spark):
     assert out[3]["nll_q20"] > out[1]["nll_q20"]
 
 
-def test_bigram_counts_incremental_merge_parity(spark, documents):
-    """The LM-count index-maintenance contract: counting a new slice
-    alone and merging into the persisted history counts equals
-    recounting the full corpus — and BOTH trainers re-derive the exact
-    full-corpus model from the merged counts without touching text."""
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize(
+    "order,modified",
+    [(2, False), (2, True), (3, False), (3, True), (4, True)],
+    ids=["kn2", "mkn2", "kn3", "mkn3", "mkn4"],
+)
+def test_ngram_counts_merge_parity_and_counts_path(
+    spark, documents, order, modified
+):
+    """The LM-count index-maintenance contract at every order: counting
+    a new slice alone and merging it into the history counts equals
+    recounting the full corpus, and the trainer re-derives the exact
+    full-corpus model from the merged counts without touching text (at
+    order 2 so does the Laplace trainer). Passing both df and counts
+    (or neither), or merging no part, is a ValueError."""
     from traits_data_spark.operators.text import (
-        merge_bigram_counts,
+        merge_ngram_counts,
         train_bigram_lm,
         train_kn_lm,
-        word_bigram_counts,
+        word_ngram_counts,
     )
 
-    docs = documents.select("doc_id", "text").limit(120).cache()
+    docs = documents.select("doc_id", "text").limit(80).cache()
     hist = docs.filter(F.col("doc_id") % 4 != 0)
     batch = docs.filter(F.col("doc_id") % 4 == 0)
-    merged = merge_bigram_counts(
-        word_bigram_counts(hist), word_bigram_counts(batch)
+    merged = merge_ngram_counts(
+        word_ngram_counts(hist, order), word_ngram_counts(batch, order)
     )
-    full = word_bigram_counts(docs)
+    full = word_ngram_counts(docs, order)
     key = lambda rows: sorted(map(tuple, rows))  # noqa: E731
     assert key(merged.collect()) == key(full.collect())
-    # counts= alone (no df): the no-text-touched contract — passing
-    # both is now a ValueError (round-13 advice)
-    assert key(
-        train_kn_lm(counts=merged).collect()
-    ) == key(train_kn_lm(docs).collect())
-    assert key(
-        train_bigram_lm(counts=merged).collect()
-    ) == key(train_bigram_lm(docs).collect())
-    import pytest
-
+    lm = dict(order=order, modified=modified, keep_ratio=True)
+    assert key(train_kn_lm(counts=merged, **lm).collect()) == key(
+        train_kn_lm(docs, **lm).collect()
+    )
+    if (order, modified) == (2, False):
+        assert key(train_bigram_lm(counts=merged).collect()) == key(
+            train_bigram_lm(docs).collect()
+        )
+        with pytest.raises(ValueError, match="needs df or counts"):
+            train_bigram_lm()
     with pytest.raises(ValueError, match="not both"):
-        train_kn_lm(docs, counts=merged)
+        train_kn_lm(docs, counts=merged, order=order, modified=modified)
     with pytest.raises(ValueError, match="needs df or counts"):
-        train_bigram_lm()
+        train_kn_lm(order=order, modified=modified)
+    with pytest.raises(ValueError, match="at least one part"):
+        merge_ngram_counts()
 
 
 def test_train_kn_lm_discount_fallback_and_scale_shape(spark):
@@ -947,7 +956,7 @@ def test_train_mkn_lm_hand_computed_healthy(spark):
     reference."""
     from fractions import Fraction
 
-    from traits_data_spark.operators.text import train_mkn_lm
+    from traits_data_spark.operators.text import train_kn_lm
 
     docs = spark.createDataFrame(
         [("a b",)] * 1 + [("c d",)] * 2 + [("e f",)] * 3 + [("g h",)] * 4,
@@ -955,7 +964,7 @@ def test_train_mkn_lm_hand_computed_healthy(spark):
     )
     rows = {
         (r["u"], r["w"]): r
-        for r in train_mkn_lm(docs, keep_ratio=True).collect()
+        for r in train_kn_lm(docs, modified=True, keep_ratio=True).collect()
     }
     assert len(rows) == 8
     # (a,b): count 1 -> D1 numerator 8: p = ((24-8)*8 + 8*1)/192
@@ -975,28 +984,6 @@ def test_train_mkn_lm_hand_computed_healthy(spark):
     assert seen + gamma * total_cont == 1
 
 
-def test_train_mkn_lm_counts_path_and_contract(spark, documents):
-    """counts= re-derives the identical model with no text touched;
-    passing both df and counts (or neither) is a ValueError."""
-    import pytest
-
-    from traits_data_spark.operators.text import (
-        train_mkn_lm,
-        word_bigram_counts,
-    )
-
-    docs = documents.select("doc_id", "text").limit(80)
-    counts = word_bigram_counts(docs)
-    key = lambda rows: sorted(map(tuple, rows))  # noqa: E731
-    assert key(train_mkn_lm(counts=counts).collect()) == key(
-        train_mkn_lm(docs).collect()
-    )
-    with pytest.raises(ValueError, match="not both"):
-        train_mkn_lm(docs, counts=counts)
-    with pytest.raises(ValueError, match="needs df or counts"):
-        train_mkn_lm()
-
-
 def test_train_kn3_lm_hand_computed(spark):
     """Engineered corpus ('a b a b c' / 'a b c' / 'b c'): 7 trigram
     types with count-of-counts t1=4, t2=3 (D3 = 4/10) and
@@ -1006,14 +993,14 @@ def test_train_kn3_lm_hand_computed(spark):
     (<s>, <s>) context including the UNSEEN-word continuation mass."""
     from fractions import Fraction
 
-    from traits_data_spark.operators.text import train_kn3_lm
+    from traits_data_spark.operators.text import train_kn_lm
 
     docs = spark.createDataFrame(
         [("a b a b c",), ("a b c",), ("b c",), ("",), (None,)], ["text"]
     )
     rows = {
         (r["u"], r["v"], r["w"]): r
-        for r in train_kn3_lm(docs, keep_ratio=True).collect()
+        for r in train_kn_lm(docs, order=3, keep_ratio=True).collect()
     }
     assert len(rows) == 7
     # P(a | <s>, <s>): count term (2*10-4)/30, gamma3 = 4*2/30,
@@ -1043,12 +1030,12 @@ def test_kn3_doc_scores_hand_computed(spark):
     and 1364/1400; the rest follow from the same backoff chain), and
     the per-doc sums/means follow."""
     from traits_data_spark.functions.intmath import ilog2_q20
-    from traits_data_spark.operators.text import kn3_doc_scores
+    from traits_data_spark.operators.text import kn_doc_scores
 
     docs = spark.createDataFrame(
         [(1, "a b a b c"), (2, "a b c"), (3, "b c")], ["doc_id", "text"]
     )
-    out = {r["doc_id"]: r for r in kn3_doc_scores(docs).collect()}
+    out = {r["doc_id"]: r for r in kn_doc_scores(docs, order=3).collect()}
     ratios = {
         ("<s>", "<s>", "a"): (1376, 2100),
         ("<s>", "<s>", "b"): (676, 2100),
@@ -1080,49 +1067,6 @@ def test_kn3_doc_scores_hand_computed(spark):
     )
 
 
-def test_trigram_counts_merge_parity_and_kn3_counts_path(spark, documents):
-    """merge_trigram_counts over ingest slices == counts over the
-    union (the add-mergeable index contract); train_kn3_lm(counts=)
-    re-derives the identical model with no text touched; passing both
-    df and counts (or neither) is a ValueError."""
-    import pytest
-
-    from traits_data_spark.operators.text import (
-        merge_trigram_counts,
-        train_kn3_lm,
-        word_trigram_counts,
-    )
-
-    docs = documents.select("doc_id", "text").limit(80)
-    hist = docs.filter(F.col("doc_id") % 4 != 0)
-    batch = docs.filter(F.col("doc_id") % 4 == 0)
-    merged = merge_trigram_counts(
-        word_trigram_counts(hist), word_trigram_counts(batch)
-    )
-    full = word_trigram_counts(docs)
-    key = lambda rows: sorted(map(tuple, rows))  # noqa: E731
-    assert key(merged.collect()) == key(full.collect())
-    assert key(train_kn3_lm(counts=merged).collect()) == key(
-        train_kn3_lm(docs).collect()
-    )
-    with pytest.raises(ValueError, match="not both"):
-        train_kn3_lm(docs, counts=merged)
-    with pytest.raises(ValueError, match="needs df or counts"):
-        train_kn3_lm()
-    with pytest.raises(ValueError, match="at least one part"):
-        merge_trigram_counts()
-    # the modified-KN order-3 trainer shares the index contract
-    from traits_data_spark.operators.text import train_mkn3_lm
-
-    assert key(train_mkn3_lm(counts=merged).collect()) == key(
-        train_mkn3_lm(docs).collect()
-    )
-    with pytest.raises(ValueError, match="not both"):
-        train_mkn3_lm(docs, counts=merged)
-    with pytest.raises(ValueError, match="needs df or counts"):
-        train_mkn3_lm()
-
-
 def test_train_mkn_lm_bigint_boundary_exact(spark):
     """Round-15 overflow-boundary attestation: synthetic counts with
     n1..n4 = 100_000 type-count buckets. The round-14 form's common
@@ -1135,7 +1079,7 @@ def test_train_mkn_lm_bigint_boundary_exact(spark):
 
     from pyspark.sql import functions as F
 
-    from traits_data_spark.operators.text import train_mkn_lm
+    from traits_data_spark.operators.text import train_kn_lm
 
     n_bucket = 100_000
     counts = spark.range(4 * n_bucket).select(
@@ -1145,7 +1089,7 @@ def test_train_mkn_lm_bigint_boundary_exact(spark):
     )
     rows = {
         r["u"]: r
-        for r in train_mkn_lm(counts=counts, keep_ratio=True)
+        for r in train_kn_lm(counts=counts, modified=True, keep_ratio=True)
         .filter(F.col("u").isin("u0", "u3"))
         .collect()
     }
@@ -1170,6 +1114,50 @@ def test_train_mkn_lm_bigint_boundary_exact(spark):
         assert r["p"] == round(
             float(int(r["p_num"])) / float(int(r["p_den"])), 9
         )
+
+
+def test_train_kn_lm_decimal_boundary_exact(spark):
+    """Order-2 interpolated KN past the BIGINT boundary: synthetic
+    counts with 4e5 one-type contexts, n_uw = 1 + id % 4, except
+    context u0 with n_uw = 1e8, so the model denominator
+    n_u*dd*Nbb ~ 1.2e19 exceeds 2^63 (a BIGINT ratio overflows there).
+    The DECIMAL(38,0) ratio must still be EXACT, matching the
+    fractions.Fraction ground truth from the same count-of-counts."""
+    from fractions import Fraction
+
+    from traits_data_spark.operators.text import train_kn_lm
+
+    n_ctx, big = 400_000, 10**8
+    counts = spark.range(n_ctx).select(
+        F.concat(F.lit("u"), F.col("id")).alias("u"),
+        F.concat(F.lit("w"), F.col("id")).alias("w"),
+        F.when(F.col("id") == 0, F.lit(big))
+        .otherwise(F.lit(1) + F.pmod("id", F.lit(4)))
+        .cast("long")
+        .alias("n_uw"),
+    )
+    rows = {
+        r["u"]: r
+        for r in train_kn_lm(counts=counts, keep_ratio=True)
+        .filter(F.col("u").isin("u0", "u1", "u3"))
+        .collect()
+    }
+    # singletons: ids = 0 mod 4 except u0; doubletons: ids = 1 mod 4
+    n1, n2 = n_ctx // 4 - 1, n_ctx // 4
+    dn, dd, nbb = n1, n1 + 2 * n2, n_ctx
+    assert big * dd * nbb > 2**63 - 1
+    # every context holds ONE type (n_u = n_uw, N1+(u .) = 1) and every
+    # word one predecessor (ncw = 1)
+    for uid, n_uw in (("u0", big), ("u1", 2), ("u3", 4)):
+        r = rows[uid]
+        truth = Fraction(
+            max(n_uw * dd - dn, 0) * nbb + dn, n_uw * dd * nbb
+        )
+        assert Fraction(int(r["p_num"]), int(r["p_den"])) == truth
+        assert r["p"] == round(
+            float(int(r["p_num"])) / float(int(r["p_den"])), 9
+        )
+    assert int(rows["u0"]["p_den"]) > 2**63 - 1
 
 
 def test_bpe_train_tokens_hand_computed(spark):
@@ -1415,37 +1403,3 @@ def test_name_search_catalog_shape(spark, sf_dir):
         assert has_red or has_bo
         assert r.matched_all == (has_red and has_bo)
         assert r.exact_hits == int(has_red) + int("bo" in toks)
-
-
-def test_fourgram_counts_merge_parity_and_mkn4_counts_path(spark, documents):
-    """merge_fourgram_counts over ingest slices == counts over the
-    union (the add-mergeable index contract one order up);
-    train_mkn4_lm(counts=) re-derives the identical model with no
-    text touched; passing both df and counts (or neither) is a
-    ValueError."""
-    import pytest
-
-    from traits_data_spark.operators.text import (
-        merge_fourgram_counts,
-        train_mkn4_lm,
-        word_fourgram_counts,
-    )
-
-    docs = documents.select("doc_id", "text").limit(80)
-    hist = docs.filter(F.col("doc_id") % 4 != 0)
-    batch = docs.filter(F.col("doc_id") % 4 == 0)
-    merged = merge_fourgram_counts(
-        word_fourgram_counts(hist), word_fourgram_counts(batch)
-    )
-    full = word_fourgram_counts(docs)
-    key = lambda rows: sorted(map(tuple, rows))  # noqa: E731
-    assert key(merged.collect()) == key(full.collect())
-    assert key(train_mkn4_lm(counts=merged, keep_ratio=True).collect()) == key(
-        train_mkn4_lm(docs, keep_ratio=True).collect()
-    )
-    with pytest.raises(ValueError, match="not both"):
-        train_mkn4_lm(docs, counts=merged)
-    with pytest.raises(ValueError, match="needs df or counts"):
-        train_mkn4_lm()
-    with pytest.raises(ValueError, match="at least one part"):
-        merge_fourgram_counts()

@@ -118,14 +118,9 @@ from traits_data_spark.operators.text import (
     train_bigram_lm,
     MKN4_Q,
     MKN4_Q_BITS,
-    kn3_doc_scores,
     kn4_doc_scores,
     kn_doc_scores,
-    train_kn3_lm,
     train_kn_lm,
-    train_mkn3_lm,
-    train_mkn4_lm,
-    train_mkn_lm,
     bpe_token_counts_table,
     load_bpe_merges,
     load_bpe_vocab,

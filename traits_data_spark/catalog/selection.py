@@ -345,7 +345,7 @@ def q_dsir_train_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     each slice produces its own sparse bucket-count table, the two
     tables merge by keyed sum, and the model re-derives from the
     merged ≤10k-row index WITHOUT touching corpus text — the
-    ``word_bigram_counts``/``merge_bigram_counts`` add-mergeable
+    ``word_ngram_counts``/``merge_ngram_counts`` add-mergeable
     index contract applied to the selection family. The output is
     bit-identical to ``dsir_train`` on the full corpus, so the oracle
     is the SAME recursive-CTE replay — the entry attests the

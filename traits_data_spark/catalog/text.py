@@ -49,14 +49,9 @@ from traits_data_spark.catalog._shared import (
     train_bigram_lm,
     MKN4_Q,
     MKN4_Q_BITS,
-    kn3_doc_scores,
     kn4_doc_scores,
     kn_doc_scores,
-    train_kn3_lm,
     train_kn_lm,
-    train_mkn3_lm,
-    train_mkn4_lm,
-    train_mkn_lm,
     unigram_token_counts,
     unigram_train,
     unigram_train_token_counts,
@@ -903,15 +898,16 @@ FROM counts c JOIN ctx x USING (u) CROSS JOIN v
 
 def q_train_kn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed interpolated Kneser-Ney word-bigram LM TRAINING
-    (``operators.text.train_kn_lm``) — the smoothing family the
-    production CCNet filter actually ships (KenLM is modified-KN),
+    (``operators.text.train_kn_lm`` at order 2) — the smoothing family
+    the production CCNet filter actually ships (KenLM is modified-KN),
     trained on-cluster next to the Laplace variant
     (``train_bigram_lm``). The Ney discount ``D = n1/(n1+2 n2)`` stays
-    an integer fraction, so each bigram's probability is ONE integer
-    ratio ending in a single rounded IEEE division — BIGINT-exact
-    across engines, no libm. Same scale shape as the Laplace trainer:
-    one corpus bigram shuffle; discounts, continuation counts and type
-    totals all derive from the vocab²-bounded bigram-type table."""
+    an integer fraction, so each bigram's probability is ONE exact
+    integer ratio (DECIMAL(38,0) on Spark, BIGINT on the oracle)
+    ending in a single rounded IEEE division — no libm. Same scale
+    shape as the Laplace trainer: one corpus bigram shuffle;
+    discounts, continuation counts and type totals all derive from
+    the vocab²-bounded bigram-type table."""
     docs = _t(spark, sf_dir, "documents")
     return train_kn_lm(docs, max_word_len=BPE_TRAIN_MAX_WORD_LEN)
 
@@ -978,7 +974,8 @@ FROM kmodel
 
 def q_train_mkn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed MODIFIED Kneser-Ney word-bigram LM training
-    (``operators.text.train_mkn_lm``) — the exact smoothing class
+    (``operators.text.train_kn_lm(modified=True)``) — the exact
+    smoothing class
     KenLM (the published CCNet scorer) ships, with the three
     count-dependent discounts D1/D2/D3+ estimated from the bigram
     count-of-count statistics n1..n4 (Chen & Goodman 1998 §3). Each
@@ -989,12 +986,14 @@ def q_train_mkn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark, HUGEINT on the DuckDB oracle — ending in a single rounded
     IEEE division: hash-exact cross-engine, no libm, no silent
     BIGINT wraparound at web-corpus type counts.
-    Same scale shape as ``train_kn_lm``: one corpus bigram shuffle;
-    the count-of-count buckets, continuation counts, and the one-row
-    discount frame all derive from the vocab²-bounded bigram-type
-    table."""
+    Same scale shape as the ``train_kn_lm`` entry: one corpus bigram
+    shuffle; the count-of-count buckets, continuation counts, and the
+    one-row discount frame all derive from the vocab²-bounded
+    bigram-type table."""
     docs = _t(spark, sf_dir, "documents")
-    return train_mkn_lm(docs, max_word_len=BPE_TRAIN_MAX_WORD_LEN)
+    return train_kn_lm(
+        docs, modified=True, max_word_len=BPE_TRAIN_MAX_WORD_LEN
+    )
 
 
 _TRAIN_MKN_LM_SQL = f"""
@@ -1080,7 +1079,7 @@ FROM counts c JOIN ctx x USING (u) JOIN pred p2 USING (w) CROSS JOIN g
 
 def q_train_kn3_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed interpolated Kneser-Ney word-TRIGRAM LM training
-    (``operators.text.train_kn3_lm``) — the order-3 step toward
+    (``operators.text.train_kn_lm(order=3)``) — the order-3 step toward
     KenLM's order-5 CCNet scorer, with the full backoff chain
     (trigram raw counts → continuation-bigram type counts →
     continuation-unigram) derived from the ONE trigram type table and
@@ -1090,7 +1089,7 @@ def q_train_kn3_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single rounded IEEE division. Scale shape: one corpus trigram
     shuffle; everything downstream is type-table-bounded."""
     docs = _t(spark, sf_dir, "documents")
-    return train_kn3_lm(docs, max_word_len=BPE_TRAIN_MAX_WORD_LEN)
+    return train_kn_lm(docs, order=3, max_word_len=BPE_TRAIN_MAX_WORD_LEN)
 
 
 # Shared CTE chain for the order-3 KN family: trigram counts → the
@@ -1271,21 +1270,26 @@ FROM counts c JOIN ctx3 x3 USING (u, v) JOIN c2 b USING (v, w)
 
 def q_train_mkn3_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed MODIFIED Kneser-Ney word-TRIGRAM LM training
-    (``operators.text.train_mkn3_lm``) — KenLM's estimator class at
-    order 3: the round-14 three-discount machinery applied per order
-    to the round-15 continuation-count backoff chain, each order's
+    (``operators.text.train_kn_lm(order=3, modified=True)``) —
+    KenLM's estimator class at order 3: the three-discount machinery
+    applied per level to the continuation-count backoff chain, each
+    level's
     D1/D2/D3+ estimated from its own count-of-counts (raw trigram
     stats t1..t4, continuation-bigram stats m1..m4) as clamped
     integer fractions over the reduced common denominators. Every
     probability is ONE exact DECIMAL(38,0)/HUGEINT ratio + a single
-    rounded IEEE division. Same scale shape as ``train_kn3_lm``: one
-    corpus trigram shuffle, everything else type-table-bounded."""
+    rounded IEEE division. Same scale shape as the ``train_kn3_lm``
+    entry: one corpus trigram shuffle, everything else
+    type-table-bounded."""
     docs = _t(spark, sf_dir, "documents")
-    return train_mkn3_lm(docs, max_word_len=BPE_TRAIN_MAX_WORD_LEN)
+    return train_kn_lm(
+        docs, order=3, modified=True, max_word_len=BPE_TRAIN_MAX_WORD_LEN
+    )
 
 
 def q_kn3_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-then-score at ORDER 3 (``operators.text.kn3_doc_scores``):
+    """Train-then-score at ORDER 3 (``operators.text.kn_doc_scores``
+    with ``order=3``):
     fit the interpolated trigram KN LM on the corpus, score every
     document's trigram stream under it — per-trigram cost
     ``ilog2_q20(p_den) - ilog2_q20(p_num)`` over the exact integer
@@ -1295,7 +1299,7 @@ def q_kn3_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer AND the square-and-shift log2 recurrence in recursive
     CTEs over the shared ``_KN3_CTES`` chain."""
     docs = _t(spark, sf_dir, "documents")
-    return kn3_doc_scores(docs, max_word_len=BPE_TRAIN_MAX_WORD_LEN)
+    return kn_doc_scores(docs, max_word_len=BPE_TRAIN_MAX_WORD_LEN, order=3)
 
 
 def _kn3_score_ctes() -> str:
@@ -1488,7 +1492,8 @@ FROM k4model
 
 def q_train_mkn4_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed MODIFIED Kneser-Ney word-FOURGRAM LM training
-    (``operators.text.train_mkn4_lm``) — KenLM's estimator class one
+    (``operators.text.train_kn_lm(order=4, modified=True)``) —
+    KenLM's estimator class one
     order short of its production order 5: per-order three-discount
     estimates over the continuation-count backoff chain, each level's
     (num, den) an exact DECIMAL(38,0)/HUGEINT pair, levels composed
@@ -1497,7 +1502,9 @@ def q_train_mkn4_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceed 1e38). ``p_q40`` is bit-identical cross-engine; one
     corpus fourgram shuffle, everything else type-table-bounded."""
     docs = _t(spark, sf_dir, "documents")
-    return train_mkn4_lm(docs, max_word_len=BPE_TRAIN_MAX_WORD_LEN)
+    return train_kn_lm(
+        docs, order=4, modified=True, max_word_len=BPE_TRAIN_MAX_WORD_LEN
+    )
 
 
 def q_kn4_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -263,7 +263,7 @@ def dsir_counts(
     """SPARSE hashed-gram bucket counts ``(bucket, c_target, c_raw)``
     over the held-out slice — the persistable DSIR count index
     (round-13 verdict task 5: the LM family's add-mergeable
-    ``word_bigram_counts`` contract applied to the selection family).
+    ``word_ngram_counts`` contract applied to the selection family).
     Counts are ADD-MERGEABLE: ``merge_dsir_counts`` of per-slice
     counts == counts over the union, so a nightly ingest extends a
     persisted index from the new batch alone and ``dsir_train``

@@ -9,6 +9,7 @@ so correctness oracles can recompute them exactly.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 from typing import Mapping, Sequence
@@ -1723,55 +1724,132 @@ def bpe_train_token_counts(
     )
 
 
-def word_bigram_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = 32,
+# --- word n-gram language models: Laplace bigram + the Kneser-Ney family --
+
+#: Key columns of each order's n-gram table: the last key is the
+#: predicted word, the others its context.
+_NGRAM_KEYS = {2: ("u", "w"), 3: ("u", "v", "w"), 4: ("t", "u", "v", "w")}
+#: What the scorers' per-document columns call one n-gram of the order.
+_NGRAM_NAMES = {2: "bigram", 3: "trigram", 4: "fourgram"}
+#: Top-level modified-KN context bucket columns; these names follow no
+#: rule (continuation levels use ``m<first context key>1/2/3p``).
+_MKN_TOP_BUCKETS = {
+    2: ("nu1", "nu2", "nu3p"),
+    3: ("nu1uv", "nu2uv", "nu3puv"),
+    4: ("nu1", "nu2", "nu3p"),
+}
+_MKN_DEC = "decimal(38,0)"
+#: Q40 fixed-point scale for the order-4 cross-level composition
+#: (2^40 — chosen so the smallest representable probability step,
+#: 2^-40 ~ 9.1e-13, sits three decades below the ``prob_dp=9``
+#: output rounding).
+MKN4_Q = 1 << 40
+MKN4_Q_BITS = 40
+#: From this order on the levels compose in Q40: the exact full-product
+#: ratio would pass DECIMAL(38,0).
+_Q40_ORDER = 4
+
+
+def _ngram_keys(order: int) -> tuple[str, ...]:
+    if order not in _NGRAM_KEYS:
+        raise ValueError(
+            f"n-gram order must be one of {sorted(_NGRAM_KEYS)}, got {order}"
+        )
+    return _NGRAM_KEYS[order]
+
+
+def _ngram_rows(
+    df: DataFrame, order: int, text_col: str, max_word_len: int, *carry: str
 ) -> DataFrame:
-    """``(u, w, n_uw)`` word-bigram type counts with the sentence-start
-    ``<s>`` prepend — the shared count stage of the bigram-LM trainers
-    and the persistable LM-count index: counts are ADD-MERGEABLE
-    (``merge_bigram_counts`` of per-slice counts == counts over the
-    union), so a nightly ingest extends the persisted table from the
-    new batch alone and the model re-derives from the vocab²-bounded
-    counts — history text is never re-tokenized (the
-    ``content_hash_index`` / ``hyperplane_bucket_index`` maintenance
-    contract applied to LM training)."""
+    """One row per word n-gram of every non-null ``text_col``: the
+    ``carry`` columns, then the order's key columns. Each document is
+    prefixed with ``order - 1`` sentence-start ``<s>`` tokens, so its
+    first word gets a well-defined context; the n-grams are ``order``
+    shifted slices of the token array zipped in-plan (no self-join, no
+    Python)."""
+    keys = _ngram_keys(order)
     nt = normalized_text(F.col(text_col), lowercase=True)
     wlist = F.filter(
         F.split(nt, " "),
         lambda x: (F.length(x) > 0) & (F.length(x) <= max_word_len),
     )
     toks = df.filter(F.col(text_col).isNotNull()).select(
-        F.concat(F.array(F.lit("<s>")), wlist).alias("ws")
+        *carry,
+        F.concat(F.array(*[F.lit("<s>")] * (order - 1)), wlist).alias("ws"),
     )
-    arr = F.col("ws")
-    n = F.size(arr)
-    big = toks.select(
-        F.explode(
-            F.zip_with(
-                F.slice(arr, 1, n - 1),
-                F.slice(arr, 2, n - 1),
-                lambda a, b: F.struct(a.alias("u"), b.alias("w")),
-            )
-        ).alias("bg")
+    # every slice holds n - order + 1 >= 0 tokens (the prepend makes
+    # n >= order - 1; an empty word list yields no n-gram)
+    m = F.size("ws") - (order - 1)
+    grams = F.arrays_zip(*[F.slice("ws", i + 1, m) for i in range(order)])
+    return toks.select(*carry, F.explode(grams).alias("g")).select(
+        *carry, *[F.col("g")[str(i)].alias(k) for i, k in enumerate(keys)]
     )
-    return big.groupBy(
-        F.col("bg.u").alias("u"), F.col("bg.w").alias("w")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_uw"))
 
 
-def merge_bigram_counts(*parts: DataFrame) -> DataFrame:
-    """Merge per-slice ``word_bigram_counts`` tables (union + keyed
-    sum) — one shuffle over count rows, never over text."""
+def word_ngram_counts(
+    df: DataFrame,
+    order: int,
+    text_col: str = "text",
+    max_word_len: int = 32,
+) -> DataFrame:
+    """Word n-gram type counts with the ``order - 1`` sentence-start
+    prepend: ``(u, w, n_uw)`` at order 2, ``(u, v, w, n_uvw)`` at 3,
+    ``(t, u, v, w, n_tuvw)`` at 4 — the count stage of the LM trainers
+    and a persistable LM-count index. Counts are ADD-MERGEABLE
+    (``merge_ngram_counts`` of per-slice counts == counts over the
+    union), so a nightly ingest extends the persisted table from the
+    new batch alone and the model re-derives from the type-bounded
+    counts — history text is never re-tokenized (the
+    ``content_hash_index`` maintenance contract applied to LM
+    training). Scale: one corpus-scale shuffle (the n-gram groupBy,
+    map-side combine)."""
+    keys = _ngram_keys(order)
+    return (
+        _ngram_rows(df, order, text_col, max_word_len)
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_" + "".join(keys)))
+    )
+
+
+def merge_ngram_counts(*parts: DataFrame) -> DataFrame:
+    """Merge per-slice ``word_ngram_counts`` tables of one order (union
+    + keyed sum) — one shuffle over count rows, never over text."""
     if not parts:
-        raise ValueError("merge_bigram_counts needs at least one part")
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return u.groupBy("u", "w").agg(
-        F.sum("n_uw").cast("long").alias("n_uw")
+        raise ValueError("merge_ngram_counts needs at least one part")
+    *keys, cnt = parts[0].columns
+    return (
+        functools.reduce(lambda a, b: a.unionByName(b), parts)
+        .groupBy(*keys)
+        .agg(F.sum(cnt).cast("long").alias(cnt))
     )
+
+
+def _lm_counts(
+    fn: str,
+    df: DataFrame | None,
+    counts: DataFrame | None,
+    order: int,
+    text_col: str,
+    max_word_len: int,
+) -> DataFrame:
+    """A trainer's count table: ``counts`` as passed, or counted from
+    ``df`` and barriered — every consumer (context totals, lower
+    levels, discount frames, the model join) would otherwise re-run
+    the corpus tokenize + shuffle. Exactly one of ``df``/``counts`` is
+    required: passing both would make the no-text-touched contract of
+    ``counts=`` ambiguous at call sites."""
+    if counts is None:
+        if df is None:
+            raise ValueError(f"{fn} needs df or counts")
+        return word_ngram_counts(df, order, text_col, max_word_len).transform(
+            barrier
+        )
+    if df is not None:
+        raise ValueError(
+            f"{fn}: pass df OR counts, not both — with "
+            "counts= the corpus text is never touched"
+        )
+    return counts
 
 
 def train_bigram_lm(
@@ -1797,25 +1875,11 @@ def train_bigram_lm(
     self-join); ONE corpus-scale shuffle (the bigram groupBy, partial
     map-side combine); context totals derive from the bigram table
     (vocab²-bounded), never from a second corpus pass; V is a one-row
-    broadcast cross join. Pass ``counts=`` (a ``word_bigram_counts``-
-    shaped table — e.g. a persisted index extended via
-    ``merge_bigram_counts``) to re-derive the model without touching
-    corpus text — ``df`` is then unused and may be omitted (passing
-    BOTH makes the no-text-touched contract ambiguous at call sites,
-    so exactly one of ``df``/``counts`` is required)."""
-    if counts is None:
-        if df is None:
-            raise ValueError("train_bigram_lm needs df or counts")
-        # persist: the vocab²-bounded count table feeds the context
-        # totals, the vocab count AND the model join — without the pin
-        # each consumer re-runs the corpus tokenize + bigram shuffle
-        # (the consumers' exchanges are not reuse-identical)
-        counts = word_bigram_counts(df, text_col, max_word_len).transform(barrier)
-    elif df is not None:
-        raise ValueError(
-            "train_bigram_lm: pass df OR counts, not both — with "
-            "counts= the corpus text is never touched"
-        )
+    broadcast cross join. Pass ``counts=`` (a ``word_ngram_counts(df,
+    2)`` table — e.g. a persisted index extended via
+    ``merge_ngram_counts``) to re-derive the model without touching
+    corpus text; exactly one of ``df``/``counts`` is required."""
+    counts = _lm_counts("train_bigram_lm", df, counts, 2, text_col, max_word_len)
     ctx = counts.groupBy("u").agg(F.sum("n_uw").cast("long").alias("n_u"))
     # V = distinct target words + '<unk>' (targets only: '<s>' is a
     # context, never a prediction — mirrors build_word_lm.py's vocab)
@@ -1839,527 +1903,6 @@ def train_bigram_lm(
     )
 
 
-def train_kn_lm(
-    df: DataFrame | None = None,
-    text_col: str = "text",
-    max_word_len: int = 32,
-    prob_dp: int = 9,
-    keep_ratio: bool = False,
-    counts: DataFrame | None = None,
-) -> DataFrame:
-    """Train an interpolated Kneser-Ney word-bigram LM ON-CLUSTER —
-    the smoothing the production CCNet filter actually uses (KenLM is
-    modified-KN; Kneser & Ney 1995, Chen & Goodman 1998), next to the
-    Laplace variant (``train_bigram_lm``):
-
-        P(w|u) = max(n_uw - D, 0)/n_u + D·N1+(u,·)/n_u · N1+(·,w)/N1+(·,·)
-
-    with the Ney discount estimate ``D = n1/(n1 + 2·n2)`` (n1/n2 =
-    bigram types seen exactly once/twice; textbook 3/4 fallback when
-    the corpus has neither). Exactness: D is kept as the integer
-    fraction ``dn/dd``, so the whole probability is ONE integer
-    ratio::
-
-        p = (max(n_uw·dd - dn, 0)·Nbb + dn·N1u·Ncw) / (n_u·dd·Nbb)
-
-    — every term a BIGINT (shuffle-order-free), one final IEEE
-    division rounded to ``prob_dp``. Summed over the full vocabulary
-    (seen targets + continuation mass) each context distributes
-    exactly 1 (tested with ``fractions.Fraction``). Overflow note:
-    the numerator carries ``n_uw·dd·Nbb``; at extreme corpus scale
-    (all three ~1e10) this exceeds BIGINT — shard the model by
-    context hash and train per shard, or drop to the double form.
-
-    Scale shape: identical to ``train_bigram_lm`` — ONE corpus-scale
-    shuffle (the bigram groupBy, map-side combine); every other input
-    (context totals, follower/predecessor type counts, the discount
-    and type-total one-row frames) derives from the vocab²-bounded
-    bigram-type table, never from a second corpus pass.
-
-    Output: ``(u, w, n_uw, n_u, n1u, ncw, p)``; with
-    ``keep_ratio=True`` the exact BIGINT ``p_num`` / ``p_den`` ride
-    along (``p = p_num / p_den``) so downstream consumers can take
-    transcendental-free Q20 log2 bits via ``intmath.with_ilog2_q20``
-    (``p_num >= 1`` always: when the discount zeroes the count term,
-    the continuation term is a product of positive counts). Pass
-    ``counts=`` (a persisted ``word_bigram_counts`` index extended via
-    ``merge_bigram_counts``) to re-derive the model without touching
-    corpus text — ``df`` is then unused and may be omitted (exactly
-    one of ``df``/``counts`` is required).
-    """
-    if counts is None:
-        if df is None:
-            raise ValueError("train_kn_lm needs df or counts")
-        # persist: ctx/pred/glob/join all consume the count table —
-        # without the pin each re-runs the corpus tokenize + shuffle
-        counts = word_bigram_counts(df, text_col, max_word_len).transform(barrier)
-    elif df is not None:
-        raise ValueError(
-            "train_kn_lm: pass df OR counts, not both — with "
-            "counts= the corpus text is never touched"
-        )
-    ctx = counts.groupBy("u").agg(
-        F.sum("n_uw").cast("long").alias("n_u"),
-        F.count(F.lit(1)).cast("long").alias("n1u"),
-    )
-    pred = counts.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("ncw")
-    )
-    glob = counts.agg(
-        F.sum(F.when(F.col("n_uw") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("__n1"),
-        F.sum(F.when(F.col("n_uw") == 2, 1).otherwise(0))
-        .cast("long")
-        .alias("__n2"),
-        F.count(F.lit(1)).cast("long").alias("__nbb"),
-    ).select(
-        F.when(F.col("__n1") + 2 * F.col("__n2") > 0, F.col("__n1"))
-        .otherwise(F.lit(3))
-        .cast("long")
-        .alias("__dn"),
-        F.when(
-            F.col("__n1") + 2 * F.col("__n2") > 0,
-            F.col("__n1") + 2 * F.col("__n2"),
-        )
-        .otherwise(F.lit(4))
-        .cast("long")
-        .alias("__dd"),
-        "__nbb",
-    )
-    num = (
-        F.greatest(
-            F.col("n_uw") * F.col("__dd") - F.col("__dn"),
-            F.lit(0).cast("long"),
-        )
-        * F.col("__nbb")
-        + F.col("__dn") * F.col("n1u") * F.col("ncw")
-    ).cast("long")
-    den = (F.col("n_u") * F.col("__dd") * F.col("__nbb")).cast("long")
-    cols = ["u", "w", "n_uw", "n_u", "n1u", "ncw"]
-    ratio = (
-        [num.alias("p_num"), den.alias("p_den")] if keep_ratio else []
-    )
-    return (
-        counts.join(ctx, "u")
-        .join(pred, "w")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            *cols,
-            *ratio,
-            F.round(
-                num.cast("double") / den.cast("double"), prob_dp
-            ).alias("p"),
-        )
-    )
-
-
-def train_mkn_lm(
-    df: DataFrame | None = None,
-    text_col: str = "text",
-    max_word_len: int = 32,
-    prob_dp: int = 9,
-    keep_ratio: bool = False,
-    counts: DataFrame | None = None,
-) -> DataFrame:
-    """Train a MODIFIED Kneser-Ney word-bigram LM ON-CLUSTER — the
-    exact smoothing class KenLM (the published CCNet scorer) ships,
-    closing the last model-class gap past the single-discount
-    interpolated variant (``train_kn_lm``; Chen & Goodman 1998 §3,
-    Kneser & Ney 1995). Three count-dependent discounts estimated from
-    the count-of-count statistics n1..n4 (bigram types seen exactly
-    1..4 times), with ``Y = n1/(n1 + 2 n2)``::
-
-        D1  = 1 - 2 Y n2/n1    (applies when n_uw = 1)
-        D2  = 2 - 3 Y n3/n2    (applies when n_uw = 2)
-        D3+ = 3 - 4 Y n4/n3    (applies when n_uw >= 3)
-
-        P(w|u) = (n_uw - D(n_uw))/n_u + gamma(u) * ncw/Nbb
-        gamma(u) = (D1*nu1 + D2*nu2 + D3*nu3p)/n_u
-
-    where nu1/nu2/nu3p count the types in context u seen exactly
-    once/twice/three-plus times and ``ncw/Nbb`` is the usual
-    continuation distribution. Exactness: each discount is kept as an
-    integer fraction over the COMMON denominator
-    ``Dd = n2*n3*(n1 + 2 n2)`` — the per-level denominators are
-    ``yd`` (D1 = 1 - 2 Y n2/n1 reduces to n1/yd: the n1 cancels),
-    ``n2*yd`` and ``n3*yd``, so their lcm-bound needs no n1 factor;
-    round 14 shipped the unreduced ``n1*n2*n3*yd``, an n1-times-larger
-    denominator that hit the integer boundary correspondingly earlier
-    — and clamped into its textbook range ``[0, level]`` (``D1 in
-    [0,1]``, ``D2 in [0,2]``, ``D3+ in [0,3]`` — KenLM asserts the
-    same bounds; the clamp also makes the count term ``n_uw*Dd -
-    d(n_uw)`` non-negative without a max(), since ``n_uw >= level``
-    on each branch). The whole probability is then ONE integer
-    ratio::
-
-        p = ((n_uw*Dd - d(n_uw))*Nbb
-             + (d1*nu1 + d2*nu2 + d3*nu3p)*ncw) / (n_u*Dd*Nbb)
-
-    with ``d1 = n1*n2*n3``, ``d2 = (2 n2 yd - 3 n1 n3)*n3``,
-    ``d3 = (3 n3 yd - 4 n1 n4)*n2`` — every term carried as
-    DECIMAL(38,0) (exact integers to 1e38, shuffle-order-free; the
-    round-14 BIGINT form wrapped SILENTLY past 2^63, well below the
-    docstring's stated boundary), one final IEEE division rounded to
-    ``prob_dp``. Summed over the full vocabulary each context
-    distributes exactly 1 (tested with ``fractions.Fraction``; the
-    boundary test drives n1..n4 = 4e5 — where the old form wraps —
-    and matches the exact Fraction). Degenerate corpora where the
-    count-of-count chain breaks (any of n1/n2/n3 = 0, so a discount
-    denominator vanishes) fall back to the single-discount
-    interpolated-KN estimate ``d1 = d2 = d3 = D`` with
-    ``D = n1/(n1+2 n2)`` (textbook 3/4 when even that is undefined) —
-    the same fallback ``train_kn_lm`` uses. Overflow note: past
-    DECIMAL(38,0) (num ~ n_uw*Dd*Nbb; with n1..n3 ~ 1e9 type counts
-    that is ~1e37, approaching the edge) Spark yields NULL, not a
-    wrapped value — loud in any gate; shard the model by context hash
-    and train per shard if a corpus ever reaches it.
-
-    Scale shape: identical to ``train_kn_lm`` — ONE corpus-scale
-    shuffle (the bigram groupBy, map-side combine); context
-    count-of-count buckets, continuation counts, and the one-row
-    discount frame all derive from the vocab²-bounded bigram-type
-    table, never from a second corpus pass.
-
-    Output: ``(u, w, n_uw, n_u, nu1, nu2, nu3p, ncw, p)``; with
-    ``keep_ratio=True`` the exact DECIMAL(38,0) ``p_num``/``p_den``
-    ride along (``p_num >= 1`` always: the continuation term is a
-    product of positive counts). Pass ``counts=`` (a persisted
-    ``word_bigram_counts`` index extended via ``merge_bigram_counts``)
-    to re-derive the model without touching corpus text — exactly one
-    of ``df``/``counts`` is required.
-    """
-    if counts is None:
-        if df is None:
-            raise ValueError("train_mkn_lm needs df or counts")
-        # persist: ctx/pred/raw/join all consume the count table —
-        # without the pin each re-runs the corpus tokenize + shuffle
-        counts = word_bigram_counts(df, text_col, max_word_len).transform(barrier)
-    elif df is not None:
-        raise ValueError(
-            "train_mkn_lm: pass df OR counts, not both — with "
-            "counts= the corpus text is never touched"
-        )
-    ctx = counts.groupBy("u").agg(
-        F.sum("n_uw").cast("long").alias("n_u"),
-        F.sum(F.when(F.col("n_uw") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("nu1"),
-        F.sum(F.when(F.col("n_uw") == 2, 1).otherwise(0))
-        .cast("long")
-        .alias("nu2"),
-        F.sum(F.when(F.col("n_uw") >= 3, 1).otherwise(0))
-        .cast("long")
-        .alias("nu3p"),
-    )
-    pred = counts.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("ncw")
-    )
-    raw = counts.agg(
-        *[
-            F.sum(F.when(F.col("n_uw") == k, 1).otherwise(0))
-            .cast("long")
-            .alias(f"__n{k}")
-            for k in (1, 2, 3, 4)
-        ],
-        F.count(F.lit(1)).cast("long").alias("__nbb"),
-    )
-    healthy = (
-        (F.col("__n1") > 0) & (F.col("__n2") > 0) & (F.col("__n3") > 0)
-    )
-    DEC = "decimal(38,0)"
-    # glob-frame arithmetic in DECIMAL(38,0) from the first product:
-    # (3 n3 yd)*n2 alone wraps BIGINT near n1..n3 ~ 1e6 type counts
-    n1d, n2d, n3d, n4d = (
-        F.col(f"__n{k}").cast(DEC) for k in (1, 2, 3, 4)
-    )
-    yd = n1d + F.lit(2).cast(DEC) * n2d
-    # common denominator and per-level numerators, clamped to [0, level]
-    big_dd = n2d * n3d * yd
-
-    def _clamp(expr, level):
-        return F.least(
-            F.greatest(expr, F.lit(0).cast(DEC)),
-            F.lit(level).cast(DEC) * big_dd,
-        )
-
-    d1_raw = n1d * n2d * n3d
-    d2_raw = (F.lit(2).cast(DEC) * n2d * yd - F.lit(3).cast(DEC) * n1d * n3d) * n3d
-    d3_raw = (F.lit(3).cast(DEC) * n3d * yd - F.lit(4).cast(DEC) * n1d * n4d) * n2d
-    # single-discount interpolated-KN fallback (train_kn_lm's estimate)
-    fb_dn = F.when(yd > 0, n1d).otherwise(F.lit(3).cast(DEC))
-    fb_dd = F.when(yd > 0, yd).otherwise(F.lit(4).cast(DEC))
-    glob = raw.select(
-        F.when(healthy, _clamp(d1_raw, 1)).otherwise(fb_dn)
-        .cast(DEC)
-        .alias("__d1"),
-        F.when(healthy, _clamp(d2_raw, 2)).otherwise(fb_dn)
-        .cast(DEC)
-        .alias("__d2"),
-        F.when(healthy, _clamp(d3_raw, 3)).otherwise(fb_dn)
-        .cast(DEC)
-        .alias("__d3"),
-        F.when(healthy, big_dd).otherwise(fb_dd).cast(DEC).alias("__DD"),
-        F.col("__nbb").cast(DEC).alias("__nbb"),
-    )
-    disc = (
-        F.when(F.col("n_uw") == 1, F.col("__d1"))
-        .when(F.col("n_uw") == 2, F.col("__d2"))
-        .otherwise(F.col("__d3"))
-    )
-    num = (
-        F.greatest(
-            F.col("n_uw").cast(DEC) * F.col("__DD") - disc,
-            F.lit(0).cast(DEC),
-        )
-        * F.col("__nbb")
-        + (
-            F.col("__d1") * F.col("nu1").cast(DEC)
-            + F.col("__d2") * F.col("nu2").cast(DEC)
-            + F.col("__d3") * F.col("nu3p").cast(DEC)
-        )
-        * F.col("ncw").cast(DEC)
-    ).cast(DEC)
-    den = (
-        F.col("n_u").cast(DEC) * F.col("__DD") * F.col("__nbb")
-    ).cast(DEC)
-    cols = ["u", "w", "n_uw", "n_u", "nu1", "nu2", "nu3p", "ncw"]
-    ratio = (
-        [num.alias("p_num"), den.alias("p_den")] if keep_ratio else []
-    )
-    return (
-        counts.join(ctx, "u")
-        .join(pred, "w")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            *cols,
-            *ratio,
-            F.round(
-                num.cast("double") / den.cast("double"), prob_dp
-            ).alias("p"),
-        )
-    )
-
-
-def word_trigram_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = 32,
-) -> DataFrame:
-    """``(u, v, w, n_uvw)`` word-trigram type counts with a DOUBLE
-    sentence-start prepend (``<s> <s> w1 ...`` — the first real word
-    gets the well-defined context ``(<s>, <s>)``) — the order-3 count
-    stage of ``train_kn3_lm`` and a persistable LM-count index under
-    the same add-mergeable contract as ``word_bigram_counts``:
-    ``merge_trigram_counts`` of per-slice counts == counts over the
-    union, so a nightly ingest extends the persisted table from the
-    new batch alone and the model re-derives from the type-bounded
-    counts — history text is never re-tokenized.
-
-    Scale: one corpus-scale shuffle (the trigram groupBy, map-side
-    combine); the slide is two array slices zipped in-plan, no
-    self-join, no Python."""
-    nt = normalized_text(F.col(text_col), lowercase=True)
-    wlist = F.filter(
-        F.split(nt, " "),
-        lambda x: (F.length(x) > 0) & (F.length(x) <= max_word_len),
-    )
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        F.concat(F.array(F.lit("<s>"), F.lit("<s>")), wlist).alias("ws")
-    )
-    arr = F.col("ws")
-    n = F.size(arr)
-    # zip the three 1-shifted views; slice length n-2 >= 0 always (the
-    # two-token prepend guarantees n >= 2, and an empty word list
-    # yields zero trigrams through the empty slices)
-    uv = F.zip_with(
-        F.slice(arr, 1, n - 2),
-        F.slice(arr, 2, n - 2),
-        lambda a, b: F.struct(a.alias("u"), b.alias("v")),
-    )
-    tri = toks.select(
-        F.explode(
-            F.zip_with(
-                uv,
-                F.slice(arr, 3, n - 2),
-                lambda x, c: F.struct(
-                    x["u"].alias("u"), x["v"].alias("v"), c.alias("w")
-                ),
-            )
-        ).alias("tg")
-    )
-    return tri.groupBy(
-        F.col("tg.u").alias("u"),
-        F.col("tg.v").alias("v"),
-        F.col("tg.w").alias("w"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_uvw"))
-
-
-def merge_trigram_counts(*parts: DataFrame) -> DataFrame:
-    """Merge per-slice ``word_trigram_counts`` tables (union + keyed
-    sum) — one shuffle over count rows, never over text."""
-    if not parts:
-        raise ValueError("merge_trigram_counts needs at least one part")
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return u.groupBy("u", "v", "w").agg(
-        F.sum("n_uvw").cast("long").alias("n_uvw")
-    )
-
-
-def train_kn3_lm(
-    df: DataFrame | None = None,
-    text_col: str = "text",
-    max_word_len: int = 32,
-    prob_dp: int = 9,
-    keep_ratio: bool = False,
-    counts: DataFrame | None = None,
-) -> DataFrame:
-    """Train an interpolated Kneser-Ney word-TRIGRAM LM ON-CLUSTER —
-    one order up from ``train_kn_lm`` toward KenLM's order-5 CCNet
-    scorer (Kneser & Ney 1995; Chen & Goodman 1998 §3: highest order
-    uses raw counts, every lower order uses CONTINUATION type counts),
-    with the full backoff chain derived from the ONE trigram type
-    table::
-
-        P3(w|u,v) = max(c3(uvw) - D3, 0)/c3(uv.)
-                    + D3 * N1+(uv.)/c3(uv.) * P2(w|v)
-        P2(w|v)   = max(c2'(vw) - D2, 0)/c2'(v.)
-                    + D2 * N1+(v.)/c2'(v.) * P1(w)
-        P1(w)     = N1+(.w) / N1+(..)
-
-    where ``c2'(vw) = N1+(.vw)`` (distinct LEFT-extensions of the
-    bigram — counted by grouping trigram TYPES on (v, w), never by a
-    second corpus pass) and each order's Ney discount comes from that
-    order's count-of-counts: ``D3 = t1/(t1 + 2 t2)`` over raw trigram
-    counts, ``D2 = m1/(m1 + 2 m2)`` over the continuation-bigram
-    counts (textbook 3/4 fallback when a level's statistic is
-    degenerate — the ``train_kn_lm`` convention). Exactness: both
-    discounts ride as integer fractions, so the whole probability is
-    ONE integer ratio::
-
-        p = (max(c3*e3d - e3n, 0) * (c2v * e2d * Nbb)
-             + e3n * N1uv * (max(c2vw*e2d - e2n, 0) * Nbb
-                             + e2n * N1v * ncw))
-            / (c3(uv.) * e3d * c2v * e2d * Nbb)
-
-    carried as DECIMAL(38,0) (exact to 1e38; Spark yields NULL past
-    it, never a wrapped value), one final IEEE division rounded to
-    ``prob_dp``. Summed over the full vocabulary each (u, v) context
-    distributes exactly 1 — P2 itself sums to 1 because the
-    continuation-unigram masses ``ncw`` total ``Nbb`` (tested with
-    ``fractions.Fraction``). Overflow note: the denominator multiplies
-    five type-count statistics; at extreme web scale (every factor
-    ~1e8) it exceeds 1e38 — shard the model by (u, v) context hash
-    and train per shard, as with the bigram trainers.
-
-    Scale shape: ONE corpus-scale shuffle (the trigram groupBy,
-    map-side combine); the context totals, continuation tables,
-    count-of-count frames and the one-row discount frame all derive
-    from the type-bounded trigram table, never from a second corpus
-    pass. The model join fans the type table through four keyed joins
-    plus a one-row broadcast — type-table-sized shuffles, not corpus.
-
-    Output: ``(u, v, w, n_uvw, n_uv, n1uv, c2_vw, c2_v, n1v, ncw,
-    p)``; with ``keep_ratio=True`` the exact DECIMAL(38,0)
-    ``p_num``/``p_den`` ride along (``p_num >= 1`` always). Pass
-    ``counts=`` (a persisted ``word_trigram_counts`` index extended
-    via ``merge_trigram_counts``) to re-derive the model without
-    touching corpus text — exactly one of ``df``/``counts`` is
-    required."""
-    if counts is None:
-        if df is None:
-            raise ValueError("train_kn3_lm needs df or counts")
-        # persist: ctx3/c2/g3/join all consume the count table —
-        # without the pin each re-runs the corpus tokenize + shuffle
-        counts = word_trigram_counts(df, text_col, max_word_len).transform(barrier)
-    elif df is not None:
-        raise ValueError(
-            "train_kn3_lm: pass df OR counts, not both — with "
-            "counts= the corpus text is never touched"
-        )
-    ctx3 = counts.groupBy("u", "v").agg(
-        F.sum("n_uvw").cast("long").alias("n_uv"),
-        F.count(F.lit(1)).cast("long").alias("n1uv"),
-    )
-    # continuation-bigram table: c2'(vw) = distinct left-extensions,
-    # i.e. one row per (v, w) with the trigram-type count. Persisted:
-    # ctx2/pred/g2/gbb/join all consume it — one type-table shuffle,
-    # reused five times.
-    c2 = counts.groupBy("v", "w").agg(
-        F.count(F.lit(1)).cast("long").alias("c2_vw")
-    ).transform(barrier)
-    ctx2 = c2.groupBy("v").agg(
-        F.sum("c2_vw").cast("long").alias("c2_v"),
-        F.count(F.lit(1)).cast("long").alias("n1v"),
-    )
-    pred = c2.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("ncw")
-    )
-    DEC = "decimal(38,0)"
-
-    def _ney(frame: DataFrame, cnt: str, n_alias: str, d_alias: str):
-        """One-row (numerator, denominator) Ney discount from a count
-        column's count-of-counts, 3/4 fallback on degenerate stats."""
-        one = F.sum(F.when(F.col(cnt) == 1, 1).otherwise(0)).cast("long")
-        two = F.sum(F.when(F.col(cnt) == 2, 1).otherwise(0)).cast("long")
-        agg = frame.agg(one.alias("__o"), two.alias("__t"))
-        yd = F.col("__o") + 2 * F.col("__t")
-        return agg.select(
-            F.when(yd > 0, F.col("__o")).otherwise(F.lit(3))
-            .cast(DEC)
-            .alias(n_alias),
-            F.when(yd > 0, yd).otherwise(F.lit(4)).cast(DEC).alias(d_alias),
-        )
-    g3 = _ney(counts, "n_uvw", "__e3n", "__e3d")
-    g2 = _ney(c2, "c2_vw", "__e2n", "__e2d")
-    gbb = c2.agg(F.count(F.lit(1)).cast(DEC).alias("__nbb"))
-    glob = g3.crossJoin(g2).crossJoin(gbb)
-    p2num = (
-        F.greatest(
-            F.col("c2_vw").cast(DEC) * F.col("__e2d") - F.col("__e2n"),
-            F.lit(0).cast(DEC),
-        )
-        * F.col("__nbb")
-        + F.col("__e2n") * F.col("n1v").cast(DEC) * F.col("ncw").cast(DEC)
-    )
-    p2den = F.col("c2_v").cast(DEC) * F.col("__e2d") * F.col("__nbb")
-    num = (
-        F.greatest(
-            F.col("n_uvw").cast(DEC) * F.col("__e3d") - F.col("__e3n"),
-            F.lit(0).cast(DEC),
-        )
-        * p2den
-        + F.col("__e3n") * F.col("n1uv").cast(DEC) * p2num
-    ).cast(DEC)
-    den = (F.col("n_uv").cast(DEC) * F.col("__e3d") * p2den).cast(DEC)
-    cols = [
-        "u", "v", "w", "n_uvw", "n_uv", "n1uv", "c2_vw", "c2_v",
-        "n1v", "ncw",
-    ]
-    ratio = (
-        [num.alias("p_num"), den.alias("p_den")] if keep_ratio else []
-    )
-    return (
-        counts.join(ctx3, ["u", "v"])
-        .join(c2, ["v", "w"])
-        .join(ctx2, "v")
-        .join(pred, "w")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            *cols,
-            *ratio,
-            F.round(
-                num.cast("double") / den.cast("double"), prob_dp
-            ).alias("p"),
-        )
-    )
-
-
-_MKN_DEC = "decimal(38,0)"
-
-
 def _mkn_bucket(cnt: str, k: int):
     """Aggregate: count of rows whose ``cnt`` equals ``k`` (or >= 3
     for k=3) — the per-context type buckets the modified-KN gamma
@@ -2368,14 +1911,31 @@ def _mkn_bucket(cnt: str, k: int):
     return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
 
 
-def mkn_discount_glob(frame: DataFrame, cnt: str, p: str) -> DataFrame:
-    """One-row (d1, d2, d3, DD) modified-KN discount frame from a
-    count column's count-of-counts — the ``train_mkn_lm`` glob with
-    the reduced denominator (Chen & Goodman 1998 §3; the n1 factor
-    cancels out of D1), name-prefixed ``__{p}1..__{p}3, __{p}D`` so
-    several orders' levels coexist in one broadcast. Shared by
-    ``train_mkn3_lm`` (prefixes t/e) and ``train_mkn4_lm``
-    (a/b/e)."""
+def mkn_discount_glob(
+    frame: DataFrame,
+    cnt: str,
+    p: str,
+    modified: bool = True,
+    total: bool = False,
+) -> DataFrame:
+    """One-row discount frame of one LM level from the count-of-counts
+    c1..c4 of ``frame``'s ``cnt`` column: the discounts D1, D2, D3+
+    (applied to counts 1, 2, 3+) as DECIMAL(38,0) numerators
+    ``__{p}1..__{p}3`` over the common denominator ``__{p}D``. With
+    ``Y = c1/(c1 + 2 c2)`` (Chen & Goodman 1998 §3)::
+
+        D1 = 1 - 2 Y c2/c1,  D2 = 2 - 3 Y c3/c2,  D3+ = 3 - 4 Y c4/c3
+
+    over the reduced denominator ``c2*c3*(c1 + 2 c2)`` (c1 cancels out
+    of D1), each clamped into its textbook range ``[0, level]`` as
+    KenLM asserts — the clamp also keeps every count term
+    ``c*DD - d(c)`` non-negative, since ``c >= level`` on each branch.
+    A degenerate chain (any of c1..c3 = 0) falls back to the single
+    Ney discount ``D = c1/(c1 + 2 c2)`` for all three (textbook 3/4
+    when even that is undefined); ``modified=False`` forces that
+    fallback, which is interpolated KN. ``total=True`` adds the
+    frame's row count ``__nbb`` to the same aggregate. The prefix
+    ``p`` lets every level's frame share one broadcast row."""
     DEC = _MKN_DEC
     raw = frame.agg(
         *[
@@ -2383,297 +1943,223 @@ def mkn_discount_glob(frame: DataFrame, cnt: str, p: str) -> DataFrame:
             .cast("long")
             .alias(f"__c{k}")
             for k in (1, 2, 3, 4)
-        ]
+        ],
+        *([F.count(F.lit(1)).cast("long").alias("__nbb")] if total else []),
     )
     healthy = (
-        (F.col("__c1") > 0)
-        & (F.col("__c2") > 0)
-        & (F.col("__c3") > 0)
+        (F.col("__c1") > 0) & (F.col("__c2") > 0) & (F.col("__c3") > 0)
+        if modified
+        else F.lit(False)
     )
-    c1, c2_, c3, c4 = (
-        F.col(f"__c{k}").cast(DEC) for k in (1, 2, 3, 4)
+    c1, c2, c3, c4 = (F.col(f"__c{k}").cast(DEC) for k in (1, 2, 3, 4))
+    yd = c1 + F.lit(2).cast(DEC) * c2
+    big = c2 * c3 * yd
+    raws = (
+        c1 * c2 * c3,
+        (F.lit(2).cast(DEC) * c2 * yd - F.lit(3).cast(DEC) * c1 * c3) * c3,
+        (F.lit(3).cast(DEC) * c3 * yd - F.lit(4).cast(DEC) * c1 * c4) * c2,
     )
-    yd = c1 + F.lit(2).cast(DEC) * c2_
-    big = c2_ * c3 * yd
-
-    def _clamp(expr, level):
-        return F.least(
-            F.greatest(expr, F.lit(0).cast(DEC)),
-            F.lit(level).cast(DEC) * big,
-        )
-
-    d1r = c1 * c2_ * c3
-    d2r = (F.lit(2).cast(DEC) * c2_ * yd
-           - F.lit(3).cast(DEC) * c1 * c3) * c3
-    d3r = (F.lit(3).cast(DEC) * c3 * yd
-           - F.lit(4).cast(DEC) * c1 * c4) * c2_
     fb_dn = F.when(yd > 0, c1).otherwise(F.lit(3).cast(DEC))
     fb_dd = F.when(yd > 0, yd).otherwise(F.lit(4).cast(DEC))
     return raw.select(
-        F.when(healthy, _clamp(d1r, 1)).otherwise(fb_dn)
-        .cast(DEC)
-        .alias(f"__{p}1"),
-        F.when(healthy, _clamp(d2r, 2)).otherwise(fb_dn)
-        .cast(DEC)
-        .alias(f"__{p}2"),
-        F.when(healthy, _clamp(d3r, 3)).otherwise(fb_dn)
-        .cast(DEC)
-        .alias(f"__{p}3"),
-        F.when(healthy, big).otherwise(fb_dd)
-        .cast(DEC)
-        .alias(f"__{p}D"),
+        *[
+            F.when(
+                healthy,
+                F.least(
+                    F.greatest(r, F.lit(0).cast(DEC)), F.lit(k).cast(DEC) * big
+                ),
+            )
+            .otherwise(fb_dn)
+            .cast(DEC)
+            .alias(f"__{p}{k}")
+            for k, r in enumerate(raws, 1)
+        ],
+        F.when(healthy, big).otherwise(fb_dd).cast(DEC).alias(f"__{p}D"),
+        *([F.col("__nbb").cast(DEC).alias("__nbb")] if total else []),
     )
 
 
-def train_mkn3_lm(
+def train_kn_lm(
     df: DataFrame | None = None,
+    *,
+    order: int = 2,
+    modified: bool = False,
     text_col: str = "text",
     max_word_len: int = 32,
     prob_dp: int = 9,
     keep_ratio: bool = False,
     counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Train a MODIFIED Kneser-Ney word-TRIGRAM LM ON-CLUSTER — the
-    round-14 mKN estimator (KenLM's smoothing class: three
-    count-dependent discounts per order, Chen & Goodman 1998 §3)
-    applied to the round-15 order-3 backoff chain, i.e. exactly what
-    KenLM computes at order 3. Each ORDER estimates its own D1/D2/D3+
-    from its own count-of-counts — the trigram level from raw-count
-    statistics t1..t4, the continuation-bigram level from the
-    c2'(vw)-count statistics m1..m4 — with the reduced common
-    denominators (``DD3 = t2*t3*(t1+2 t2)``, ``DD2 = m2*m3*(m1+2 m2)``
-    — the n1 factor cancels out of each D1 as in ``train_mkn_lm``)::
+    """Train a Kneser-Ney word n-gram LM of ``order`` 2–4 ON-CLUSTER —
+    interpolated KN, or with ``modified=True`` the modified KN that
+    KenLM (the published CCNet scorer, order 5) ships (Kneser & Ney
+    1995; Chen & Goodman 1998 §3). One recursion over levels: the top
+    level uses raw counts ``c``; each lower level k uses CONTINUATION
+    counts ``N1+(. ks)`` — the level above's types grouped on its last
+    k keys, never a second corpus pass — and level 1 is
+    ``P1(w) = ncw/Nbb`` over the level-2 types::
 
-        P3(w|u,v) = (n_uvw - D(n_uvw))/n_uv + gamma3(u,v) * P2(w|v)
-        gamma3    = (D1*nu1uv + D2*nu2uv + D3*nu3puv)/n_uv
-        P2(w|v)   = (c2'(vw) - E(c2'(vw)))/c2'(v.) + gamma2(v) * ncw/Nbb
-        gamma2    = (E1*mv1 + E2*mv2 + E3*mv3p)/c2'(v.)
+        Pk(w|ctx) = max(c - d(c), 0)/n_ctx + gamma_k(ctx) * Pk-1(w|ctx')
 
-    where nu1uv/nu2uv/nu3puv bucket the types in context (u, v) by
-    raw count 1/2/3+ and mv1/mv2/mv3p bucket v's continuation row by
-    c2' count. All discounts are clamped integer fractions
-    (``[0, level]`` — the clamp keeps every count term non-negative
-    since the applicable count >= level on each branch); degenerate
-    count-of-count chains fall back per order to the single-discount
-    estimate (``train_kn_lm``'s convention). The whole probability is
-    ONE exact integer ratio carried as DECIMAL(38,0) (HUGEINT on the
-    DuckDB oracle; NULL/error past 1e38, never a silent wrap), one
-    final IEEE division rounded to ``prob_dp``. Summed over the full
-    vocabulary each (u, v) context distributes exactly 1 (tested with
-    ``fractions.Fraction``).
+    Each level estimates its own discounts from its own count-of-counts
+    (``mkn_discount_glob``). Modified KN charges D1/D2/D3+ by count and
+    ``gamma_k = (D1*b1 + D2*b2 + D3*b3)/n_ctx`` over the context's
+    types bucketed by count 1/2/3+; interpolated KN charges the single
+    Ney discount ``D = n1/(n1 + 2 n2)`` and ``gamma_k = D*N1+(ctx .)/
+    n_ctx``. Discounts are integer fractions ``d/DD``, so with
+    ``g_k = d1*b1 + d2*b2 + d3*b3`` (``d*N1+(ctx .)`` for KN) and from
+    ``num_1 = ncw``, ``den_1 = Nbb`` the levels compose as::
 
-    Scale shape: identical to ``train_kn3_lm`` — ONE corpus-scale
-    shuffle (the trigram groupBy); every other input derives from the
-    type-bounded trigram table. Output: ``(u, v, w, n_uvw, n_uv,
-    nu1uv, nu2uv, nu3puv, c2_vw, c2_v, mv1, mv2, mv3p, ncw, p)``;
-    ``keep_ratio=True`` adds the exact ``p_num``/``p_den``. Pass
-    ``counts=`` (a persisted ``word_trigram_counts`` index extended
-    via ``merge_trigram_counts``) to re-derive the model without
-    touching corpus text — exactly one of ``df``/``counts`` is
-    required."""
-    if counts is None:
-        if df is None:
-            raise ValueError("train_mkn3_lm needs df or counts")
-        # persist: ctx3/c2/g3/join all consume the count table —
-        # without the pin each re-runs the corpus tokenize + shuffle
-        counts = word_trigram_counts(df, text_col, max_word_len).transform(barrier)
-    elif df is not None:
-        raise ValueError(
-            "train_mkn3_lm: pass df OR counts, not both — with "
-            "counts= the corpus text is never touched"
-        )
-    ctx3 = counts.groupBy("u", "v").agg(
-        F.sum("n_uvw").cast("long").alias("n_uv"),
-        _mkn_bucket("n_uvw", 1).alias("nu1uv"),
-        _mkn_bucket("n_uvw", 2).alias("nu2uv"),
-        _mkn_bucket("n_uvw", 3).alias("nu3puv"),
-    )
-    # persisted: ctx2/pred/g2/gbb/join all consume the continuation
-    # table — one type-table shuffle, reused five times
-    c2 = counts.groupBy("v", "w").agg(
-        F.count(F.lit(1)).cast("long").alias("c2_vw")
-    ).transform(barrier)
-    ctx2 = c2.groupBy("v").agg(
-        F.sum("c2_vw").cast("long").alias("c2_v"),
-        _mkn_bucket("c2_vw", 1).alias("mv1"),
-        _mkn_bucket("c2_vw", 2).alias("mv2"),
-        _mkn_bucket("c2_vw", 3).alias("mv3p"),
-    )
-    pred = c2.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("ncw")
-    )
+        num_k = max(c*DD - d(c), 0)*den_k-1 + g_k*num_k-1
+        den_k = n_ctx*DD*den_k-1
 
+    Exactness: orders 2–3 keep ``p_num/p_den`` as ONE exact
+    DECIMAL(38,0) ratio (HUGEINT on the DuckDB oracle; shuffle-order
+    free, NULL/error past 1e38 — never a silent wrap) ending in one
+    IEEE division rounded to ``prob_dp``; each context distributes
+    exactly 1 over the full vocabulary (tested with
+    ``fractions.Fraction``). The order-2 numerator carries
+    ``n_uw*DD*Nbb``, past 2^63 already at 1e8-count contexts (tested);
+    at order 3 the denominator multiplies five statistics, so at
+    extreme web scale (every factor ~1e8) shard the model by context
+    hash and train per shard. At order 4 that product has seven factors
+    and passes 1e38 even at modest corpus sizes, so the order selects
+    the fixed-point form instead: each seam floors in Q40 —
+
+        p_1q = ncw*2^40 div Nbb
+        p_kq = (max(c*DD - d(c), 0)*2^40 + g_k*p_k-1q) div (n_ctx*DD)
+
+    ``div`` is integral division on BOTH engines (Spark ``DIV`` on
+    DECIMAL, DuckDB ``//`` on HUGEINT; all terms non-negative, so trunc
+    == floor), making ``p_q40`` bit-identical cross-engine. The floor
+    injects < 2^-40 absolute error per seam (three decades under the
+    ``prob_dp=9`` rounding); the per-level width bound is
+    ``count*DD*2^40 < 1e38``, past which Spark NULLs/ANSI-throws. The
+    final ``p = round(p_q40/2^40, prob_dp)`` divides a <=41-bit integer
+    by a power of two: deterministic IEEE on both engines.
+
+    Scale shape: ONE corpus-scale shuffle (the n-gram groupBy, map-side
+    combine). The count table built from text and each continuation
+    table are barriered once (each has several consumers); the context
+    aggregates, discount frames (one broadcast row) and the model join
+    over the keyed level tables are type-table-sized, not corpus.
+
+    Output: the keys; then per level, top-down, its count, context
+    total and context stats (order 2: ``n_uw, n_u, n1u`` or ``n_uw,
+    n_u, nu1, nu2, nu3p``; a continuation level of order 3: ``c2_vw,
+    c2_v, n1v`` or ``c2_vw, c2_v, mv1, mv2, mv3p``); then ``ncw`` and
+    ``p``. ``keep_ratio=True`` adds the exact DECIMAL(38,0)
+    ``p_num``/``p_den`` at orders 2–3 (``p_num >= 1`` always: the
+    continuation term is a product of positive counts) or the BIGINT
+    ``p_q40`` at order 4. Pass ``counts=`` (a persisted
+    ``word_ngram_counts(df, order)`` index extended via
+    ``merge_ngram_counts``) to re-derive the model without touching
+    corpus text — exactly one of ``df``/``counts`` is required."""
     DEC = _MKN_DEC
-    g3 = mkn_discount_glob(counts, "n_uvw", "t")
-    g2 = mkn_discount_glob(c2, "c2_vw", "e")
-    gbb = c2.agg(F.count(F.lit(1)).cast(DEC).alias("__nbb"))
-    glob = g3.crossJoin(g2).crossJoin(gbb)
-    disc3 = (
-        F.when(F.col("n_uvw") == 1, F.col("__t1"))
-        .when(F.col("n_uvw") == 2, F.col("__t2"))
-        .otherwise(F.col("__t3"))
-    )
-    disc2 = (
-        F.when(F.col("c2_vw") == 1, F.col("__e1"))
-        .when(F.col("c2_vw") == 2, F.col("__e2"))
-        .otherwise(F.col("__e3"))
-    )
-    gamma2 = (
-        F.col("__e1") * F.col("mv1").cast(DEC)
-        + F.col("__e2") * F.col("mv2").cast(DEC)
-        + F.col("__e3") * F.col("mv3p").cast(DEC)
-    )
-    gamma3 = (
-        F.col("__t1") * F.col("nu1uv").cast(DEC)
-        + F.col("__t2") * F.col("nu2uv").cast(DEC)
-        + F.col("__t3") * F.col("nu3puv").cast(DEC)
-    )
-    p2num = (
-        F.greatest(
-            F.col("c2_vw").cast(DEC) * F.col("__eD") - disc2,
-            F.lit(0).cast(DEC),
-        )
-        * F.col("__nbb")
-        + gamma2 * F.col("ncw").cast(DEC)
-    )
-    p2den = F.col("c2_v").cast(DEC) * F.col("__eD") * F.col("__nbb")
-    num = (
-        F.greatest(
-            F.col("n_uvw").cast(DEC) * F.col("__tD") - disc3,
-            F.lit(0).cast(DEC),
-        )
-        * p2den
-        + gamma3 * p2num
-    ).cast(DEC)
-    den = (F.col("n_uv").cast(DEC) * F.col("__tD") * p2den).cast(DEC)
-    cols = [
-        "u", "v", "w", "n_uvw", "n_uv", "nu1uv", "nu2uv", "nu3puv",
-        "c2_vw", "c2_v", "mv1", "mv2", "mv3p", "ncw",
-    ]
-    ratio = (
-        [num.alias("p_num"), den.alias("p_den")] if keep_ratio else []
-    )
-    return (
-        counts.join(ctx3, ["u", "v"])
-        .join(c2, ["v", "w"])
-        .join(ctx2, "v")
-        .join(pred, "w")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            *cols,
-            *ratio,
-            F.round(
-                num.cast("double") / den.cast("double"), prob_dp
-            ).alias("p"),
-        )
-    )
-
-
-def kn3_doc_scores(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_word_len: int = 32,
-) -> DataFrame:
-    """Train-then-score under the ORDER-3 interpolated Kneser-Ney LM —
-    ``kn_doc_scores`` one order up: fit ``train_kn3_lm`` on the
-    corpus, then score every document's trigram stream under the model
-    the plan just learned, with NO committed artifact and NO
-    transcendentals. Each trigram's cost is ``ilog2_q20(p_den) -
-    ilog2_q20(p_num)`` (exact Q20 negative log2 of the integer ratio,
-    ``intmath.with_ilog2_q20`` JVM-side), so the per-document sum is a
-    BIGINT: shuffle-order-free and hash-exact cross-engine. A longer
-    context sharpens the fluency signal the curriculum/perplexity
-    gates consume — the published CCNet scorer is order-5 KenLM; this
-    is the same family two orders closer.
-
-    Exactness boundary: the trainer carries ``p_num``/``p_den`` as
-    DECIMAL(38,0); the Q20 log2 stage is 64-bit integer arithmetic,
-    so both are cast to BIGINT here — exact while the model
-    denominator ``n_uv*e3d*c2_v*e2d*Nbb`` stays below 2^63 (holds
-    far past test scale; at web-corpus type counts shard the model by
-    (u, v) context hash as with training, which bounds every factor).
-    The cast is ``try_cast``, which yields NULL on overflow (never a
-    wrapped value) REGARDLESS of ``spark.sql.ansi.enabled`` — a plain
-    cast would throw under ANSI and silently depend on session config
-    otherwise — so a breach is loud in any gate.
-
-    Scale: the trainer's one trigram shuffle, the ilog2 chain as pure
-    codegen over the type-bounded model, one corpus-scale shuffle
-    joining the per-doc trigram stream to the model on (u, v, w)
-    (broadcastable when the model is small), one doc-keyed agg.
-    Scoring the training corpus itself means every trigram is
-    in-model (no OOV branch); a deployment scoring NEW text backs off
-    through the same integer-ratio shapes.
-
-    Output: ``(id_col, n_trigrams, nll_q20, bits_per_trigram_q20)``
-    — total and truncated-mean negative log2-likelihood in Q20
-    micro-bits.
-    """
-    from traits_data_spark.functions.intmath import with_ilog2_q20
-
-    model = train_kn3_lm(
-        df, text_col=text_col, max_word_len=max_word_len,
-        keep_ratio=True,
-    ).select(
-        "u",
-        "v",
-        "w",
-        F.col("p_num").try_cast("long").alias("p_num"),
-        F.col("p_den").try_cast("long").alias("p_den"),
-    )
-    model = with_ilog2_q20(model, "p_num", "__iln")
-    model = with_ilog2_q20(model, "p_den", "__ild")
-    bits = model.select(
-        "u", "v", "w",
-        (F.col("__ild") - F.col("__iln")).alias("__bits_q20"),
-    )
-    nt = normalized_text(F.col(text_col), lowercase=True)
-    wlist = F.filter(
-        F.split(nt, " "),
-        lambda x: (F.length(x) > 0) & (F.length(x) <= max_word_len),
-    )
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        id_col,
-        F.concat(F.array(F.lit("<s>"), F.lit("<s>")), wlist).alias("ws"),
-    )
-    arr = F.col("ws")
-    n = F.size(arr)
-    uv = F.zip_with(
-        F.slice(arr, 1, n - 2),
-        F.slice(arr, 2, n - 2),
-        lambda a, b: F.struct(a.alias("u"), b.alias("v")),
-    )
-    tri = toks.select(
-        id_col,
-        F.explode(
-            F.zip_with(
-                uv,
-                F.slice(arr, 3, n - 2),
-                lambda x, c: F.struct(
-                    x["u"].alias("u"), x["v"].alias("v"), c.alias("w")
-                ),
+    keys = _ngram_keys(order)
+    counts = _lm_counts("train_kn_lm", df, counts, order, text_col, max_word_len)
+    # level tables top-down (the count table, then each continuation
+    # table); the model frame ``d`` joins each level's table and
+    # context aggregate as the loop builds them
+    table, d, frames, levels, cols = counts, counts, [], [], list(keys)
+    for k in range(order, 1, -1):
+        ks = keys[-k:]
+        ctx = ks[:-1]
+        prefix = "n_" if k == order else f"c{k}_"
+        cnt, tot = prefix + "".join(ks), prefix + "".join(ctx)
+        if k < order:
+            # continuation table: its context totals, the next level
+            # down, its discount frame and the model join all read it
+            table = (
+                table.groupBy(*ks)
+                .agg(F.count(F.lit(1)).cast("long").alias(cnt))
+                .transform(barrier)
             )
-        ).alias("tg"),
-    ).select(
-        id_col,
-        F.col("tg.u").alias("u"),
-        F.col("tg.v").alias("v"),
-        F.col("tg.w").alias("w"),
+            d = d.join(table, list(ks))
+        if not modified:
+            stats = ("n1" + "".join(ctx),)
+            aggs = [F.count(F.lit(1)).cast("long").alias(stats[0])]
+        else:
+            stats = (
+                _MKN_TOP_BUCKETS[order]
+                if k == order
+                else tuple(f"m{ctx[0]}{b}" for b in ("1", "2", "3p"))
+            )
+            aggs = [_mkn_bucket(cnt, b).alias(s) for b, s in enumerate(stats, 1)]
+        d = d.join(
+            table.groupBy(*ctx).agg(F.sum(cnt).cast("long").alias(tot), *aggs),
+            list(ctx),
+        )
+        # at order 2 the type total Nbb rides in the one discount
+        # aggregate; higher orders take it from the level-2 table below
+        frames.append(
+            mkn_discount_glob(table, cnt, f"l{k}", modified, total=order == 2)
+        )
+        levels.append((k, cnt, tot, stats))
+        cols += [cnt, tot, *stats]
+    if order > 2:
+        frames.append(table.agg(F.count(F.lit(1)).cast(DEC).alias("__nbb")))
+    pred = table.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("ncw"))
+    d = d.join(pred, "w").crossJoin(
+        F.broadcast(functools.reduce(lambda a, b: a.crossJoin(b), frames))
     )
-    return (
-        tri.join(bits, ["u", "v", "w"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_trigrams"),
-            F.sum("__bits_q20").cast("long").alias("nll_q20"),
+
+    q40 = order >= _Q40_ORDER
+    if q40:
+        d = d.withColumn(
+            "__p1q",
+            F.expr(
+                f"(CAST(ncw AS {DEC}) * CAST({MKN4_Q} AS {DEC})) DIV __nbb"
+            ).cast(DEC),
         )
-        .withColumn(
-            "bits_per_trigram_q20",
-            # integer division (values are non-negative, so trunc ==
-            # floor on both engines; no double round-trip)
-            F.expr("nll_q20 DIV n_trigrams").cast("long"),
+    else:
+        num, den = F.col("ncw").cast(DEC), F.col("__nbb")
+    for k, cnt, tot, stats in reversed(levels):
+        c = F.col(cnt)
+        disc = F.col(f"__l{k}1")
+        if modified:
+            disc = (
+                F.when(c == 1, disc)
+                .when(c == 2, F.col(f"__l{k}2"))
+                .otherwise(F.col(f"__l{k}3"))
+            )
+        term = F.greatest(
+            c.cast(DEC) * F.col(f"__l{k}D") - disc, F.lit(0).cast(DEC)
         )
+        gamma = functools.reduce(
+            lambda a, b: a + b,
+            [
+                F.col(f"__l{k}{i}") * F.col(s).cast(DEC)
+                for i, s in enumerate(stats, 1)
+            ],
+        )
+        if q40:
+            d = (
+                d.withColumn(f"__num{k}", term)
+                .withColumn(f"__gam{k}", gamma)
+                .withColumn(
+                    f"__p{k}q",
+                    F.expr(
+                        f"(__num{k} * CAST({MKN4_Q} AS {DEC})"
+                        f" + __gam{k} * __p{k - 1}q)"
+                        f" DIV (CAST({tot} AS {DEC}) * __l{k}D)"
+                    ).cast(DEC),
+                )
+            )
+        else:
+            scale = F.col(tot).cast(DEC) * F.col(f"__l{k}D")
+            num, den = term * den + gamma * num, scale * den
+    cols.append("ncw")
+    if q40:
+        pq = F.col(f"__p{order}q")
+        ratio = [pq.cast("long").alias("p_q40")]
+        p = pq.cast("double") / F.lit(float(MKN4_Q))
+    else:
+        num, den = num.cast(DEC), den.cast(DEC)
+        ratio = [num.alias("p_num"), den.alias("p_den")]
+        p = num.cast("double") / den.cast("double")
+    return d.select(
+        *cols, *(ratio if keep_ratio else []), F.round(p, prob_dp).alias("p")
     )
 
 
@@ -2682,75 +2168,93 @@ def kn_doc_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_word_len: int = 32,
+    *,
+    order: int = 2,
+    modified: bool = False,
 ) -> DataFrame:
-    """Train-then-score under the interpolated Kneser-Ney bigram LM —
-    the ``bpe_train_tokens`` / ``dsir_train_select`` discipline applied
-    to the CCNet-style perplexity gate: fit ``train_kn_lm`` on the
-    corpus, then score every document under the model the plan just
-    learned, with NO committed artifact and NO transcendentals. Each
-    bigram's cost is ``ilog2_q20(p_den) - ilog2_q20(p_num)`` (exact
-    Q20 negative log2-probability of the integer ratio ``p_num/p_den``
-    — ``intmath.with_ilog2_q20`` JVM-side), so the per-document sum is
-    a BIGINT: shuffle-order-free and hash-exact cross-engine.
+    """Train-then-score under the order-``order`` Kneser-Ney LM — the
+    ``bpe_train_tokens`` / ``dsir_train_select`` discipline applied to
+    the CCNet-style perplexity gate: fit ``train_kn_lm`` (same
+    ``order``/``modified``) on the corpus, then score every document's
+    n-gram stream under the model the plan just learned, with NO
+    committed artifact and NO transcendentals. Each n-gram's cost is an
+    exact Q20 negative log2-probability (``intmath.with_ilog2_q20``
+    JVM-side), so the per-document sum is a BIGINT: shuffle-order-free
+    and hash-exact cross-engine.
 
-    Scoring the training corpus itself means every bigram is in-model
+    - Orders 2–3 cost ``ilog2_q20(p_den) - ilog2_q20(p_num)`` over the
+      exact ratio. The 64-bit log2 stage takes both through
+      ``try_cast`` to BIGINT: exact while the model denominator stays
+      below 2^63 (shard the model by context hash at web-corpus type
+      counts, as with training), NULL past it — never a wrapped value,
+      REGARDLESS of ``spark.sql.ansi.enabled`` — so a breach is loud
+      in any gate.
+    - Order 4 costs one log, ``40*2^20 - ilog2_q20(max(p_q40, 1))``,
+      over the trainer's bit-identical Q40 probability; an n-gram
+      whose probability floors to 0 in Q40 (< 2^-40) is charged
+      exactly the grid's 40-bit ceiling on both engines.
+
+    Scoring the training corpus itself means every n-gram is in-model
     (no OOV branch); a deployment scoring NEW text backs off unseen
-    bigrams to the continuation term, which is the same integer-ratio
-    shape. Scale: the trainer's one bigram shuffle, the ilog2 chain as
-    pure codegen over the vocab²-bounded model, one more corpus-scale
-    shuffle joining the per-doc bigram stream to the model on (u, w)
-    (broadcastable when the model is small), one doc-keyed agg.
+    n-grams through the same integer shapes. Scale: the trainer's
+    shuffles, the ilog2 chain as pure codegen over the type-bounded
+    model, one corpus-scale shuffle joining the per-doc n-gram stream
+    to the model on its keys (broadcastable when the model is small),
+    one doc-keyed agg.
 
-    Output: ``(id_col, n_bigrams, nll_q20, bits_per_bigram_q20)`` —
-    total and truncated-mean negative log2-likelihood in Q20 micro-bits
-    (the decile-bucketing / gating step is ``lm_perplexity_sampled``'s
-    job downstream).
+    Output: ``(id_col, n_<g>s, nll_q20, bits_per_<g>_q20)`` with
+    ``<g>`` = bigram / trigram / fourgram — total and truncated-mean
+    negative log2-likelihood in Q20 micro-bits.
     """
     from traits_data_spark.functions.intmath import with_ilog2_q20
 
+    keys = _ngram_keys(order)
     model = train_kn_lm(
-        df, text_col=text_col, max_word_len=max_word_len,
-        keep_ratio=True,
+        df, order=order, modified=modified, text_col=text_col,
+        max_word_len=max_word_len, keep_ratio=True,
     )
-    model = with_ilog2_q20(model, "p_num", "__iln")
-    model = with_ilog2_q20(model, "p_den", "__ild")
-    bits = model.select(
-        "u", "w", (F.col("__ild") - F.col("__iln")).alias("__bits_q20")
-    )
-    nt = normalized_text(F.col(text_col), lowercase=True)
-    wlist = F.filter(
-        F.split(nt, " "),
-        lambda x: (F.length(x) > 0) & (F.length(x) <= max_word_len),
-    )
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        id_col, F.concat(F.array(F.lit("<s>")), wlist).alias("ws")
-    )
-    arr = F.col("ws")
-    n = F.size(arr)
-    big = toks.select(
-        id_col,
-        F.explode(
-            F.zip_with(
-                F.slice(arr, 1, n - 1),
-                F.slice(arr, 2, n - 1),
-                lambda a, b: F.struct(a.alias("u"), b.alias("w")),
-            )
-        ).alias("bg"),
-    ).select(id_col, F.col("bg.u").alias("u"), F.col("bg.w").alias("w"))
+    if order >= _Q40_ORDER:
+        model = model.select(
+            *keys, F.greatest("p_q40", F.lit(1)).cast("long").alias("p_q40")
+        )
+        model = with_ilog2_q20(model, "p_q40", "__il")
+        bits = F.lit(MKN4_Q_BITS * (1 << 20)).cast("long") - F.col("__il")
+    else:
+        model = model.select(
+            *keys,
+            F.col("p_num").try_cast("long").alias("p_num"),
+            F.col("p_den").try_cast("long").alias("p_den"),
+        )
+        model = with_ilog2_q20(model, "p_num", "__iln")
+        model = with_ilog2_q20(model, "p_den", "__ild")
+        bits = F.col("__ild") - F.col("__iln")
+    g = _NGRAM_NAMES[order]
     return (
-        big.join(bits, ["u", "w"])
+        _ngram_rows(df, order, text_col, max_word_len, id_col)
+        .join(model.select(*keys, bits.alias("__bits_q20")), list(keys))
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+            F.count(F.lit(1)).cast("long").alias(f"n_{g}s"),
             F.sum("__bits_q20").cast("long").alias("nll_q20"),
         )
         .withColumn(
-            "bits_per_bigram_q20",
+            f"bits_per_{g}_q20",
             # integer division (values are non-negative, so trunc ==
             # floor on both engines; no double round-trip)
-            F.expr("nll_q20 DIV n_bigrams").cast("long"),
+            F.expr(f"nll_q20 DIV n_{g}s").cast("long"),
         )
     )
+
+
+def kn4_doc_scores(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_word_len: int = 32,
+) -> DataFrame:
+    """``kn_doc_scores`` at order 4 under modified KN — its own
+    module-level name so callers and tracers can address it."""
+    return kn_doc_scores(df, id_col, text_col, max_word_len, order=4, modified=True)
 
 
 # --- on-cluster unigram-LM (SentencePiece) training --------------------
@@ -3154,417 +2658,4 @@ def name_search(
         .withColumn("matched_all", F.col("prefix_hits") == len(terms))
         .filter(F.col("prefix_hits") > 0)
         .drop("__toks")
-    )
-
-
-def word_fourgram_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = 32,
-) -> DataFrame:
-    """``(t, u, v, w, n_tuvw)`` word-FOURGRAM type counts with a
-    TRIPLE sentence-start prepend (``<s> <s> <s> w1 ...`` — the first
-    real word gets the well-defined context ``(<s>, <s>, <s>)``) —
-    the order-4 count stage of ``train_mkn4_lm`` and a persistable
-    LM-count index under the same add-mergeable contract as
-    ``word_trigram_counts``: ``merge_fourgram_counts`` of per-slice
-    counts == counts over the union, so a nightly ingest extends the
-    persisted table from the new batch alone.
-
-    Scale: one corpus-scale shuffle (the fourgram groupBy, map-side
-    combine); the slide is three array slices zipped in-plan, no
-    self-join, no Python."""
-    nt = normalized_text(F.col(text_col), lowercase=True)
-    wlist = F.filter(
-        F.split(nt, " "),
-        lambda x: (F.length(x) > 0) & (F.length(x) <= max_word_len),
-    )
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        F.concat(
-            F.array(F.lit("<s>"), F.lit("<s>"), F.lit("<s>")), wlist
-        ).alias("ws")
-    )
-    arr = F.col("ws")
-    n = F.size(arr)
-    # zip the four 1-shifted views; slice length n-3 >= 0 always (the
-    # three-token prepend guarantees n >= 3, and an empty word list
-    # yields zero fourgrams through the empty slices)
-    tu = F.zip_with(
-        F.slice(arr, 1, n - 3),
-        F.slice(arr, 2, n - 3),
-        lambda a, b: F.struct(a.alias("t"), b.alias("u")),
-    )
-    tuv = F.zip_with(
-        tu,
-        F.slice(arr, 3, n - 3),
-        lambda x, c: F.struct(
-            x["t"].alias("t"), x["u"].alias("u"), c.alias("v")
-        ),
-    )
-    fg = toks.select(
-        F.explode(
-            F.zip_with(
-                tuv,
-                F.slice(arr, 4, n - 3),
-                lambda x, d: F.struct(
-                    x["t"].alias("t"),
-                    x["u"].alias("u"),
-                    x["v"].alias("v"),
-                    d.alias("w"),
-                ),
-            )
-        ).alias("fg")
-    )
-    return fg.groupBy(
-        F.col("fg.t").alias("t"),
-        F.col("fg.u").alias("u"),
-        F.col("fg.v").alias("v"),
-        F.col("fg.w").alias("w"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_tuvw"))
-
-
-def merge_fourgram_counts(*parts: DataFrame) -> DataFrame:
-    """Merge per-slice ``word_fourgram_counts`` tables (union + keyed
-    sum) — one shuffle over count rows, never over text."""
-    if not parts:
-        raise ValueError("merge_fourgram_counts needs at least one part")
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return u.groupBy("t", "u", "v", "w").agg(
-        F.sum("n_tuvw").cast("long").alias("n_tuvw")
-    )
-
-
-#: Q40 fixed-point scale for the order-4 cross-level composition
-#: (2^40 — chosen so the smallest representable probability step,
-#: 2^-40 ~ 9.1e-13, sits three decades below the ``prob_dp=9``
-#: output rounding).
-MKN4_Q = 1 << 40
-MKN4_Q_BITS = 40
-
-
-def train_mkn4_lm(
-    df: DataFrame | None = None,
-    text_col: str = "text",
-    max_word_len: int = 32,
-    prob_dp: int = 9,
-    keep_ratio: bool = False,
-    counts: DataFrame | None = None,
-) -> DataFrame:
-    """Train a MODIFIED Kneser-Ney word-FOURGRAM LM ON-CLUSTER — the
-    ``train_mkn3_lm`` estimator one order up, one order short of
-    KenLM's production order 5 (Chen & Goodman 1998 §3: highest order
-    uses raw counts, every lower order uses CONTINUATION type counts;
-    each order estimates its own three discounts D1/D2/D3+ from its
-    own count-of-counts over the reduced common denominator)::
-
-        P4(w|t,u,v) = (n_tuvw - A(n_tuvw))/n_tuv + gammaA * P3(w|u,v)
-        P3(w|u,v)   = (c3'(uvw) - B(c3'))/c3'(uv.) + gammaB * P2(w|v)
-        P2(w|v)     = (c2'(vw) - E(c2'))/c2'(v.) + gammaE * ncw/Nbb
-
-    where ``c3'(uvw) = N1+(.uvw)`` (distinct left-extensions of the
-    trigram, counted by grouping fourgram TYPES on (u, v, w)) and
-    ``c2'(vw)`` groups the c3' table on (v, w).
-
-    **Exactness boundary — the reduce-vs-round decision the order-3
-    docstring deferred**: the order-3 full-product formulation carries
-    ONE exact ratio whose denominator multiplies 5 statistics; at
-    order 4 that chain has 7 factors (``n_tuv * AD * c3_uv * BD *
-    c2_v * ED * Nbb``) and exceeds DECIMAL(38,0) even at modest
-    corpus sizes, so this trainer ROUNDS at the level seams instead:
-    each level's (numerator, denominator) stays an exact DECIMAL(38,0)
-    integer pair, and levels compose in Q40 fixed point via floor
-    division —
-
-        p2_q = (num2 * 2^40 + gamma2 * p1_q) div (c2_v * ED)
-        p3_q = (num3 * 2^40 + gamma3 * p2_q) div (c3_uv * BD)
-        p4_q = (num4 * 2^40 + gamma4 * p3_q) div (n_tuv * AD)
-
-    ``div`` is integral division on BOTH engines (Spark ``DIV`` on
-    DECIMAL, DuckDB ``//`` on HUGEINT; all terms non-negative, so
-    trunc == floor), making ``p_q40`` BIT-IDENTICAL cross-engine.
-    The truncation injects < 2^-40 absolute error per seam (< 3e-12
-    total — three decades under the ``prob_dp=9`` rounding); the
-    per-level width bound is now ``count * DD * 2^40 < 1e38`` per
-    LEVEL (DD cubic in that order's count-of-counts), which holds far
-    past the 20x stress corpus; past it, Spark NULLs/ANSI-throws —
-    loud in any gate — and the deployment path is pre-quantizing the
-    one-row discount globs to Q30 before the per-row chain, which
-    caps every term at ``count * 2^70`` regardless of corpus size.
-    The final ``p`` is ``round(p_q40 / 2^40, prob_dp)`` — exact
-    power-of-two division of a <=41-bit integer, deterministic IEEE
-    on both engines.
-
-    Scale shape: ONE corpus-scale shuffle (the fourgram groupBy);
-    context totals, continuation tables, count-of-count frames and
-    the one-row discount glob all derive from the type-bounded
-    fourgram table. The model join fans the type table through six
-    keyed joins plus a one-row broadcast — type-table-sized shuffles,
-    not corpus.
-
-    Output: ``(t, u, v, w, n_tuvw, n_tuv, nu1, nu2, nu3p, c3_uvw,
-    c3_uv, mu1, mu2, mu3p, c2_vw, c2_v, mv1, mv2, mv3p, ncw, p)``;
-    ``keep_ratio=True`` adds the exact BIGINT ``p_q40``. Pass
-    ``counts=`` (a persisted ``word_fourgram_counts`` index extended
-    via ``merge_fourgram_counts``) to re-derive the model without
-    touching corpus text — exactly one of ``df``/``counts`` is
-    required."""
-    if counts is None:
-        if df is None:
-            raise ValueError("train_mkn4_lm needs df or counts")
-        # persist: ctx4/c3/g4/join all consume the count table —
-        # without the pin each re-runs the corpus tokenize + shuffle
-        counts = (
-            word_fourgram_counts(df, text_col, max_word_len)
-            .transform(barrier)
-        )
-    elif df is not None:
-        raise ValueError(
-            "train_mkn4_lm: pass df OR counts, not both — with "
-            "counts= the corpus text is never touched"
-        )
-    DEC = _MKN_DEC
-    ctx4 = counts.groupBy("t", "u", "v").agg(
-        F.sum("n_tuvw").cast("long").alias("n_tuv"),
-        _mkn_bucket("n_tuvw", 1).alias("nu1"),
-        _mkn_bucket("n_tuvw", 2).alias("nu2"),
-        _mkn_bucket("n_tuvw", 3).alias("nu3p"),
-    )
-    # persisted: each continuation table has 4-5 consumers (contexts,
-    # next level down, discount frames, the model join) — one
-    # type-table shuffle apiece, reused
-    c3 = counts.groupBy("u", "v", "w").agg(
-        F.count(F.lit(1)).cast("long").alias("c3_uvw")
-    ).transform(barrier)
-    ctx3 = c3.groupBy("u", "v").agg(
-        F.sum("c3_uvw").cast("long").alias("c3_uv"),
-        _mkn_bucket("c3_uvw", 1).alias("mu1"),
-        _mkn_bucket("c3_uvw", 2).alias("mu2"),
-        _mkn_bucket("c3_uvw", 3).alias("mu3p"),
-    )
-    c2 = c3.groupBy("v", "w").agg(
-        F.count(F.lit(1)).cast("long").alias("c2_vw")
-    ).transform(barrier)
-    ctx2 = c2.groupBy("v").agg(
-        F.sum("c2_vw").cast("long").alias("c2_v"),
-        _mkn_bucket("c2_vw", 1).alias("mv1"),
-        _mkn_bucket("c2_vw", 2).alias("mv2"),
-        _mkn_bucket("c2_vw", 3).alias("mv3p"),
-    )
-    pred = c2.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("ncw")
-    )
-    g4 = mkn_discount_glob(counts, "n_tuvw", "a")
-    g3 = mkn_discount_glob(c3, "c3_uvw", "b")
-    g2 = mkn_discount_glob(c2, "c2_vw", "e")
-    gbb = c2.agg(F.count(F.lit(1)).cast(DEC).alias("__nbb"))
-    glob = g4.crossJoin(g3).crossJoin(g2).crossJoin(gbb)
-
-    def _disc(cnt: str, p: str):
-        return (
-            F.when(F.col(cnt) == 1, F.col(f"__{p}1"))
-            .when(F.col(cnt) == 2, F.col(f"__{p}2"))
-            .otherwise(F.col(f"__{p}3"))
-        )
-
-    def _gamma(p: str, b1: str, b2: str, b3: str):
-        return (
-            F.col(f"__{p}1") * F.col(b1).cast(DEC)
-            + F.col(f"__{p}2") * F.col(b2).cast(DEC)
-            + F.col(f"__{p}3") * F.col(b3).cast(DEC)
-        )
-
-    Q = F.lit(MKN4_Q).cast(DEC)
-    joined = (
-        counts.join(ctx4, ["t", "u", "v"])
-        .join(c3, ["u", "v", "w"])
-        .join(ctx3, ["u", "v"])
-        .join(c2, ["v", "w"])
-        .join(ctx2, "v")
-        .join(pred, "w")
-        .crossJoin(F.broadcast(glob))
-    )
-    num2 = F.greatest(
-        F.col("c2_vw").cast(DEC) * F.col("__eD") - _disc("c2_vw", "e"),
-        F.lit(0).cast(DEC),
-    )
-    num3 = F.greatest(
-        F.col("c3_uvw").cast(DEC) * F.col("__bD") - _disc("c3_uvw", "b"),
-        F.lit(0).cast(DEC),
-    )
-    num4 = F.greatest(
-        F.col("n_tuvw").cast(DEC) * F.col("__aD") - _disc("n_tuvw", "a"),
-        F.lit(0).cast(DEC),
-    )
-    d = (
-        joined.withColumn(
-            "__p1q",
-            F.expr(
-                f"(CAST(ncw AS {DEC}) * CAST({MKN4_Q} AS {DEC}))"
-                " DIV __nbb"
-            ).cast(DEC),
-        )
-        .withColumn("__num2", num2)
-        .withColumn("__gam2", _gamma("e", "mv1", "mv2", "mv3p"))
-        .withColumn(
-            "__p2q",
-            F.expr(
-                "(__num2 * CAST({q} AS {dec}) + __gam2 * __p1q)"
-                " DIV (CAST(c2_v AS {dec}) * __eD)".format(
-                    q=MKN4_Q, dec=DEC
-                )
-            ).cast(DEC),
-        )
-        .withColumn("__num3", num3)
-        .withColumn("__gam3", _gamma("b", "mu1", "mu2", "mu3p"))
-        .withColumn(
-            "__p3q",
-            F.expr(
-                "(__num3 * CAST({q} AS {dec}) + __gam3 * __p2q)"
-                " DIV (CAST(c3_uv AS {dec}) * __bD)".format(
-                    q=MKN4_Q, dec=DEC
-                )
-            ).cast(DEC),
-        )
-        .withColumn("__num4", num4)
-        .withColumn("__gam4", _gamma("a", "nu1", "nu2", "nu3p"))
-        .withColumn(
-            "__p4q",
-            F.expr(
-                "(__num4 * CAST({q} AS {dec}) + __gam4 * __p3q)"
-                " DIV (CAST(n_tuv AS {dec}) * __aD)".format(
-                    q=MKN4_Q, dec=DEC
-                )
-            ),
-        )
-    )
-    cols = [
-        "t", "u", "v", "w", "n_tuvw", "n_tuv", "nu1", "nu2", "nu3p",
-        "c3_uvw", "c3_uv", "mu1", "mu2", "mu3p",
-        "c2_vw", "c2_v", "mv1", "mv2", "mv3p", "ncw",
-    ]
-    ratio = (
-        [F.col("__p4q").cast("long").alias("p_q40")] if keep_ratio else []
-    )
-    return d.select(
-        *cols,
-        *ratio,
-        F.round(
-            F.col("__p4q").cast("double") / F.lit(float(MKN4_Q)), prob_dp
-        ).alias("p"),
-    )
-
-
-def kn4_doc_scores(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_word_len: int = 32,
-) -> DataFrame:
-    """Train-then-score under the ORDER-4 modified Kneser-Ney LM —
-    ``kn3_doc_scores`` one order up: fit ``train_mkn4_lm`` on the
-    corpus, then score every document's fourgram stream under the
-    model the plan just learned, with NO committed artifact and NO
-    transcendentals. The Q40 fixed-point probability makes the cost a
-    single log: ``bits_q20 = 40*2^20 - ilog2_q20(p_q40)`` (vs the
-    order-3 two-log ratio form), so the per-document sum is a BIGINT
-    — shuffle-order-free and hash-exact cross-engine.
-
-    Exactness boundary: ``p_q40`` is the trainer's bit-identical
-    cross-engine fixed-point probability; a fourgram whose model
-    probability floors to 0 in Q40 (< 2^-40 — only reachable through
-    a saturated D1 clamp plus an extreme backoff chain) is charged
-    exactly 40 bits via ``greatest(p_q40, 1)`` — the documented cost
-    ceiling of the fixed-point grid, applied identically on both
-    engines.
-
-    Scale: the trainer's one fourgram shuffle, the ilog2 chain as
-    pure codegen over the type-bounded model, one corpus-scale
-    shuffle joining the per-doc fourgram stream to the model on
-    (t, u, v, w) (broadcastable when the model is small), one
-    doc-keyed agg. Scoring the training corpus itself means every
-    fourgram is in-model (no OOV branch).
-
-    Output: ``(id_col, n_fourgrams, nll_q20, bits_per_fourgram_q20)``
-    — total and truncated-mean negative log2-likelihood in Q20
-    micro-bits.
-    """
-    from traits_data_spark.functions.intmath import with_ilog2_q20
-
-    model = train_mkn4_lm(
-        df, text_col=text_col, max_word_len=max_word_len,
-        keep_ratio=True,
-    ).select(
-        "t",
-        "u",
-        "v",
-        "w",
-        F.greatest(F.col("p_q40"), F.lit(1)).cast("long").alias("p_q40"),
-    )
-    model = with_ilog2_q20(model, "p_q40", "__il")
-    bits = model.select(
-        "t", "u", "v", "w",
-        (F.lit(MKN4_Q_BITS * (1 << 20)).cast("long") - F.col("__il"))
-        .alias("__bits_q20"),
-    )
-    nt = normalized_text(F.col(text_col), lowercase=True)
-    wlist = F.filter(
-        F.split(nt, " "),
-        lambda x: (F.length(x) > 0) & (F.length(x) <= max_word_len),
-    )
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        id_col,
-        F.concat(
-            F.array(F.lit("<s>"), F.lit("<s>"), F.lit("<s>")), wlist
-        ).alias("ws"),
-    )
-    arr = F.col("ws")
-    n = F.size(arr)
-    tu = F.zip_with(
-        F.slice(arr, 1, n - 3),
-        F.slice(arr, 2, n - 3),
-        lambda a, b: F.struct(a.alias("t"), b.alias("u")),
-    )
-    tuv = F.zip_with(
-        tu,
-        F.slice(arr, 3, n - 3),
-        lambda x, c: F.struct(
-            x["t"].alias("t"), x["u"].alias("u"), c.alias("v")
-        ),
-    )
-    fg = toks.select(
-        id_col,
-        F.explode(
-            F.zip_with(
-                tuv,
-                F.slice(arr, 4, n - 3),
-                lambda x, d: F.struct(
-                    x["t"].alias("t"),
-                    x["u"].alias("u"),
-                    x["v"].alias("v"),
-                    d.alias("w"),
-                ),
-            )
-        ).alias("fg"),
-    ).select(
-        id_col,
-        F.col("fg.t").alias("t"),
-        F.col("fg.u").alias("u"),
-        F.col("fg.v").alias("v"),
-        F.col("fg.w").alias("w"),
-    )
-    return (
-        fg.join(bits, ["t", "u", "v", "w"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_fourgrams"),
-            F.sum("__bits_q20").cast("long").alias("nll_q20"),
-        )
-        .withColumn(
-            "bits_per_fourgram_q20",
-            # integer division (values are non-negative, so trunc ==
-            # floor on both engines; no double round-trip)
-            F.expr("nll_q20 DIV n_fourgrams").cast("long"),
-        )
     )
