@@ -35,7 +35,6 @@ import os
 import random
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -130,34 +129,12 @@ def headline_line(timings: dict[str, float], sf, load1) -> str:
     )[:TAIL_CAPTURE_BUDGET]
 
 
-def _free_storage(spark) -> None:
-    """Free EVERY storage block between benched queries, BLOCKING.
-    Two measured round-10 mechanisms behind the warm>first_rep
-    inversions (SCALE.md):
-
-    - ``clearCache()`` never drops ``localCheckpoint`` blocks (kmeans
-      fits, CC iteration checkpoints) — they outlive it and degrade
-      later heavy-persist queries (curate_corpus floor 6.2 s isolated
-      → 9.0 s after the checkpoint-heavy ANN/dedup family). The
-      persistent-RDD registry sweep below catches them.
-    - ``clearCache()``/``unpersist()`` default to ASYNC block removal,
-      so rep N's drop work lands inside rep N+1's timed window on
-      persist-heavy plans — curate_corpus reps [7.5, 9.4, 6.8, 6.1]
-      async vs [6.1, 6.2, 6.4, 7.2] with blocking unpersist.
-      ``unpersist(True)`` moves that cost out here, untimed.
-
-    Safe between queries: nothing references the cached/checkpointed
-    plans once the noop write completes."""
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist(True)
-    spark.catalog.clearCache()
-
-
 def main() -> None:
     from tools.benchlib import (
         anchor_start_load,
         git_sha,
         latest_anchor,
+        timed_noop,
         wait_for_band,
     )
 
@@ -228,12 +205,9 @@ def main() -> None:
         warm_dir = SF_DIR
     for name in bench_queries:
         try:
-            catalog.QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            timed_noop(spark, catalog.QUERIES[name], warm_dir)
         except Exception:
             pass
-        _free_storage(spark)
 
     # Local-mode wall clocks vary ±20% run-to-run (GC, JIT, OS cache);
     # min-of-N is the stable statistic for regression tracking. The
@@ -252,15 +226,11 @@ def main() -> None:
         rep_times = []
         n_reps = max(reps, 3) if name in FLAGSHIPS else reps
         for _ in range(n_reps):
-            t0 = time.time()
-            df = fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            rep_times.append(time.time() - t0)
-            # queries that persist intermediates (LSH signature tables,
-            # corpus barriers) must not leak cache blocks into the next
-            # run — eviction thrash would charge query N's cost to
-            # query N+1.
-            _free_storage(spark)
+            # the rep sweeps storage after timing: queries that persist
+            # intermediates (LSH signature tables, corpus barriers) must
+            # not leak cache blocks into the next run — eviction thrash
+            # would charge query N's cost to query N+1.
+            rep_times.append(timed_noop(spark, fn, SF_DIR)[1])
         timings[name] = round(min(rep_times), 3)
         if name in FLAGSHIPS:
             # "first_rep", not "cold": the sf0.001 warmup already

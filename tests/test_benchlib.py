@@ -1,8 +1,8 @@
 """Pure-Python guards on the bench-infrastructure contracts added in
 round 15: anchor discovery, the board git-SHA stamp, and the
-same-commit rule for bench_compare's min-of-sessions merge. These run
-without a SparkSession — they lock the gate plumbing, not query
-plans."""
+same-commit rule for bench_compare's min-of-sessions merge, and the
+shared timed rep. All but the timed-rep test run without a
+SparkSession — they lock the gate plumbing, not query plans."""
 
 import json
 import os
@@ -142,3 +142,33 @@ def test_load_band_is_two():
     # BASELINE.md's comparability contract; drifting this silently
     # changes which boards are binding
     assert LOAD_BAND == 2.0
+
+
+def test_timed_noop_times_build_and_frees_every_block(spark):
+    """One timed rep returns (build_s, total_s) and leaves no storage
+    block behind — including a localCheckpoint, which clearCache()
+    alone never drops — also when the rep raises."""
+    import pytest
+
+    from tools.benchlib import timed_noop
+
+    def persistent(s):
+        return s.sparkContext._jsc.getPersistentRDDs().size()
+
+    def fn(s, sf_dir):
+        s.range(10).localCheckpoint()
+        df = s.range(1000).persist()
+        df.count()  # an eager job inside the build
+        return df.selectExpr("id * 2 AS x")
+
+    build, total = timed_noop(spark, fn, "unused")
+    assert 0 <= build <= total
+    assert persistent(spark) == 0
+
+    def boom(s, sf_dir):
+        s.range(10).persist().count()
+        raise RuntimeError("rep failed")
+
+    with pytest.raises(RuntimeError):
+        timed_noop(spark, boom, "unused")
+    assert persistent(spark) == 0

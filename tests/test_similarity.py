@@ -105,39 +105,6 @@ def test_multiprobe_recall_at_least_single_table(spark, embeddings):
     assert r_multi > 0.0
 
 
-def test_ivf_full_probe_equals_bruteforce(spark, embeddings):
-    """Probing every centroid degenerates IVF to exact search."""
-    from pyspark.sql import functions as F
-
-    from traits_data_spark.operators.similarity import ivf_topk
-
-    emb = embeddings.limit(100).cache()
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk_bruteforce(emb, queries, id_col="vec_id", k=5)
-    full = ivf_topk(
-        emb, queries, dim=64, k=5, n_centroids=8, n_probe=8
-    )
-    e = sorted(tuple(r) for r in exact.collect())
-    f = sorted(tuple(r) for r in full.collect())
-    assert e == f
-
-
-def test_ivf_partial_probe_subset_and_nonzero(spark, embeddings):
-    from pyspark.sql import functions as F
-
-    from traits_data_spark.operators.similarity import ivf_topk
-
-    emb = embeddings.limit(200)
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk_bruteforce(emb, queries, id_col="vec_id", k=200)
-    truth = {
-        (r["query_id"], r["neighbor_id"], r["cosine"]) for r in exact.collect()
-    }
-    approx = ivf_topk(emb, queries, dim=64, k=5, n_centroids=8, n_probe=2)
-    got = {(r["query_id"], r["neighbor_id"], r["cosine"]) for r in approx.collect()}
-    assert got and got <= truth  # genuine pairs, exact same scores
-
-
 def test_ivf_hyperplane_full_probe_equals_bruteforce(spark, embeddings):
     """Probing all 2^n_planes cells degenerates to exact search."""
     from pyspark.sql import functions as F
@@ -1037,3 +1004,142 @@ def test_keyed_near_dups_zero_norm_vectors_excluded(spark):
     )
     got = keyed_near_dups(df, "k", threshold=0.5).collect()
     assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)]
+
+
+def _zero_norm_frame(spark):
+    """Four 4-d vectors, their negations (so every sign bucket of a
+    one-plane LSH holds a vector) and one all-zero vector, id 99."""
+    base = [
+        [1.0, 0.2, 0.0, 0.1],
+        [0.9, 0.3, 0.1, 0.0],
+        [0.0, 1.0, 0.5, 0.2],
+        [0.1, 0.0, 1.0, 0.7],
+    ]
+    rows = [(i + 1, v, i % 2) for i, v in enumerate(base)]
+    rows += [(i + 11, [-x for x in v], i % 2) for i, v in enumerate(base)]
+    rows.append((99, [0.0] * 4, 0))
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+
+
+def _zero_norm_cases():
+    from traits_data_spark.operators import similarity as S
+
+    def index(df):
+        return S.hyperplane_bucket_index(df, dim=4, n_planes=1)
+
+    return {
+        "cosine_topk_bruteforce": lambda df, q: S.cosine_topk_bruteforce(
+            df, q, k=20
+        ),
+        "cosine_topk_quantized": lambda df, q: S.cosine_topk_quantized(
+            df, q, dim=4, k=20
+        ),
+        "lsh_bucketed_topk": lambda df, q: S.lsh_bucketed_topk(
+            df, q, dim=4, k=20, n_planes=1
+        ),
+        "lsh_topk_multiprobe": lambda df, q: S.lsh_topk_multiprobe(
+            df, q, dim=4, k=20, n_planes=1, n_tables=2
+        ),
+        "ivf_topk_hyperplane": lambda df, q: S.ivf_topk_hyperplane(
+            df, q, dim=4, k=20, n_planes=1, n_probe=2
+        ),
+        "ivf_topk_kmeans": lambda df, q: S.ivf_topk_kmeans(
+            df, q, k=20, n_centroids=2, n_iter=1, n_probe=2
+        ),
+        "hard_negative_mining": lambda df, q: S.hard_negative_mining(
+            df, q, k_pos=20, k_neg=20
+        ),
+        "keyed_near_dups": lambda df, q: S.keyed_near_dups(
+            df, "label", threshold=-1.0
+        ),
+        "all_pairs_cosine": lambda df, q: S.all_pairs_cosine(
+            df, threshold=-1.0, n_blocks=2
+        ),
+        "embedding_near_dups": lambda df, q: S.embedding_near_dups(
+            df, dim=4, threshold=-1.0, n_planes=1
+        ),
+        "incremental_embedding_near_dups": lambda df, q: (
+            S.incremental_embedding_near_dups(
+                q, index(df.filter("vec_id NOT IN (1, 99)")), dim=4,
+                threshold=-1.0, n_planes=1,
+            )
+        ),
+        "semantic_decontaminate": lambda df, q: S.semantic_decontaminate(
+            df, index(q), dim=4, threshold=-1.0, n_planes=1
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_zero_norm_cases()))
+def test_cosine_scorers_drop_zero_norm_vectors(spark, name):
+    """A zero vector has no cosine: every scorer drops it before the
+    pair join instead of throwing DIVIDE_BY_ZERO under ANSI or ranking
+    a NULL/NaN score. The zero vector is in the corpus AND the query /
+    new / eval side, and shares a bucket with non-zero vectors."""
+    df = _zero_norm_frame(spark)
+    q = df.filter("vec_id IN (1, 99)")
+    rows = _zero_norm_cases()[name](df, q).collect()
+    assert rows
+    id_cols = [
+        c
+        for c in rows[0].asDict()
+        if c in ("query_id", "neighbor_id", "anchor_id", "id_a", "id_b",
+                 "vec_id", "eval_id")
+    ]
+    assert id_cols
+    assert all(r[c] != 99 for r in rows for c in id_cols)
+
+
+def test_topk_operators_output_contract(spark):
+    """Every top-k operator ranks with a BIGINT ``rk``, and no score is
+    -0.0 (a pair at cosine -1e-9 rounds to -0.0 before the + 0.0)."""
+    import math
+
+    from traits_data_spark.operators import similarity as S
+
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0], 0),
+        (2, [-1e-9, 1.0, 0.0, 0.0], 1),
+        (3, [0.5, 0.5, 0.1, 0.0], 0),
+        (4, [0.2, 0.9, 0.3, 0.1], 1),
+        (5, [0.0, 0.1, 1.0, 0.4], 0),
+        (6, [0.3, 0.0, 0.2, 1.0], 1),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    q = df.filter("vec_id <= 2")
+    ops = {
+        "cosine": [
+            S.cosine_topk_bruteforce(df, q, k=10),
+            S.lsh_bucketed_topk(df, q, dim=4, k=10, n_planes=1),
+            S.lsh_topk_multiprobe(
+                df, q, dim=4, k=10, n_planes=1, n_tables=2, probe_bits=1
+            ),
+            S.ivf_topk_hyperplane(df, q, dim=4, k=10, n_planes=1, n_probe=2),
+            S.ivf_topk_kmeans(df, q, k=10, n_centroids=2, n_iter=1, n_probe=2),
+            S.hard_negative_mining(df, q, k_pos=10, k_neg=10),
+        ],
+        "cosine_q": [S.cosine_topk_quantized(df, q, dim=4, k=10)],
+        "approx_d2_micro": [S.pq_topk(df, q, dim=4, m=2, k=10, n_codes=2)],
+        "d2": [
+            S.pq_topk(df, q, dim=4, m=2, k=10, n_codes=2, rerank=10),
+            S.ivfpq_topk(
+                df, q, dim=4, k=10, n_cells=2, n_probe=2, m=2, n_codes=2,
+                rerank=10,
+            ),
+        ],
+    }
+    saw_zero = False
+    for score, frames in ops.items():
+        for out in frames:
+            assert out.schema["rk"].dataType.simpleString() == "bigint"
+            got = out.collect()
+            assert got
+            if score in ("cosine", "d2"):
+                zeros = [r[score] for r in got if r[score] == 0.0]
+                assert all(math.copysign(1.0, z) > 0 for z in zeros)
+                saw_zero = saw_zero or bool(zeros)
+    assert saw_zero  # the -1e-9 pair reached the output as 0.0

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -21,6 +20,7 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 
+    from tools.benchlib import timed_noop
     from traits_data_spark import catalog
     from traits_data_spark.session import get_spark
 
@@ -28,36 +28,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     fn = catalog.QUERIES[name]
 
-    def _clear() -> None:
-        # same clearing discipline as bench.py: clearCache() never
-        # drops localCheckpoint blocks, and async unpersist leaks the
-        # removal cost into the NEXT rep's timed window — blocking
-        # unpersist of every persistent RDD keeps reps comparable.
-        # The registry walk uses py4j internals (_jsc), which can shift
-        # across Spark versions — degrade to clearCache-only rather
-        # than failing the measurement.
-        try:
-            regs = spark.sparkContext._jsc.getPersistentRDDs().values()
-        except Exception as exc:  # pragma: no cover - version drift
-            print(f"ab_query: persistent-RDD sweep unavailable ({exc})")
-            regs = []
-        for jrdd in regs:
-            jrdd.unpersist(True)
-        spark.catalog.clearCache()
-
-    # warmup (JIT/codegen) at smallest sf
-    fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    _clear()
-
-    times = []
-    for i in range(reps):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        times.append(round(dt, 3))
-        _clear()
+    # warmup (JIT/codegen) at smallest sf; every rep sweeps storage
+    # afterwards, untimed (same discipline as bench.py)
+    timed_noop(spark, fn, "/root/testdata/sf0.001")
+    times = [round(timed_noop(spark, fn, sf_dir)[1], 3) for _ in range(reps)]
     print(
         {
             "query": name,

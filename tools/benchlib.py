@@ -1,10 +1,11 @@
 """Shared bench-infrastructure helpers: the anchor-discovery rule, the
-comparable-load band, the board git-SHA stamp, and the bounded
-load-wait. One definition consumed by ``bench.py`` (startup gate),
-``tools/bench_gated.py`` (retry wrapper) and ``tools/bench_compare.py``
-(regression gate) — these three previously duplicated
-``latest_anchor``/``LOAD_BAND`` verbatim with a "must match" comment
-(round-14 advice: drift risk).
+comparable-load band, the board git-SHA stamp, the bounded load-wait,
+and the one timed rep (``timed_noop``) with its storage sweep
+(``free_storage``). One definition consumed by ``bench.py`` (startup
+gate, timed reps), ``tools/bench_gated.py`` (retry wrapper),
+``tools/bench_compare.py`` (regression gate) and the single-query
+timers ``tools/ab_query.py``, ``tools/stage_profile.py`` and
+``tools/stress20x.py`` — which previously each carried their own copy.
 """
 
 from __future__ import annotations
@@ -35,6 +36,46 @@ def latest_anchor(here: str) -> str | None:
         if m and int(m.group(1)) > best_n:
             best, best_n = path, int(m.group(1))
     return best
+
+
+def free_storage(spark) -> None:
+    """Free EVERY storage block between timed reps, BLOCKING. Two
+    measured round-10 mechanisms behind the warm>first_rep inversions
+    (SCALE.md):
+
+    - ``clearCache()`` never drops ``localCheckpoint`` blocks (kmeans
+      fits, CC iteration checkpoints) — they outlive it and degrade
+      later heavy-persist queries (curate_corpus floor 6.2 s isolated
+      → 9.0 s after the checkpoint-heavy ANN/dedup family). The
+      persistent-RDD registry sweep below catches them.
+    - ``clearCache()``/``unpersist()`` default to ASYNC block removal,
+      so rep N's drop work lands inside rep N+1's timed window on
+      persist-heavy plans — curate_corpus reps [7.5, 9.4, 6.8, 6.1]
+      async vs [6.1, 6.2, 6.4, 7.2] with blocking unpersist.
+      ``unpersist(True)`` moves that cost out here, untimed.
+
+    Safe between queries: nothing references the cached/checkpointed
+    plans once the noop write completes."""
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist(True)
+    spark.catalog.clearCache()
+
+
+def timed_noop(spark, fn, sf_dir: str) -> tuple[float, float]:
+    """One timed rep of a catalog query: build ``fn(spark, sf_dir)``,
+    materialize it end-to-end through the noop sink, then
+    ``free_storage`` (untimed, also when the rep raises). Returns
+    ``(build_s, total_s)``: the seconds spent inside ``fn`` (driver-side
+    construction, including any eager barriers) and the wall seconds up
+    to the end of the write."""
+    t0 = time.time()
+    try:
+        df = fn(spark, sf_dir)
+        build = time.time() - t0
+        df.write.format("noop").mode("overwrite").save()
+        return build, time.time() - t0
+    finally:
+        free_storage(spark)
 
 
 def anchor_start_load(anchor_path: str) -> float | None:

@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -33,6 +32,7 @@ def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 
+    from tools.benchlib import timed_noop
     from traits_data_spark import catalog
     from traits_data_spark.session import get_spark
 
@@ -40,12 +40,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     fn = catalog.QUERIES[name]
 
-    fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.catalog.clearCache()
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist(True)
+    timed_noop(spark, fn, "/root/testdata/sf0.001")
 
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
@@ -53,11 +48,7 @@ def main() -> None:
     jobs_before = {j["jobId"] for j in _get(f"{base}/jobs")}
     stages_before = {s["stageId"] for s in _get(f"{base}/stages")}
 
-    t0 = time.time()
-    df = fn(spark, sf_dir)
-    t_build = time.time() - t0
-    df.write.format("noop").mode("overwrite").save()
-    t_total = time.time() - t0
+    t_build, t_total = timed_noop(spark, fn, sf_dir)
 
     jobs = [j for j in _get(f"{base}/jobs") if j["jobId"] not in jobs_before]
     stages = [

@@ -40,7 +40,6 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -160,7 +159,7 @@ def main() -> None:
     build(out_dir, suffix_words, fixed_tables, fixed_docs_pred,
           fixed_emb_pred)
 
-    from bench import _free_storage
+    from tools.benchlib import timed_noop
     from traits_data_spark import catalog
     from traits_data_spark.session import get_spark
 
@@ -169,15 +168,7 @@ def main() -> None:
     for name in names:
         fn = catalog.QUERIES[name]
         for label, d in (("1x", BASE), ("20x", out_dir)):
-            times = []
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                times.append(round(time.time() - t0, 2))
-                # blocking full-storage sweep (see bench._free_storage:
-                # clearCache leaks localCheckpoint blocks and drops the
-                # rest async, contaminating the next timed rep)
-                _free_storage(spark)
+            times = [round(timed_noop(spark, fn, d)[1], 2) for _ in range(2)]
             print(
                 {
                     "query": name,

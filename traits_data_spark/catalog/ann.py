@@ -49,11 +49,8 @@ _QUERY_PRED = "vec_id < 10"
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    out = cosine_topk_bruteforce(
+    return cosine_topk_bruteforce(
         emb, emb.filter(F.expr(_QUERY_PRED)), id_col="vec_id", k=TOPK
-    )
-    return out.withColumn("rk", F.col("rk").cast("long")).withColumn(
-        "cosine", F.col("cosine") + F.lit(0.0)  # -0.0 → +0.0
     )
 
 
@@ -82,7 +79,7 @@ def q_cosine_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return cosine_topk_quantized(
         emb, emb.filter(F.expr(_QUERY_PRED)), dim=EMB_DIM, k=TOPK
-    ).withColumn("rk", F.col("rk").cast("long"))
+    )
 
 
 _QUANT_TOPK_SQL = f"""
@@ -196,7 +193,7 @@ def q_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table LSH top-k — the recall-improving scale path (union
     of candidates from independent hash tables, scored once)."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = lsh_topk_multiprobe(
+    return lsh_topk_multiprobe(
         emb,
         emb.filter(F.expr(_QUERY_PRED)),
         dim=EMB_DIM,
@@ -204,7 +201,6 @@ def q_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=N_PLANES,
         n_tables=MULTIPROBE_TABLES,
     )
-    return out.withColumn("rk", F.col("rk").cast("long"))
 
 
 def _lsh_multiprobe_sql() -> str:
@@ -300,11 +296,10 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k with the deterministic hyperplane coarse
     quantizer (``ivf_topk_hyperplane``): cells = sign-buckets of
     seeded planes, centroids = exact fixed-point cell means — fully
-    oracle-checkable. The Spark-ML k-means variant (``ivf_topk``)
-    remains library-only (engine-private init); its deterministic
-    replacement with a full oracle is ``ivf_topk_kmeans``."""
+    oracle-checkable. The k-means coarse quantizer with a full oracle
+    is ``ivf_topk_kmeans``."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = ivf_topk_hyperplane(
+    return ivf_topk_hyperplane(
         emb,
         emb.filter(F.expr(_QUERY_PRED)),
         dim=EMB_DIM,
@@ -314,7 +309,6 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed=IVF_SEED,
         scale=IVF_SCALE,
     )
-    return out.withColumn("rk", F.col("rk").cast("long"))
 
 
 KMEANS_K = 8
@@ -1003,7 +997,7 @@ def q_ivf_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, fully oracle-checkable because the index build is
     ``kmeans_fit`` rather than Spark ML's engine-private KMeans."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = ivf_topk_kmeans(
+    return ivf_topk_kmeans(
         emb,
         emb.filter(F.expr(_QUERY_PRED)),
         k=TOPK,
@@ -1012,7 +1006,6 @@ def q_ivf_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=IVF_KMEANS_PROBE,
         scale=IVF_SCALE,
     )
-    return out.withColumn("rk", F.col("rk").cast("long"))
 
 
 def _ivf_kmeans_sql(
@@ -1642,7 +1635,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.expr(_QUERY_PRED)),
         k_pos=HARD_NEG_K_POS,
         k_neg=HARD_NEG_K_NEG,
-    ).withColumn("rk", F.col("rk").cast("long"))
+    )
 
 
 _HARD_NEG_SQL = f"""
@@ -1893,16 +1886,13 @@ FROM embeddings emb LEFT JOIN comp c ON emb.vec_id = c.id
 
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    out = lsh_bucketed_topk(
+    return lsh_bucketed_topk(
         emb,
         emb.filter(F.expr(_QUERY_PRED)),
         dim=EMB_DIM,
         id_col="vec_id",
         k=TOPK,
         n_planes=N_PLANES,
-    )
-    return out.withColumn("rk", F.col("rk").cast("long")).withColumn(
-        "cosine", F.col("cosine") + F.lit(0.0)  # -0.0 → +0.0
     )
 
 

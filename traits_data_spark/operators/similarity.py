@@ -11,7 +11,13 @@ Two tiers, per the standard scale playbook:
   the corpus; only same-bucket (or Hamming-adjacent probe) pairs are
   scored. Shuffle is on the bucket key; this is the 100 TB path.
 
-No Python UDFs: the dot product compiles to a single
+Every method is a candidate generator in front of one shared tail:
+``_cosine_pairs`` scores the candidate pairs (one zero-norm policy, one
+-0.0 policy) and ``_topk`` cuts each query's ranking; the PQ family
+shares ``_adc_table``/``_adc_topk``, and every centroid fit rebuilds
+its centroids with the fixed-point ``_fixed_point_means``.
+
+No Python UDFs in scoring: the dot product compiles to a single
 ``aggregate(zip_with(a, b, (x,y)->x*y), 0D, (acc,x)->acc+x)`` codegen
 expression.
 """
@@ -20,7 +26,7 @@ from __future__ import annotations
 
 import random
 from itertools import combinations
-from typing import Sequence
+from typing import Callable, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -60,6 +66,80 @@ def _maybe_broadcast(df: DataFrame, hint: bool) -> DataFrame:
     return F.broadcast(df) if hint else df
 
 
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str
+) -> DataFrame:
+    """``(id_as, vec_as)`` projection with the vector cast to
+    ``array<double>`` — the input shape of every scorer here."""
+    return df.select(
+        F.col(id_col).alias(id_as),
+        F.col(vec_col).cast("array<double>").alias(vec_as),
+    )
+
+
+def _l2sq(a: Column, b: Column) -> Column:
+    """Squared L2 distance in the inner-product form ``a·a − 2 a·b +
+    b·b``: each term is one left-fold ``dot``, so the oracles'
+    ``list_dot_product`` sums every term in the same order."""
+    return dot(a, a) - F.lit(2.0) * dot(a, b) + dot(b, b)
+
+
+def _cosine_pairs(
+    left: DataFrame,
+    lv: str,
+    right: DataFrame,
+    rv: str,
+    pair: Callable[[DataFrame, DataFrame], DataFrame],
+    round_to: int | None = 6,
+) -> DataFrame:
+    """The one cosine scorer of the module: ``pair(left, right)`` forms
+    the candidate pairs (the only part the ANN methods differ in) and
+    each pair gets ``cosine = round(a·b / (‖a‖·‖b‖), round_to) + 0.0``
+    over ``left``'s vector column ``lv`` and ``right``'s ``rv``.
+
+    Zero-norm (and NULL) vectors are dropped from both sides BEFORE
+    ``pair`` runs: they have no cosine (the division throws under ANSI;
+    0/0 is NaN on IEEE engines and NULL in the oracles), and dropped
+    early they never inflate the pair join. Norms are per-ROW
+    invariants, folded once per row into ``<lv>_n``/``<rv>_n`` instead
+    of once per pair — the same ``l2_norm`` fold, so the quotient is
+    bit-identical to ``cosine``. ``+ 0.0`` turns a −0.0 score into 0.0,
+    as the oracles print it."""
+
+    def normed(df: DataFrame, v: str) -> DataFrame:
+        return df.filter(_norm2(F.col(v)) > 0).withColumn(
+            f"{v}_n", l2_norm(F.col(v))
+        )
+
+    score = dot(F.col(lv), F.col(rv)) / (F.col(f"{lv}_n") * F.col(f"{rv}_n"))
+    if round_to is not None:
+        score = F.round(score, round_to)
+    return pair(normed(left, lv), normed(right, rv)).withColumn(
+        "cosine", score + F.lit(0.0)
+    )
+
+
+def _topk(
+    df: DataFrame,
+    order: Column,
+    k: int | Column,
+    by: Sequence[str] = ("query_id",),
+    tie: str = "neighbor_id",
+) -> DataFrame:
+    """The one per-query rank cut of the module: ``rk`` = row_number
+    over ``by`` ordered by ``order`` then ``tie`` ascending (so ties
+    are deterministic and oracle-reproducible), keeping ``rk <= k``.
+    ``rk`` comes out BIGINT, as every catalog oracle types it; the cast
+    follows the filter so ``rk <= k`` stays a plain row-number bound
+    that Spark's window group limit can push below the exchange."""
+    w = Window.partitionBy(*by).orderBy(order, F.col(tie).asc())
+    return (
+        df.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .withColumn("rk", F.col("rk").cast("long"))
+    )
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -73,43 +153,25 @@ def cosine_topk_bruteforce(
     (self-matches excluded). Query side is broadcast; ties broken by
     neighbor id for determinism.
     """
-    # norms are per-ROW invariants of the |Q|×N pair join: computed
-    # here (one interpreted fold per row) instead of inside the pair
-    # expression (one per pair) — same l2_norm fold on the same cast
-    # array, so the quotient is bit-identical (guide §1.2 step 2)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
     from traits_data_spark.operators.dedup import widen_if_narrow
 
     # widen: the |Q|×N scoring runs in the stream side's scan
     # partitioning (broadcast join — no exchange), so a single-split
     # corpus scan would score every pair on one core
-    c = widen_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        )
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    scored = (
-        c.join(_maybe_broadcast(q, broadcast_queries))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            dot(F.col("__qv"), F.col("__cv"))
-            / (F.col("__qn") * F.col("__cn")),
-        )
+    c = widen_if_narrow(_vectors(corpus, id_col, vec_col, "neighbor_id", "__cv"))
+    q = _vectors(queries, id_col, vec_col, "query_id", "__qv")
+    scored = _cosine_pairs(
+        c,
+        "__cv",
+        q,
+        "__qv",
+        lambda c, q: c.join(_maybe_broadcast(q, broadcast_queries)).filter(
+            F.col("neighbor_id") != F.col("query_id")
+        ),
+        round_to,
     )
-    if round_to is not None:
-        scored = scored.withColumn("cosine", F.round("cosine", round_to))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
+    return _topk(scored, F.col("cosine").desc(), k).select(
+        "query_id", "neighbor_id", "cosine", "rk"
     )
 
 
@@ -154,104 +216,6 @@ def with_lsh_bucket(
     return df.withColumn(out_col, _bucket_expr(v, dim, n_planes, seed))
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    seed: int = 42,
-    max_iter: int = 20,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means partitions the
-    corpus into ``n_centroids`` cells; each query scores only the
-    cells of its ``n_probe`` nearest centroids.
-
-    The 100 TB shape: centroids are fit once (Spark ML k-means over
-    the corpus — at scale, fit on a sample), cell assignment is a
-    model transform (JVM-side), and the probe join shuffles on the
-    small cell id. ``n_probe == n_centroids`` degenerates to exact
-    brute force — the recall knob is explicit. Not SQL-expressible
-    (k-means), so this is a rows-only correctness entry; the recall
-    invariants are pinned by tests instead.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-    )
-    feat = c.withColumn("__f", array_to_vector("__cv"))
-    model = KMeans(
-        k=n_centroids,
-        seed=seed,
-        maxIter=max_iter,
-        featuresCol="__f",
-        predictionCol="__cid",
-    ).fit(feat)
-    assigned = model.transform(feat).select("neighbor_id", "__cv", "__cid")
-
-    centers = [[float(x) for x in cc] for cc in model.clusterCenters()]
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    dist_structs = []
-    for i, cent in enumerate(centers):
-        carr = F.array(*[F.lit(x) for x in cent])
-        d2 = F.aggregate(
-            F.zip_with(F.col("__qv"), carr, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        dist_structs.append(F.struct(d2.alias("d"), F.lit(i).alias("c")))
-    # array_sort on structs is lexicographic: nearest centroids first
-    probes = F.slice(F.array_sort(F.array(*dist_structs)), 1, n_probe)
-    q_probed = q.withColumn(
-        "__cid", F.explode(F.transform(probes, lambda s: s.getField("c")))
-    )
-    # Broadcast the probed-query side: the cell-id join key has only
-    # n_centroids distinct values, so a shuffled join would hash-partition
-    # the whole corpus into k-task parallelism. Broadcasting the (small,
-    # |Q|·n_probe-row) probe table removes the corpus-side Exchange
-    # outright instead of relying on an AQE rescue.
-    scored = (
-        # per-row norms hoisted out of the pair expression (same fold —
-        # bit-identical rounded quotient)
-        assigned.withColumn("__cn", l2_norm(F.col("__cv")))
-        .join(
-            _maybe_broadcast(
-                q_probed.withColumn("__qn", l2_norm(F.col("__qv"))),
-                broadcast_queries,
-            ),
-            "__cid",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            )
-            + F.lit(0.0),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
-
-
 def knn_label_eval(
     corpus: DataFrame,
     queries: DataFrame,
@@ -283,19 +247,10 @@ def knn_label_eval(
         .groupBy("query_id", "__nlabel")
         .agg(F.count(F.lit(1)).alias("votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("votes").desc(), F.col("__nlabel").asc()
-    )
-    majority = (
-        counts.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select(
-            "query_id",
-            F.col("__nlabel").alias("knn_label"),
-            (F.col("votes").cast("double") / F.lit(float(k))).alias(
-                "agreement"
-            ),
-        )
+    majority = _topk(counts, F.col("votes").desc(), 1, tie="__nlabel").select(
+        "query_id",
+        F.col("__nlabel").alias("knn_label"),
+        (F.col("votes").cast("double") / F.lit(float(k))).alias("agreement"),
     )
     own = queries.select(
         F.col(id_col).alias("query_id"), F.col(label_col).alias("__qlabel")
@@ -465,13 +420,8 @@ def cosine_topk_quantized(
             "cosine_q", F.round(dot_hat / (F.sqrt(cn) * F.sqrt(qn)), round_to)
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine_q", "rk")
+    return _topk(scored, F.col("cosine_q").desc(), k).select(
+        "query_id", "neighbor_id", "cosine_q", "rk"
     )
 
 
@@ -495,8 +445,9 @@ def ivf_topk_hyperplane(
     centroid is the exact mean of its member vectors, computed in
     fixed-point (``round(x*scale)`` summed as BIGINT) so the mean is
     independent of partitioning/summation order — that makes the whole
-    operator reproducible on any engine, unlike k-means
-    (``ivf_topk``), and therefore oracle-checkable.
+    operator reproducible on any engine (``ivf_topk_kmeans`` gets the
+    same property from the hash-seeded ``kmeans_fit``), and therefore
+    oracle-checkable.
 
     The 100 TB shape: one shuffle to build the (≤2^n_planes · dim)-row
     centroid table, which is then broadcast; queries rank centroids by
@@ -506,87 +457,35 @@ def ivf_topk_hyperplane(
     exact brute force.
     """
     c = with_lsh_bucket(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        ),
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "__cv"),
         "__cv",
         dim,
         n_planes,
         seed,
     )
-    # exact fixed-point per-component mean per bucket
-    comp = (
-        c.select("bucket", F.posexplode("__cv").alias("pos", "x"))
-        .groupBy("bucket", "pos")
-        .agg(
-            F.sum(F.round(F.col("x") * scale).cast("long")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "bucket",
-            "pos",
-            (F.col("s").cast("double") / (F.lit(float(scale)) * F.col("n"))).alias(
-                "comp"
-            ),
-        )
-    )
-    centroids = comp.groupBy("bucket").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "comp"))),
-            lambda s: s.getField("comp"),
-        ).alias("__centv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    # L2² via the inner-product identity so Spark's fold and the
-    # oracle's list_dot_product sum in the same order per term
-    d2 = (
-        dot(F.col("__qv"), F.col("__qv"))
-        - F.lit(2.0) * dot(F.col("__qv"), F.col("__centv"))
-        + dot(F.col("__centv"), F.col("__centv"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("__d2").asc(), F.col("bucket").asc()
-    )
-    q_probed = (
-        q.join(F.broadcast(centroids))
-        .withColumn("__d2", d2)
-        .withColumn("__prk", F.row_number().over(wp))
-        .filter(F.col("__prk") <= n_probe)
-        .select("query_id", "__qv", "bucket")
-    )
-    # zero-norm vectors cannot be cosine-scored (0/0: NULL on Spark,
-    # NaN on IEEE engines) — drop them before the pair join, mirrored
-    # by the oracle's norm guard
+    centroids = _fixed_point_means(c, ["bucket"], "__cv", scale)
+    q_probed = _topk(
+        _vectors(queries, id_col, vec_col, "query_id", "__qv")
+        .join(F.broadcast(centroids))
+        .withColumn("__d2", _l2sq(F.col("__qv"), F.col("__centv"))),
+        F.col("__d2").asc(),
+        n_probe,
+        tie="bucket",
+    ).select("query_id", "__qv", "bucket")
     # Broadcast the probed-query side: "bucket" has at most 2^n_planes
     # distinct values, so a shuffled join would hash-partition the whole
     # corpus into that many tasks; broadcasting the (|Q|·n_probe)-row
     # probe table removes the corpus-side Exchange outright.
-    scored = (
-        c.filter(_norm2(F.col("__cv")) > 0)
-        .join(
-            _maybe_broadcast(
-                q_probed.filter(_norm2(F.col("__qv")) > 0),
-                broadcast_queries,
-            ),
-            "bucket",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6) + F.lit(0.0),
-        )
+    scored = _cosine_pairs(
+        c,
+        "__cv",
+        q_probed,
+        "__qv",
+        lambda c, q: c.join(_maybe_broadcast(q, broadcast_queries), "bucket")
+        .filter(F.col("neighbor_id") != F.col("query_id")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
+    return _topk(scored, F.col("cosine").desc(), k).select(
+        "query_id", "neighbor_id", "cosine", "rk"
     )
 
 
@@ -713,14 +612,8 @@ def lsh_topk_multiprobe(
     32 tables and 41% scored for a lower 0.83 (tools/tune_ann.py
     ladder, SCALE.md round 10).
     """
-    c_ids = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-    )
-    q_ids = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
+    c_ids = _vectors(corpus, id_col, vec_col, "neighbor_id", "__cv")
+    q_ids = _vectors(queries, id_col, vec_col, "query_id", "__qv")
 
     # melt: one (id, table_idx, bucket) row per table, then ONE join on
     # the composite key — same candidate set as per-table joins+union,
@@ -764,33 +657,18 @@ def lsh_topk_multiprobe(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .distinct()
     )
-    scored = (
-        # per-row norms hoisted out of the per-candidate expression
-        # (same fold — bit-identical rounded quotient)
-        cands.join(
-            c_ids.withColumn("__cn", l2_norm(F.col("__cv"))), "neighbor_id"
-        )
-        .join(
-            F.broadcast(q_ids.withColumn("__qn", l2_norm(F.col("__qv")))),
-            "query_id",
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            )
-            + F.lit(0.0),
-        )
+    # the vectors join back once, onto the deduplicated id pairs
+    scored = _cosine_pairs(
+        c_ids,
+        "__cv",
+        q_ids,
+        "__qv",
+        lambda c, q: cands.join(c, "neighbor_id").join(
+            F.broadcast(q), "query_id"
+        ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
+    return _topk(scored, F.col("cosine").desc(), k).select(
+        "query_id", "neighbor_id", "cosine", "rk"
     )
 
 
@@ -818,12 +696,7 @@ def embedding_near_dups(
     # widen BEFORE bucketing: the n_planes signature dots are map-side
     # per-row compute on the scan's partitioning
     b = with_lsh_bucket(
-        widen_if_narrow(
-            df.select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).cast("array<double>").alias("__v"),
-            )
-        ),
+        widen_if_narrow(_vectors(df, id_col, vec_col, "id", "__v")),
         "__v",
         dim,
         n_planes,
@@ -851,58 +724,31 @@ def keyed_near_dups(
     one), or any other co-location key. Returns ``(id_a, id_b,
     cosine)`` with ``id_a < id_b``; NULL keys pair with nothing (an
     unkeyed row has no locality group)."""
-    b = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-            F.col(key_col).alias("__k"),
-        )
-        .filter(_norm2(F.col("__v")) > 0)  # zero-norm vectors have no
-        # cosine: under ANSI the division throws, and NaN >= threshold
-        # is TRUE on Spark but the oracle's x/0.0 is NULL — same guard
-        # as the IVF scorers
-        # per-row l2 norm hoisted out of the within-key pair join: one
-        # interpreted fold per ROW, not per PAIR; same fold on the same
-        # array, so the rounded quotient is bit-identical
-        .withColumn("__n", l2_norm(F.col("__v")))
+    b = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.col(key_col).alias("__k"),
     )
-    left = b.select(
-        F.col("id").alias("id_a"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-        "__k",
-    )
-    right = b.select(
-        F.col("id").alias("id_b"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-        "__k",
-    )
-    pairs = (
-        # shuffle-hash, not sort-merge: the pair join's output is
-        # quadratic within keys, so the planner's sorts buy nothing —
-        # hash-build the right side per partition (guide §3.1).
-        # Build-side memory bound: the hash relation holds every member
-        # of every key hashed into that partition, so ONE hot locality
-        # key's full member set must fit in task memory; with a key
-        # that skewed the quadratic pair OUTPUT (|members|² rows) is
-        # the job-killer long before the build side is — cap or salt
-        # the key upstream rather than switching this join back to
-        # sort-merge (which would spill the build but still emit the
-        # quadratic pairs).
-        left.join(right.hint("shuffle_hash"), "__k")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                round_to,
-            )
-            + F.lit(0.0),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    # shuffle-hash, not sort-merge: the pair join's output is quadratic
+    # within keys, so the planner's sorts buy nothing — hash-build the
+    # right side per partition (guide §3.1). Build-side memory bound:
+    # the hash relation holds every member of every key hashed into
+    # that partition, so ONE hot locality key's full member set must
+    # fit in task memory; with a key that skewed the quadratic pair
+    # OUTPUT (|members|² rows) is the job-killer long before the build
+    # side is — cap or salt the key upstream rather than switching this
+    # join back to sort-merge (which would spill the build but still
+    # emit the quadratic pairs).
+    pairs = _cosine_pairs(
+        b.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"), "__k"),
+        "__va",
+        b.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"), "__k"),
+        "__vb",
+        lambda l, r: l.join(r.hint("shuffle_hash"), "__k").filter(
+            F.col("id_a") < F.col("id_b")
+        ),
+        round_to,
+    ).filter(F.col("cosine") >= threshold)
     return pairs.select("id_a", "id_b", "cosine")
 
 
@@ -939,19 +785,8 @@ def all_pairs_cosine(
     """
     if n_blocks < 1:
         raise ValueError(f"n_blocks must be >= 1, got {n_blocks}")
-    b = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-        .filter(_norm2(F.col("__v")) > 0)
-        .withColumn(
-            "__blk", F.pmod(F.col("id").cast("long"), F.lit(int(n_blocks)))
-        )
-        # per-row norm rides the n_blocks-way replication (8 bytes/row)
-        # so the O(N²) pair expression folds ONCE per pair, not thrice;
-        # same l2_norm fold — the rounded quotient is bit-identical
-        .withColumn("__n", l2_norm(F.col("__v")))
+    b = _vectors(df, id_col, vec_col, "id", "__v").withColumn(
+        "__blk", F.pmod(F.col("id").cast("long"), F.lit(int(n_blocks)))
     )
     keys = F.transform(
         F.sequence(F.lit(0), F.lit(int(n_blocks) - 1)),
@@ -960,9 +795,7 @@ def all_pairs_cosine(
             F.greatest(F.col("__blk"), x.cast("long")).alias("j"),
         ),
     )
-    rep = b.select(
-        "id", "__v", "__n", "__blk", F.explode(keys).alias("__bp")
-    )
+    rep = b.select("id", "__v", "__blk", F.explode(keys).alias("__bp"))
     # the probe side is small enough to broadcast, so WITHOUT an
     # explicit exchange the join executes in the stream side's scan
     # partitioning — a single-row-group parquet sample = ONE task,
@@ -982,39 +815,31 @@ def all_pairs_cosine(
     left = rep.repartition(n_parts, F.col("__bp")).select(
         F.col("id").alias("id_a"),
         F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
         F.col("__blk").alias("__ba"),
         "__bp",
     )
     right = rep.select(
         F.col("id").alias("id_b"),
         F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
         F.col("__blk").alias("__bb"),
         "__bp",
     )
-    pairs = (
-        # shuffle-hash as in keyed_near_dups: no sort before a
-        # quadratic-output block-pair join
-        left.join(right.hint("shuffle_hash"), "__bp")
-        .filter(
+    # shuffle-hash as in keyed_near_dups: no sort before a
+    # quadratic-output block-pair join
+    pairs = _cosine_pairs(
+        left,
+        "__va",
+        right,
+        "__vb",
+        lambda l, r: l.join(r.hint("shuffle_hash"), "__bp").filter(
             (F.col("id_a") < F.col("id_b"))
             & (
                 (F.col("__bp.i") == F.col("__bp.j"))
                 | (F.col("__ba") != F.col("__bb"))
             )
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                round_to,
-            )
-            + F.lit(0.0),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+        ),
+        round_to,
+    ).filter(F.col("cosine") >= threshold)
     return pairs.select("id_a", "id_b", "cosine")
 
 
@@ -1037,10 +862,7 @@ def hyperplane_bucket_index(
     re-reads the original embedding table.
     """
     return with_lsh_bucket(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("embedding"),
-        ),
+        _vectors(df, id_col, vec_col, "id", "embedding"),
         "embedding",
         dim,
         n_planes,
@@ -1090,34 +912,20 @@ def incremental_embedding_near_dups(
     all_idx = existing_index.select("id", "bucket", "embedding").unionByName(
         new_idx
     )
-    left = new_idx.select(
-        F.col("id").alias("id_a"), F.col("embedding").alias("__va"), "bucket"
-    )
-    right = all_idx.select(
-        F.col("id").alias("id_b"), F.col("embedding").alias("__vb"), "bucket"
-    )
-    pairs = (
-        # per-row norms hoisted out of the pair expression (same fold —
-        # bit-identical rounded quotient)
-        right.withColumn("__nb", l2_norm(F.col("__vb")))
-        .join(
-            F.broadcast(left.withColumn("__na", l2_norm(F.col("__va"))))
-            if broadcast_new
-            else left.withColumn("__na", l2_norm(F.col("__va"))),
-            "bucket",
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                round_to,
-            )
-            + F.lit(0.0),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    pairs = _cosine_pairs(
+        new_idx.select(
+            F.col("id").alias("id_a"), F.col("embedding").alias("__va"), "bucket"
+        ),
+        "__va",
+        all_idx.select(
+            F.col("id").alias("id_b"), F.col("embedding").alias("__vb"), "bucket"
+        ),
+        "__vb",
+        lambda l, r: r.join(_maybe_broadcast(l, broadcast_new), "bucket").filter(
+            F.col("id_a") != F.col("id_b")
+        ),
+        round_to,
+    ).filter(F.col("cosine") >= threshold)
     # new×new pairs arrive in both orientations; cosine is orientation-
     # independent bit-for-bit (same fold order, commutative products),
     # so distinct() collapses them exactly
@@ -1161,10 +969,7 @@ def semantic_decontaminate(
     n_matches)``.
     """
     c = with_lsh_bucket(
-        corpus_vecs.select(
-            F.col(id_col).alias(id_col),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        ),
+        _vectors(corpus_vecs, id_col, vec_col, id_col, "__cv"),
         "__cv",
         dim,
         n_planes,
@@ -1175,28 +980,25 @@ def semantic_decontaminate(
         "bucket",
         F.col("embedding").alias("__ev"),
     )
-    hits = (
-        c.join(F.broadcast(e), "bucket")
-        .withColumn(
-            "cosine",
-            F.round(cosine(F.col("__cv"), F.col("__ev")), round_to)
-            + F.lit(0.0),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    hits = _cosine_pairs(
+        c,
+        "__cv",
+        e,
+        "__ev",
+        lambda c, e: c.join(F.broadcast(e), "bucket"),
+        round_to,
+    ).filter(F.col("cosine") >= threshold)
     # flagged rows only (a small fraction of the corpus by contract),
     # so the best-match window shuffles a frame bounded by the
     # contamination rate, not the corpus
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cosine").desc(), F.col("eval_id").asc()
-    )
     nw = Window.partitionBy(id_col)
-    return (
-        hits.withColumn("n_matches", F.count(F.lit(1)).over(nw))
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select(id_col, "eval_id", "cosine", "n_matches")
-    )
+    return _topk(
+        hits.withColumn("n_matches", F.count(F.lit(1)).over(nw)),
+        F.col("cosine").desc(),
+        1,
+        by=(id_col,),
+        tie="eval_id",
+    ).select(id_col, "eval_id", "cosine", "n_matches")
 
 
 def lsh_bucketed_topk(
@@ -1215,55 +1017,31 @@ def lsh_bucketed_topk(
     is the building block.
     """
     cb = with_lsh_bucket(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        ),
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "__cv"),
         "__cv",
         dim,
         n_planes,
         seed,
     )
     qb = with_lsh_bucket(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("__qv"),
-        ),
+        _vectors(queries, id_col, vec_col, "query_id", "__qv"),
         "__qv",
         dim,
         n_planes,
         seed,
     )
     # "bucket" has at most 2^n_planes distinct values — broadcast the
-    # query side so the corpus never hash-partitions on it. Norms are
-    # hoisted per row out of the per-pair expression (same fold —
-    # bit-identical quotient).
-    scored = (
-        cb.withColumn("__cn", l2_norm(F.col("__cv")))
-        .join(
-            _maybe_broadcast(
-                qb.withColumn("__qn", l2_norm(F.col("__qv"))),
-                broadcast_queries,
-            ),
-            "bucket",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            ),
-        )
+    # query side so the corpus never hash-partitions on it
+    scored = _cosine_pairs(
+        cb,
+        "__cv",
+        qb,
+        "__qv",
+        lambda c, q: c.join(_maybe_broadcast(q, broadcast_queries), "bucket")
+        .filter(F.col("neighbor_id") != F.col("query_id")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
+    return _topk(scored, F.col("cosine").desc(), k).select(
+        "query_id", "neighbor_id", "cosine", "rk"
     )
 
 
@@ -1351,6 +1129,31 @@ def _kmeans_dist_ranked_grouped(
     )
 
 
+def _fixed_point_means(
+    df: DataFrame, keys: list[str], vec: str, scale: int
+) -> DataFrame:
+    """The one centroid rebuild: per ``keys`` group, the per-component
+    mean of the ``vec`` arrays in fixed point — ``round(x*scale)``
+    summed as BIGINT, so the mean does not depend on partitioning or
+    summation order and any engine reproduces it exactly. Returns
+    ``(*keys, __centv)``."""
+    comp = (
+        df.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(
+            F.sum(F.round(F.col("x") * scale).cast("long")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+    mean = F.col("s").cast("double") / (F.lit(float(scale)) * F.col("n"))
+    return comp.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", mean.alias("comp")))),
+            lambda s: s.getField("comp"),
+        ).alias("__centv")
+    )
+
+
 def _local_centroids(spark, rows) -> DataFrame:
     """(cid, __centv) rows → a literal centroid table — the
     bounded-model-artifact bridge of the driver-iterated Lloyd fits
@@ -1383,7 +1186,6 @@ def kmeans_fit_grouped(
     k: int = 8,
     n_iter: int = 2,
     scale: int = 1_000_000,
-    checkpoint: bool = True,
     seed_ids: Sequence | None = None,
 ) -> DataFrame:
     """Fit ONE deterministic Lloyd k-means PER GROUP in a single plan
@@ -1408,8 +1210,7 @@ def kmeans_fit_grouped(
     (groups × k)-row centroid result is collected (bounded model
     artifact) and re-embedded as a literal ``LocalRelation``, so no
     iteration ever nests inside another's broadcast and downstream
-    consumers see a literal codebook. ``checkpoint`` is kept for API
-    compatibility and ignored.
+    consumers see a literal codebook.
 
     ``seed_ids`` (ordered, rank = cid) skips the per-group seeding
     window entirely: when every group contains the same id set —
@@ -1459,41 +1260,14 @@ def kmeans_fit_grouped(
         ]
     centroids = _local_grouped_centroids(spark, grp_type, seed_tuples)
     for _ in range(n_iter):
-        assigned = (
-            _kmeans_dist_ranked_grouped(v, centroids)
-            .withColumn("__best", F.element_at(F.col("__ranked"), 1))
-            .select("__grp", "__id", "__v", F.col("__best.cid").alias("cid"))
+        assigned = _kmeans_dist_ranked_grouped(v, centroids).select(
+            "__grp",
+            "__v",
+            F.element_at(F.col("__ranked"), 1).getField("cid").alias("cid"),
         )
-        comp = (
-            assigned.select(
-                "__grp", "cid", F.posexplode("__v").alias("pos", "x")
-            )
-            .groupBy("__grp", "cid", "pos")
-            .agg(
-                F.sum(F.round(F.col("x") * scale).cast("long")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-        new_rows = (
-            comp.groupBy("__grp", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "pos",
-                                (
-                                    F.col("s").cast("double")
-                                    / (F.lit(float(scale)) * F.col("n"))
-                                ).alias("comp"),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("comp"),
-                ).alias("__centv")
-            )
-            .collect()
-        )
+        new_rows = _fixed_point_means(
+            assigned, ["__grp", "cid"], "__v", scale
+        ).collect()
         centroids = _local_grouped_centroids(
             spark,
             grp_type,
@@ -1526,7 +1300,6 @@ def kmeans_fit(
     k: int = 8,
     n_iter: int = 2,
     scale: int = 1_000_000,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Deterministic Lloyd k-means fit → ``(cid, __centv)`` centroid
     table, exactly reproducible by a SQL oracle (unlike Spark ML's
@@ -1546,9 +1319,8 @@ def kmeans_fit(
     ``localCheckpoint`` that cost one job per broadcast barrier plus
     quadratic plan re-analysis — 35 jobs / 8.5 s of driver time for
     ``ivfpq_topk`` at sf0.1, stage-profiled round 16.) The call is
-    eager: the fit runs at DataFrame-construction time. ``checkpoint``
-    is kept for API compatibility and ignored — a LocalRelation is
-    inherently materialized and holds no executor storage.
+    eager: the fit runs at DataFrame-construction time; a LocalRelation
+    is inherently materialized and holds no executor storage.
 
     Seeds are the ``k`` vectors with the smallest portable 60-bit hash
     of their id (a deterministic stand-in for k-means++ sampling);
@@ -1570,12 +1342,7 @@ def kmeans_fit(
     spark = df.sparkSession
     # widen: each Lloyd step re-scans this projection, and a narrow
     # (single-split) input serializes every iteration onto one core
-    v = widen_if_narrow(
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-    )
+    v = widen_if_narrow(_vectors(df, id_col, vec_col, "__id", "__v"))
     # seeding: global top-k by (hash, id) — TakeOrderedAndProject, no
     # full sort; the k rows come back in rank order, re-sorted
     # driver-side by the same keys for belt-and-braces determinism
@@ -1590,38 +1357,10 @@ def kmeans_fit(
         spark, [(i, list(r["__v"])) for i, r in enumerate(seed_rows)]
     )
     for _ in range(n_iter):
-        assigned = _kmeans_assign(v, centroids)
-        comp = (
-            assigned.select("cid", F.posexplode("__v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(
-                F.sum(F.round(F.col("x") * scale).cast("long")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-        # same fixed-point mean expressions as ever; only the
-        # materialization changed (collect k rows vs checkpoint) —
-        # doubles round-trip the driver bit-exactly (IEEE 754)
-        new_rows = (
-            comp.groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "pos",
-                                (
-                                    F.col("s").cast("double")
-                                    / (F.lit(float(scale)) * F.col("n"))
-                                ).alias("comp"),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("comp"),
-                ).alias("__centv")
-            )
-            .collect()
-        )
+        # k rows to the driver: doubles round-trip it bit-exactly
+        new_rows = _fixed_point_means(
+            _kmeans_assign(v, centroids), ["cid"], "__v", scale
+        ).collect()
         centroids = _local_centroids(
             spark, [(int(r["cid"]), list(r["__centv"])) for r in new_rows]
         )
@@ -1641,12 +1380,7 @@ def kmeans_clusters(
     ``kmeans_fit`` for the determinism and scale contract."""
     from traits_data_spark.operators.dedup import widen_if_narrow
 
-    v = widen_if_narrow(
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-    )
+    v = widen_if_narrow(_vectors(df, id_col, vec_col, "__id", "__v"))
     centroids = kmeans_fit(
         df, id_col=id_col, vec_col=vec_col, k=k, n_iter=n_iter, scale=scale
     )
@@ -1688,12 +1422,7 @@ def kmeans_clusters_topm(
         raise ValueError(f"m must be >= 1, got {m}")
     from traits_data_spark.operators.dedup import widen_if_narrow
 
-    v = widen_if_narrow(
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-    )
+    v = widen_if_narrow(_vectors(df, id_col, vec_col, "__id", "__v"))
     centroids = kmeans_fit(
         df, id_col=id_col, vec_col=vec_col, k=k, n_iter=n_iter, scale=scale
     )
@@ -1731,8 +1460,8 @@ def ivf_topk_kmeans(
     quantizer — the classic FAISS IVF-Flat shape, but oracle-checkable:
     cells come from ``kmeans_fit`` (hash-seeded Lloyd, fixed-point
     means), so the whole index build + probe + score pipeline is
-    reproducible bit-for-bit by a SQL engine, unlike the Spark ML
-    variant (``ivf_topk``).
+    reproducible bit-for-bit by a SQL engine, unlike Spark ML's
+    ``KMeans`` (sampled init, engine-private reduction order).
 
     Scale shape (100 TB): the centroid fit never shuffles the corpus
     (see ``kmeans_fit``); cell assignment is the same broadcast map;
@@ -1756,76 +1485,37 @@ def ivf_topk_kmeans(
         )
     from traits_data_spark.operators.dedup import widen_if_narrow
 
-    c = widen_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        )
-    )
     assigned = _kmeans_assign(
-        c.select(F.col("neighbor_id").alias("__id"), F.col("__cv").alias("__v")),
+        widen_if_narrow(_vectors(corpus, id_col, vec_col, "__id", "__v")),
         centroids,
     ).select(
         F.col("__id").alias("neighbor_id"),
         F.col("__v").alias("__cv"),
         F.col("cid").alias("__cid"),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
     # rank centroids per query on the same rounded L2², probe the
     # n_probe nearest cells
-    d2 = (
-        dot(F.col("__qv"), F.col("__qv"))
-        - F.lit(2.0) * dot(F.col("__qv"), F.col("__centv"))
-        + dot(F.col("__centv"), F.col("__centv"))
+    q_probed = _topk(
+        _vectors(queries, id_col, vec_col, "query_id", "__qv")
+        .join(F.broadcast(centroids.withColumnRenamed("cid", "__cid")))
+        .withColumn("__d2", F.round(_l2sq(F.col("__qv"), F.col("__centv")), 6)),
+        F.col("__d2").asc(),
+        n_probe,
+        tie="__cid",
+    ).select("query_id", "__qv", "__cid")
+    # Broadcast the probed-query side: __cid has only n_centroids
+    # distinct values, so a shuffled join would funnel the corpus into
+    # k tasks; broadcasting removes the corpus-side Exchange.
+    scored = _cosine_pairs(
+        assigned,
+        "__cv",
+        q_probed,
+        "__qv",
+        lambda c, q: c.join(_maybe_broadcast(q, broadcast_queries), "__cid")
+        .filter(F.col("neighbor_id") != F.col("query_id")),
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("__d2").asc(), F.col("__cid").asc()
-    )
-    q_probed = (
-        q.join(F.broadcast(centroids.withColumnRenamed("cid", "__cid")))
-        .withColumn("__d2", F.round(d2, 6))
-        .withColumn("__prk", F.row_number().over(wp))
-        .filter(F.col("__prk") <= n_probe)
-        .select("query_id", "__qv", "__cid")
-    )
-    # Broadcast the probed-query side (see ivf_topk): __cid has only
-    # n_centroids distinct values, so a shuffled join would funnel the
-    # corpus into k tasks; broadcasting removes the corpus-side Exchange.
-    # per-row norms hoisted out of the pair expression (one fold per
-    # row, not per pair; same fold — bit-identical quotient)
-    scored = (
-        assigned.filter(_norm2(F.col("__cv")) > 0)
-        .withColumn("__cn", l2_norm(F.col("__cv")))
-        .join(
-            _maybe_broadcast(
-                q_probed.filter(_norm2(F.col("__qv")) > 0).withColumn(
-                    "__qn", l2_norm(F.col("__qv"))
-                ),
-                broadcast_queries,
-            ),
-            "__cid",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            )
-            + F.lit(0.0),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
+    return _topk(scored, F.col("cosine").desc(), k).select(
+        "query_id", "neighbor_id", "cosine", "rk"
     )
 
 
@@ -1899,13 +1589,7 @@ def pq_fit(
     # runs ONE lazy chain with ONE checkpoint. Codebooks are
     # bit-identical (see kmeans_fit_grouped).
     melted = src.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.slice(v, s * sub + 1, sub),
-            )
-        ).alias("__sub", "__sv"),
+        F.col(id_col), F.posexplode(_subspaces(v, m, sub)).alias("__sub", "__sv")
     )
     # every subspace group holds the SAME id set, so the per-group
     # seed ranking equals the global (hash, id) top-k — computed once
@@ -1959,12 +1643,7 @@ def pq_encode(
     # subtree and one broadcast of the packed (m × k)-row codebook
     melted = src.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.slice(v, s * sub + 1, sub),
-            )
-        ).alias("__grp", "__v"),
+        F.posexplode(_subspaces(v, m, sub)).alias("__grp", "__v"),
     )
     cb = codebooks.select(
         F.col("sub").alias("__grp"), "cid", F.col("cvec").alias("__centv")
@@ -1977,6 +1656,99 @@ def pq_encode(
             F.col("__grp").cast("int").alias("sub"),
             F.col("__best.cid").alias("code"),
         )
+    )
+
+
+def _subspaces(v: Column, m: int, sub: int) -> Column:
+    """``v`` split into its ``m`` contiguous ``sub``-wide subvectors,
+    as one array — ``posexplode`` it for the (subspace, subvector) melt
+    the PQ family fits, encodes and scores on."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: F.slice(v, s * sub + 1, sub),
+    )
+
+
+def _adc_table(
+    q: DataFrame,
+    keys: list[str],
+    qv: str,
+    codebooks: DataFrame,
+    m: int,
+    sub: int,
+) -> DataFrame:
+    """Query-side ADC distance table ``(query_id, *keys, sub, code,
+    __d2_micro)``: each ``q`` row's vector ``qv`` melted into its ``m``
+    subvectors with ONE ``posexplode`` (an m-way ``unionByName`` would
+    re-scan ``q`` m times) and scored against every centroid of its
+    subspace's ``codebooks`` in INTEGER micro-units
+    (``round(d2 · 10⁶)`` as BIGINT), so the m-way sum downstream is
+    order-independent — a plain double sum across a shuffle would
+    round differently per execution and could never hash-match an
+    oracle."""
+    return (
+        q.select(
+            "query_id",
+            *keys,
+            F.posexplode(_subspaces(F.col(qv), m, sub)).alias("sub", "__qs"),
+        )
+        .join(codebooks, "sub")
+        .select(
+            "query_id",
+            *keys,
+            "sub",
+            F.col("cid").alias("code"),
+            F.round(_l2sq(F.col("__qs"), F.col("cvec")) * F.lit(1_000_000.0))
+            .cast("long")
+            .alias("__d2_micro"),
+        )
+    )
+
+
+def _adc_topk(
+    codes: DataFrame,
+    qtab: DataFrame,
+    keys: list[str],
+    k: int,
+    rerank: int | None,
+    vectors: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The PQ family's one ADC + exact re-rank tail. ``codes`` (one
+    ``(neighbor_id, *keys)`` row per corpus vector and subspace) joins
+    the ``_adc_table`` ``qtab`` (broadcast-hinted by the caller) on
+    ``keys``; each pair's distance is the sum of its per-subspace
+    integer micro-distances, ranked ascending (ties → neighbor_id):
+    ``(query_id, neighbor_id, approx_d2_micro, rk)``. With
+    ``rerank=R`` only the top R candidates per query fetch their
+    full-precision vectors from ``vectors`` (``id_col``/``vec_col``)
+    and are re-ranked by exact L2 (6 dp): ``(query_id, neighbor_id,
+    d2, rk)``."""
+    paired = (
+        codes.join(qtab, keys)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("__d2_micro").cast("long").alias("approx_d2_micro"))
+    )
+    adc = F.col("approx_d2_micro").asc()
+    if rerank is None:
+        return _topk(paired, adc, k).select(
+            "query_id", "neighbor_id", "approx_d2_micro", "rk"
+        )
+    exact = (
+        _topk(paired, adc, int(rerank))
+        .select("query_id", "neighbor_id")
+        .join(_vectors(vectors, id_col, vec_col, "neighbor_id", "__cv"), "neighbor_id")
+        .join(
+            F.broadcast(_vectors(queries, id_col, vec_col, "query_id", "__qv")),
+            "query_id",
+        )
+        .withColumn("d2", F.round(_l2sq(F.col("__qv"), F.col("__cv")), 6) + F.lit(0.0))
+    )
+    return _topk(exact, F.col("d2").asc(), k).select(
+        "query_id", "neighbor_id", "d2", "rk"
     )
 
 
@@ -2036,81 +1808,17 @@ def pq_topk(
         base, codebooks, dim, m=m, id_col=id_col, vec_col=vec_col,
         materialize=False,
     ).withColumnRenamed(id_col, "neighbor_id")
-    sub = dim // m
-    qv = F.col(vec_col).cast("array<double>")
-    d2 = (
-        dot(F.col("__qv"), F.col("__qv"))
-        - F.lit(2.0) * dot(F.col("__qv"), F.col("cvec"))
-        + dot(F.col("cvec"), F.col("cvec"))
+    qtab = _adc_table(
+        _vectors(queries, id_col, vec_col, "query_id", "__qv"),
+        [],
+        "__qv",
+        codebooks,
+        m,
+        dim // m,
     )
-    # melt queries to (query_id, sub, subvector) with ONE posexplode —
-    # an m-way unionByName here re-scans the queries input m times
-    # (the residue of round 10's 34-scan audit after the corpus base
-    # was persisted)
-    qmelt = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.slice(qv, s * sub + 1, sub),
-            )
-        ).alias("sub", "__qv"),
-    )
-    qtab = (
-        qmelt.join(codebooks, "sub")
-        .select(
-            "query_id",
-            "sub",
-            F.col("cid").alias("code"),
-            F.round(d2 * F.lit(1_000_000.0))
-            .cast("long")
-            .alias("__d2_micro"),
-        )
-    )
-    paired = (
-        codes.join(F.broadcast(qtab), ["sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("__d2_micro").cast("long").alias("approx_d2_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2_micro").asc(), F.col("neighbor_id").asc()
-    )
-    if rerank is None:
-        return (
-            paired.withColumn("rk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "neighbor_id", "approx_d2_micro", "rk")
-        )
-    cands = (
-        paired.withColumn("__ark", F.row_number().over(w))
-        .filter(F.col("__ark") <= int(rerank))
-        .select("query_id", "neighbor_id")
-    )
-    cvecs = base.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-    )
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    exact_d2 = F.round(
-        dot(F.col("__qv"), F.col("__qv"))
-        - F.lit(2.0) * dot(F.col("__qv"), F.col("__cv"))
-        + dot(F.col("__cv"), F.col("__cv")),
-        6,
-    ) + F.lit(0.0)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.join(cvecs, "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .withColumn("d2", exact_d2)
-        .withColumn("rk", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "d2", "rk")
+    return _adc_topk(
+        codes, F.broadcast(qtab), ["sub", "code"], k, rerank, base, queries,
+        id_col, vec_col,
     )
 
 
@@ -2172,12 +1880,7 @@ def ivfpq_topk(
 
     # widen: the cell assignment + residual build is per-row compute
     # over a broadcast join — a single-split scan runs it on one core
-    c = widen_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-    )
+    c = widen_if_narrow(_vectors(corpus, id_col, vec_col, "__id", "__v"))
     assigned = _kmeans_assign(c, centroids)
     cents = centroids.select(
         F.col("cid"), F.col("__centv").alias("__cellv")
@@ -2216,101 +1919,31 @@ def ivfpq_topk(
     )
     # queries rank the broadcast cell centroids, probe n_probe cells,
     # and move to residual space vs each probed cell
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    d2c = (
-        dot(F.col("__qv"), F.col("__qv"))
-        - F.lit(2.0) * dot(F.col("__qv"), F.col("__cellv"))
-        + dot(F.col("__cellv"), F.col("__cellv"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("__d2").asc(), F.col("cell").asc()
-    )
-    q_probed = (
-        q.join(F.broadcast(cents.withColumnRenamed("cid", "cell")))
-        .withColumn("__d2", F.round(d2c, 6))
-        .withColumn("__prk", F.row_number().over(wp))
-        .filter(F.col("__prk") <= n_probe)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with(
-                F.col("__qv"), F.col("__cellv"), lambda a, b: a - b
-            ).alias("__qr"),
-        )
-    )
-    d2t = (
-        dot(F.col("__qs"), F.col("__qs"))
-        - F.lit(2.0) * dot(F.col("__qs"), F.col("cvec"))
-        + dot(F.col("cvec"), F.col("cvec"))
-    )
-    qsubs = []
-    for s in range(m):
-        qsubs.append(
-            q_probed.select(
-                "query_id",
-                "cell",
-                F.lit(s).alias("sub"),
-                F.slice(F.col("__qr"), s * sub + 1, sub).alias("__qs"),
-            )
-        )
-    qmelt = qsubs[0]
-    for qd in qsubs[1:]:
-        qmelt = qmelt.unionByName(qd)
-    qtab = qmelt.join(books, "sub").select(
+    q_probed = _topk(
+        _vectors(queries, id_col, vec_col, "query_id", "__qv")
+        .join(F.broadcast(cents.withColumnRenamed("cid", "cell")))
+        .withColumn("__d2", F.round(_l2sq(F.col("__qv"), F.col("__cellv")), 6)),
+        F.col("__d2").asc(),
+        n_probe,
+        tie="cell",
+    ).select(
         "query_id",
         "cell",
-        "sub",
-        F.col("cid").alias("code"),
-        F.round(d2t * F.lit(1_000_000.0)).cast("long").alias("__d2_micro"),
+        F.zip_with(F.col("__qv"), F.col("__cellv"), lambda a, b: a - b).alias(
+            "__qr"
+        ),
     )
-    paired = (
-        codes.join(_maybe_broadcast(qtab, broadcast_queries),
-                   ["cell", "sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("__d2_micro").cast("long").alias("approx_d2_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2_micro").asc(), F.col("neighbor_id").asc()
-    )
-    if rerank is None:
-        return (
-            paired.withColumn("rk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "neighbor_id", "approx_d2_micro", "rk")
-        )
-    cands = (
-        paired.withColumn("__ark", F.row_number().over(w))
-        .filter(F.col("__ark") <= int(rerank))
-        .select("query_id", "neighbor_id")
-    )
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-    )
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qvx"),
-    )
-    exact_d2 = F.round(
-        dot(F.col("__qvx"), F.col("__qvx"))
-        - F.lit(2.0) * dot(F.col("__qvx"), F.col("__cv"))
-        + dot(F.col("__cv"), F.col("__cv")),
-        6,
-    ) + F.lit(0.0)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.join(cvecs, "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .withColumn("d2", exact_d2)
-        .withColumn("rk", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "d2", "rk")
+    qtab = _adc_table(q_probed, ["cell"], "__qr", books, m, sub)
+    return _adc_topk(
+        codes,
+        _maybe_broadcast(qtab, broadcast_queries),
+        ["cell", "sub", "code"],
+        k,
+        rerank,
+        corpus,
+        queries,
+        id_col,
+        vec_col,
     )
 
 
@@ -2478,35 +2111,22 @@ def hard_negative_mining(
         F.col(vec_col).cast("array<double>").alias("__cv"),
         F.col(label_col).alias("__nl"),
     )
-    scored = (
-        # per-row norms hoisted out of the |A|×N pair expression (same
-        # fold — bit-identical rounded quotient)
-        c.withColumn("__cn", l2_norm(F.col("__cv")))
-        .join(F.broadcast(a.withColumn("__an", l2_norm(F.col("__av")))))
-        .filter(F.col("neighbor_id") != F.col("anchor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__av"), F.col("__cv"))
-                / (F.col("__an") * F.col("__cn")),
-                round_to,
-            ),
-        )
-        .withColumn(
-            "role",
-            F.when(F.col("__nl").eqNullSafe(F.col("__al")), "pos").otherwise(
-                "neg"
-            ),
-        )
-    )
-    w = Window.partitionBy("anchor_id", "role").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    scored = _cosine_pairs(
+        c,
+        "__cv",
+        a,
+        "__av",
+        lambda c, a: c.join(F.broadcast(a)).filter(
+            F.col("neighbor_id") != F.col("anchor_id")
+        ),
+        round_to,
+    ).withColumn(
+        "role",
+        F.when(F.col("__nl").eqNullSafe(F.col("__al")), "pos").otherwise("neg"),
     )
     keep = F.when(F.col("role") == "pos", F.lit(int(k_pos))).otherwise(
         F.lit(int(k_neg))
     )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= keep)
-        .select("anchor_id", "role", "rk", "neighbor_id", "cosine")
-    )
+    return _topk(
+        scored, F.col("cosine").desc(), keep, by=("anchor_id", "role")
+    ).select("anchor_id", "role", "rk", "neighbor_id", "cosine")

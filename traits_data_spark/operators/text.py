@@ -2090,15 +2090,13 @@ def train_kn_lm(
             table.groupBy(*ctx).agg(F.sum(cnt).cast("long").alias(tot), *aggs),
             list(ctx),
         )
-        # at order 2 the type total Nbb rides in the one discount
-        # aggregate; higher orders take it from the level-2 table below
+        # the type total Nbb (DECIMAL(38,0)) rides in level 2's
+        # discount aggregate at every order
         frames.append(
-            mkn_discount_glob(table, cnt, f"l{k}", modified, total=order == 2)
+            mkn_discount_glob(table, cnt, f"l{k}", modified, total=k == 2)
         )
         levels.append((k, cnt, tot, stats))
         cols += [cnt, tot, *stats]
-    if order > 2:
-        frames.append(table.agg(F.count(F.lit(1)).cast(DEC).alias("__nbb")))
     pred = table.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("ncw"))
     d = d.join(pred, "w").crossJoin(
         F.broadcast(functools.reduce(lambda a, b: a.crossJoin(b), frames))
