@@ -944,9 +944,10 @@ def test_keyed_near_dups_shard_local_recall(spark, embeddings):
     )
     from traits_data_spark.operators.layout import balanced_shards
     from traits_data_spark.operators.similarity import (
-        cosine,
+        dot,
         keyed_near_dups,
         kmeans_clusters,
+        l2_norm,
     )
 
     emb = embeddings.limit(300).cache()
@@ -976,7 +977,12 @@ def test_keyed_near_dups_shard_local_recall(spark, embeddings):
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cosine",
-            F.round(cosine(F.col("va"), F.col("vb")), 6) + F.lit(0.0),
+            F.round(
+                dot(F.col("va"), F.col("vb"))
+                / (l2_norm(F.col("va")) * l2_norm(F.col("vb"))),
+                6,
+            )
+            + F.lit(0.0),
         )
         .filter(F.col("cosine") >= NEAR_DUP_THRESHOLD)
         .collect()

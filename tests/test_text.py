@@ -304,43 +304,69 @@ def test_bpe_token_counts_doc_sum_and_nulls(spark):
     assert out[2] == 0 and out[3] == 0 and out[4] == 0
 
 
-def test_bpe_distinct_words_path_parity(spark, documents):
-    """The scale shape (tokenize each DISTINCT word once, join back)
-    must count identically to the inline projection."""
-    from traits_data_spark.operators.text import bpe_token_counts
-
-    docs = documents.select("doc_id", "text").limit(120)
-    inline = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_token_counts(docs).collect()
-    }
-    via_distinct = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_token_counts(docs, distinct_words=True).collect()
-    }
-    assert inline == via_distinct and inline
-
-
-def test_bpe_table_vocab_matches_column_tokenizer(spark, documents):
-    """The pandas-UDF table-vocab tokenizer must count bit-identically
-    to the pure-column CASE-ladder tokenizer given the same piece set
-    (here the demo vocab, small enough for both shapes)."""
+def test_bpe_greedy_paths_agree(spark, documents):
+    """Both greedy longest-match paths of bpe_token_counts count
+    identically: (a) the column kernel equals the Python kernel on
+    every distinct word of the fixture and on the cap-boundary words;
+    (b) the demo vocab (inline CASE ladder) and the same vocab padded
+    past the threshold with pieces no lowercased word can match (the
+    distinct-word UDF path) give the same per-doc counts; (c) null,
+    empty and all-space docs count 0 on both paths."""
+    from traits_data_spark.operators.dedup import normalized_text
     from traits_data_spark.operators.text import (
+        BPE_AUTO_DISTINCT_MIN_VOCAB,
+        BPE_CAP,
         BPE_VOCAB,
+        _piece_tables,
+        bpe_effective_vocab,
+        bpe_piece_count,
+        bpe_piece_count_py,
         bpe_token_counts,
-        bpe_token_counts_table,
     )
 
-    docs = documents.select("doc_id", "text").limit(120)
+    docs = documents.select("doc_id", "text").limit(120).unionByName(
+        spark.createDataFrame(
+            [(-1, None), (-2, ""), (-3, "   ")], "doc_id long, text string"
+        )
+    )
+    words = [
+        r[0]
+        for r in docs.select(
+            F.explode(F.split(normalized_text("text"), " ")).alias("w")
+        )
+        .filter(F.length("w") > 0)
+        .distinct()
+        .collect()
+    ]
+    # "th" is a piece: 24 greedy steps consume 48 chars, the rest
+    # count one token per char
+    words += ["th" * n for n in (BPE_CAP - 1, BPE_CAP, BPE_CAP + 1)]
+    words += ["q" * n for n in (BPE_CAP - 1, BPE_CAP, BPE_CAP + 1)]
+    col = {
+        r["w"]: r["t"]
+        for r in spark.createDataFrame([(w,) for w in words], ["w"])
+        .select("w", bpe_piece_count(F.col("w"), BPE_VOCAB).alias("t"))
+        .collect()
+    }
+    tables = _piece_tables(BPE_VOCAB)
+    assert len(words) > 20
+    for w in words:
+        assert col[w] == bpe_piece_count_py(w, tables), w
+
+    padded = list(BPE_VOCAB) + [
+        f"ZZ{i:04d}" for i in range(BPE_AUTO_DISTINCT_MIN_VOCAB)
+    ]
+    assert len(bpe_effective_vocab(BPE_VOCAB)) <= BPE_AUTO_DISTINCT_MIN_VOCAB
+    assert len(bpe_effective_vocab(padded)) > BPE_AUTO_DISTINCT_MIN_VOCAB
     inline = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_token_counts(docs, distinct_words=False).collect()
+        r["doc_id"]: r["bpe_tokens"] for r in bpe_token_counts(docs).collect()
     }
-    via_table = {
+    via_udf = {
         r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_token_counts_table(docs, list(BPE_VOCAB)).collect()
+        for r in bpe_token_counts(docs, vocab=padded).collect()
     }
-    assert inline == via_table and inline
+    assert inline == via_udf and len(inline) == 123
+    assert inline[-1] == inline[-2] == inline[-3] == 0
 
 
 def test_bpe_table_vocab_loads_artifact_and_handles_nulls(spark):
@@ -349,7 +375,7 @@ def test_bpe_table_vocab_loads_artifact_and_handles_nulls(spark):
     end-to-end pipeline on a known word."""
     from traits_data_spark.operators.text import (
         bpe_piece_count_py,
-        bpe_token_counts_table,
+        bpe_token_counts,
         load_bpe_vocab,
         _piece_tables,
     )
@@ -362,7 +388,7 @@ def test_bpe_table_vocab_loads_artifact_and_handles_nulls(spark):
     )
     out = {
         r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_token_counts_table(df, vocab).collect()
+        for r in bpe_token_counts(df, vocab=vocab).collect()
     }
     pieces = [r[0] for r in vocab.collect()]
     tables = _piece_tables(pieces)
@@ -373,7 +399,7 @@ def test_bpe_table_vocab_loads_artifact_and_handles_nulls(spark):
 
 
 def test_bpe_auto_distinct_threshold():
-    """distinct_words=None auto-selects by effective vocab size."""
+    """bpe_token_counts picks its shape by effective vocab size."""
     from traits_data_spark.operators.text import (
         BPE_AUTO_DISTINCT_MIN_VOCAB,
         BPE_VOCAB,

@@ -12,8 +12,9 @@ artifacts:
   n_tokens BIGINT, nll_micro BIGINT): expected Viterbi token count and
   total negative log-prob for every distinct corpus word, computed by
   the RECURSIVE reference tokenizer below — deliberately a different
-  implementation from the engine's iterative DP in
-  ``operators.text.unigram_tokens_py``, so the catalog oracle is an
+  implementation from the engine's iterative DP
+  (``operators.text.unigram_train_viterbi_py``, called through
+  ``unigram_tokens_py``), so the catalog oracle is an
   independent check, parity-tested in tests/test_text.py.
 
 Rerun only to regenerate after changing the rules here; the committed

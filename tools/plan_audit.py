@@ -112,6 +112,12 @@ HEADLINE = [
     "train_mkn3_lm",
     "train_mkn4_lm",
     "kn4_doc_scores",
+    "bpe_token_counts",
+    "bpe_token_counts_large",
+    "bpe_merge_token_counts",
+    "unigram_token_counts",
+    "tokenizer_fertility",
+    "curate_corpus_bpe",
 ]
 
 
@@ -194,6 +200,18 @@ MAX_SCANS = {
     "train_mkn3_lm": 0,
     "train_mkn4_lm": 0,
     "kn4_doc_scores": 1,
+    # inline greedy CASE ladder: one projection over the one scan
+    "bpe_token_counts": 1,
+    # distinct-word apply: distinct words, join back, doc grain (3 docs scans)
+    "bpe_token_counts_large": 3,
+    # same distinct-word apply over the collected merge ranks
+    "bpe_merge_token_counts": 3,
+    # same distinct-word apply over the collected piece log-probs
+    "unigram_token_counts": 3,
+    # three distinct-word applies (reused exchanges) + the source join
+    "tokenizer_fertility": 4,
+    # curation survivors are barriered at build time (0 raw scans)
+    "curate_corpus_bpe": 0,
 }
 
 

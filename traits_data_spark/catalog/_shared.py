@@ -121,7 +121,6 @@ from traits_data_spark.operators.text import (
     kn4_doc_scores,
     kn_doc_scores,
     train_kn_lm,
-    bpe_token_counts_table,
     load_bpe_merges,
     load_bpe_vocab,
     bm25_topk,

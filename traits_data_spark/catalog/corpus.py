@@ -481,8 +481,8 @@ def _curate_corpus_sql(
     cases = " ".join(f"WHEN '{s}' THEN {w}" for s, w in CURATE_WEIGHTS.items())
     # The bpe variant budgets the mixture in subword tokens: tokenize
     # the DISTINCT lowercase words of the post-dedup/decon survivors
-    # (same distinct-word shape bpe_token_counts(distinct_words=True)
-    # uses), sum per doc, and drive per/rates/kept off bpe_tokens.
+    # (the distinct-word shape the oracles use for bpe_token_counts),
+    # sum per doc, and drive per/rates/kept off bpe_tokens.
     if bpe:
         budget_col, budget = "bpe_tokens", CURATE_BPE_BUDGET
         surv_cols = "doc_id, source, ws_tokens, nwl"

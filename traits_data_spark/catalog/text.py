@@ -25,7 +25,6 @@ from traits_data_spark.catalog._shared import (
     bm25_topk,
     bpe_merge_token_counts,
     bpe_token_counts,
-    bpe_token_counts_table,
     bpe_train,
     bpe_train_token_counts,
     char_entropy,
@@ -105,17 +104,18 @@ FROM d LEFT JOIN bpe b USING (doc_id)
 
 def q_bpe_token_counts_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subword token counting against the PRODUCTION-scale piece table
-    (``operators.text.bpe_token_counts_table``): the 12k-piece parquet
-    vocab artifact is broadcast as length-bucketed hash sets and each
-    DISTINCT word is tokenized once by an Arrow-batched pandas UDF —
-    the shape a real model tokenizer takes at 100 TB, vs the
-    plan-literal CASE ladder of ``bpe_token_counts``. The DuckDB
+    (``operators.text.bpe_token_counts`` past its inline threshold):
+    the 12k-piece parquet vocab artifact is broadcast as
+    length-bucketed hash sets and each DISTINCT word is tokenized once
+    by an Arrow-batched pandas UDF — the shape a real model tokenizer
+    takes at 100 TB, vs the plan-literal CASE ladder the demo vocab
+    of ``q_bpe_token_counts`` stays on. The DuckDB
     oracle recomputes every count from the same parquet artifact with
     a length-bucketed candidate join + recursive greedy advance, so
     the Python tokenizer is hash-checked end to end."""
     docs = _docs_wide(spark, sf_dir)
     vocab = load_bpe_vocab(spark)
-    return bpe_token_counts_table(token_counts(docs), vocab).select(
+    return bpe_token_counts(token_counts(docs), vocab=vocab).select(
         "doc_id", "ws_tokens", "bpe_tokens"
     )
 
@@ -2067,8 +2067,8 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregates."""
     docs = _docs_wide(spark, sf_dir)
     src = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    wp = bpe_token_counts_table(
-        token_counts(docs), load_bpe_vocab(spark), out_col="wp_tokens"
+    wp = bpe_token_counts(
+        token_counts(docs), vocab=load_bpe_vocab(spark), out_col="wp_tokens"
     ).select("doc_id", "ws_tokens", "wp_tokens")
     mr = bpe_merge_token_counts(docs, load_bpe_merges(spark)).select(
         "doc_id", F.col("bpe_merge_tokens").alias("bpe_tokens")

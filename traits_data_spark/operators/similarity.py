@@ -47,10 +47,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def _norm2(col: Column) -> Column:
     """Squared L2 norm via the same left-fold ``dot`` uses — shared by
     the zero-norm guards so every scorer prunes identically."""
@@ -103,8 +99,8 @@ def _cosine_pairs(
     early they never inflate the pair join. Norms are per-ROW
     invariants, folded once per row into ``<lv>_n``/``<rv>_n`` instead
     of once per pair — the same ``l2_norm`` fold, so the quotient is
-    bit-identical to ``cosine``. ``+ 0.0`` turns a −0.0 score into 0.0,
-    as the oracles print it."""
+    bit-identical to ``dot(a, b) / (l2_norm(a) * l2_norm(b))``.
+    ``+ 0.0`` turns a −0.0 score into 0.0, as the oracles print it."""
 
     def normed(df: DataFrame, v: str) -> DataFrame:
         return df.filter(_norm2(F.col(v)) > 0).withColumn(
@@ -137,6 +133,25 @@ def _topk(
         df.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .withColumn("rk", F.col("rk").cast("long"))
+    )
+
+
+def _probe_cells(
+    queries: DataFrame, id_col: str, vec_col: str, cells: DataFrame,
+    cell: str, centv: str, n_probe: int, round_to: int | None = None,
+) -> DataFrame:
+    """The one IVF cell probe of the module: each query (``query_id``,
+    ``__qv``) ranks the broadcast cell table ``cells`` (key ``cell``,
+    centroid ``centv``) by ``_l2sq`` — rounded to ``round_to`` dp when
+    given — and keeps its ``n_probe`` nearest cells, ties by ``cell``
+    ascending."""
+    d2 = _l2sq(F.col("__qv"), F.col(centv))
+    if round_to is not None:
+        d2 = F.round(d2, round_to)
+    q = _vectors(queries, id_col, vec_col, "query_id", "__qv")
+    return _topk(
+        q.join(F.broadcast(cells)).withColumn("__d2", d2),
+        F.col("__d2").asc(), n_probe, tie=cell,
     )
 
 
@@ -464,13 +479,8 @@ def ivf_topk_hyperplane(
         seed,
     )
     centroids = _fixed_point_means(c, ["bucket"], "__cv", scale)
-    q_probed = _topk(
-        _vectors(queries, id_col, vec_col, "query_id", "__qv")
-        .join(F.broadcast(centroids))
-        .withColumn("__d2", _l2sq(F.col("__qv"), F.col("__centv"))),
-        F.col("__d2").asc(),
-        n_probe,
-        tie="bucket",
+    q_probed = _probe_cells(
+        queries, id_col, vec_col, centroids, "bucket", "__centv", n_probe
     ).select("query_id", "__qv", "bucket")
     # Broadcast the probed-query side: "bucket" has at most 2^n_planes
     # distinct values, so a shuffled join would hash-partition the whole
@@ -1495,13 +1505,9 @@ def ivf_topk_kmeans(
     )
     # rank centroids per query on the same rounded L2², probe the
     # n_probe nearest cells
-    q_probed = _topk(
-        _vectors(queries, id_col, vec_col, "query_id", "__qv")
-        .join(F.broadcast(centroids.withColumnRenamed("cid", "__cid")))
-        .withColumn("__d2", F.round(_l2sq(F.col("__qv"), F.col("__centv")), 6)),
-        F.col("__d2").asc(),
-        n_probe,
-        tie="__cid",
+    q_probed = _probe_cells(
+        queries, id_col, vec_col, centroids.withColumnRenamed("cid", "__cid"),
+        "__cid", "__centv", n_probe, round_to=6,
     ).select("query_id", "__qv", "__cid")
     # Broadcast the probed-query side: __cid has only n_centroids
     # distinct values, so a shuffled join would funnel the corpus into
@@ -1919,13 +1925,9 @@ def ivfpq_topk(
     )
     # queries rank the broadcast cell centroids, probe n_probe cells,
     # and move to residual space vs each probed cell
-    q_probed = _topk(
-        _vectors(queries, id_col, vec_col, "query_id", "__qv")
-        .join(F.broadcast(cents.withColumnRenamed("cid", "cell")))
-        .withColumn("__d2", F.round(_l2sq(F.col("__qv"), F.col("__cellv")), 6)),
-        F.col("__d2").asc(),
-        n_probe,
-        tie="cell",
+    q_probed = _probe_cells(
+        queries, id_col, vec_col, cents.withColumnRenamed("cid", "cell"),
+        "cell", "__cellv", n_probe, round_to=6,
     ).select(
         "query_id",
         "cell",
@@ -2038,7 +2040,7 @@ def matryoshka_recall(
     themselves — storage, shuffle AND scoring cost drop linearly in
     ``d``, which at 100 TB is usually the bigger lever).
 
-    Truncated cosine re-normalizes implicitly: ``cosine`` divides by
+    Truncated cosine re-normalizes implicitly: the scorer divides by
     the sliced vectors' own norms, exactly how an MRL deployment
     scores prefixes. Every stage is deterministic (neighbor-id
     tie-breaks), so per-query recall is fully oracle-able.

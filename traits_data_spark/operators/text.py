@@ -12,7 +12,7 @@ from __future__ import annotations
 import functools
 import math
 import os
-from typing import Mapping, Sequence
+from typing import Callable, Mapping, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -311,9 +311,8 @@ def bpe_piece_count(
     a ``(pos, cnt)`` accumulator; every step past the word end is a
     no-op, and chars left after ``cap`` greedy steps count one token
     each. Per-position cost is O(|vocab|) literal-array probes — fine
-    for demo-scale vocabs; for a real 50k-piece vocab use
-    ``bpe_token_counts(distinct_words=True)`` so each DISTINCT word is
-    tokenized once (Zipf: distinct words ≪ occurrences).
+    for demo-scale vocabs; ``bpe_token_counts`` switches a larger
+    vocab to ``bpe_piece_count_py`` over each DISTINCT word instead.
     """
     by_len = _vocab_by_len(vocab)
     L = F.length(word)
@@ -342,22 +341,94 @@ def bpe_piece_count(
     )
 
 
-# Auto-select threshold for bpe_token_counts(distinct_words=None):
-# above this many effective pieces the O(|vocab|) per-char literal
-# probe of the inline shape costs more than the distinct-word shape's
-# three exchanges (measured crossover is corpus-dependent; the demo
-# ~100-piece vocab stays inline, any production vocab flips).
+def _collect_artifact(
+    model: DataFrame | Mapping | Sequence,
+    keys: Sequence[str],
+    value: str | None = None,
+) -> list | dict:
+    """A tokenizer model artifact (piece table, merge ranks, piece
+    log-probs) as a driver-side object: the ``keys`` column as a list
+    when ``value`` is None, else a ``key -> int(value)`` dict (tuple
+    keys for several ``keys``). An in-memory vocab passes through as a
+    list / dict copy. The artifact is bounded — it does not grow with
+    the corpus — so one collect is the broadcast-dim-join contract."""
+    if not isinstance(model, DataFrame):
+        return list(model) if value is None else dict(model)
+    n = len(keys)
+    rows = model.select(*keys, *([value] if value else [])).collect()
+    key = (lambda r: r[0]) if n == 1 else (lambda r: tuple(r[:n]))
+    if value is None:
+        return [key(r) for r in rows]
+    return {key(r): int(r[n]) for r in rows}
+
+
+def _distinct_word_apply(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    table: object,
+    kernel: Callable[[str, object], tuple[int, ...]],
+    outs: Sequence[str],
+    grain: DataFrame | None = None,
+) -> DataFrame:
+    """The one execution shape of the artifact tokenizers: text is
+    whitespace-normalized, lowercased and split into words, exploded
+    with ``id_col``; each DISTINCT word runs ``kernel(word, table)``
+    exactly once in an Arrow-batched pandas UDF (``table`` is broadcast
+    once), giving one integer per ``outs`` column; the per-word results
+    join back word-keyed and one per-doc sum per column restores the
+    doc grain. Zipf does the heavy lifting: "the" is tokenized once,
+    not 10^9 times. The word join is skew-prone by the same argument;
+    it carries no hint — AQE picks the strategy and splits hot words
+    (the distinct-word side can reach tens of millions of rows).
+
+    The sums are left-joined onto ``grain`` (default ``df``), so
+    documents with no words keep their row with 0s."""
+    bc = df.sparkSession.sparkContext.broadcast(table)
+
+    @F.pandas_udf(", ".join(f"{o} long" for o in outs))
+    def _tok(words: pd.Series) -> pd.DataFrame:
+        t = bc.value
+        return pd.DataFrame(
+            [kernel(w, t) for w in words], columns=list(outs), dtype="int64"
+        )
+
+    warr = F.filter(
+        F.split(normalized_text(text_col), " "), lambda w: F.length(w) > 0
+    )
+    words = df.select(F.col(id_col), F.explode(warr).alias("__w"))
+    per_word = (
+        words.select("__w")
+        .distinct()
+        .withColumn("__t", _tok(F.col("__w")))
+        .select("__w", *[F.col("__t").getField(o).alias(o) for o in outs])
+    )
+    sums = (
+        words.join(per_word, "__w")
+        .groupBy(id_col)
+        .agg(*[F.sum(o).cast("long").alias(o) for o in outs])
+    )
+    base = df if grain is None else grain
+    return base.join(sums, id_col, "left").withColumns(
+        {o: F.coalesce(F.col(o), F.lit(0)).cast("long") for o in outs}
+    )
+
+
+# Shape threshold for bpe_token_counts: above this many effective
+# pieces the O(|vocab|) per-char literal probe of the inline shape
+# costs more than the distinct-word shape's three exchanges (measured
+# crossover is corpus-dependent; the demo ~100-piece vocab stays
+# inline, any production vocab flips).
 BPE_AUTO_DISTINCT_MIN_VOCAB = 256
 
 
 def bpe_token_counts(
     df: DataFrame,
     text_col: str = "text",
-    vocab: Sequence[str] = BPE_VOCAB,
+    vocab: DataFrame | Sequence[str] = BPE_VOCAB,
     cap: int = BPE_CAP,
     out_col: str = "bpe_tokens",
     id_col: str = "doc_id",
-    distinct_words: bool | None = None,
 ) -> DataFrame:
     """Append a subword token count per document — the model-tokenizer
     unit every token-budgeted stage (packing, mixture planning,
@@ -365,58 +436,43 @@ def bpe_token_counts(
     ``token_counts`` reports.
 
     Text is whitespace-split after lowercasing (vocab is lowercase);
-    each word's pieces come from greedy longest-match against
-    ``vocab`` (see ``bpe_piece_count``); null/empty text counts 0.
+    each word's pieces come from greedy longest-match (WordPiece-style
+    inference) against ``vocab`` — a piece list, or a piece table
+    (``load_bpe_vocab``) collected once as a bounded model artifact;
+    null/empty text counts 0.
 
-    Two execution shapes:
+    The shape follows the effective vocab size (plan-time-known):
 
-    - ``distinct_words=False`` (default): one pure projection — the
-      nested aggregate runs at scan speed with ZERO shuffles. Right
-      when the vocab is small (probe cost O(|vocab|) per char).
-    - ``distinct_words=True``: explode → tokenize each DISTINCT word
-      once → join counts back → re-aggregate per document. Three
-      exchanges, but each distinct word pays the vocab probe exactly
-      once — the scale shape for big vocabs over Zipf-distributed
-      text, where "the" appears 10^9 times but is tokenized once. The
-      word-keyed join is skewed by nature; AQE skew-join handles it,
-      and the distinct-word side is typically small enough to
-      broadcast.
+    - at most ``BPE_AUTO_DISTINCT_MIN_VOCAB`` pieces: one pure
+      projection (``bpe_piece_count``) — the nested aggregate runs at
+      scan speed with ZERO shuffles;
+    - above it: ``_distinct_word_apply`` with ``bpe_piece_count_py``
+      over length-bucketed hash sets — O(#lengths) set probes per char
+      (~7 vs 12,000 literal comparisons for the CASE ladder, which
+      would also blow the codegen method-size limit at that size).
 
-    ``distinct_words=None`` (default) auto-selects: inline for small
-    vocabs, distinct-word once the effective vocab exceeds
-    ``BPE_AUTO_DISTINCT_MIN_VOCAB`` pieces (the probe cost is
-    plan-time-known via the vocab size; corpus size only sharpens the
-    same choice). Both shapes produce identical counts.
+    Both shapes count identically; the DuckDB oracles reproduce them
+    with a recursive CTE.
     """
-    if distinct_words is None:
-        distinct_words = (
-            len(bpe_effective_vocab(vocab)) > BPE_AUTO_DISTINCT_MIN_VOCAB
+    pieces = _collect_artifact(vocab, ["piece"])
+    if len(bpe_effective_vocab(pieces)) > BPE_AUTO_DISTINCT_MIN_VOCAB:
+        return _distinct_word_apply(
+            df,
+            text_col,
+            id_col,
+            _piece_tables(pieces),
+            lambda w, t: (bpe_piece_count_py(w, t, cap),),
+            [out_col],
         )
     warr = F.filter(
         F.split(normalized_text(text_col), " "), lambda w: F.length(w) > 0
     )
-    if not distinct_words:
-        total = F.aggregate(
-            warr,
-            F.lit(0).cast("long"),
-            lambda acc, w: acc + bpe_piece_count(w, vocab, cap).cast("long"),
-        )
-        return df.withColumn(out_col, F.coalesce(total, F.lit(0)).cast("long"))
-
-    words = df.select(F.col(id_col), F.explode(warr).alias("__w"))
-    wcounts = (
-        words.select("__w")
-        .distinct()
-        .withColumn("__t", bpe_piece_count(F.col("__w"), vocab, cap))
+    total = F.aggregate(
+        warr,
+        F.lit(0).cast("long"),
+        lambda acc, w: acc + bpe_piece_count(w, pieces, cap).cast("long"),
     )
-    sums = (
-        words.join(wcounts, "__w")
-        .groupBy(id_col)
-        .agg(F.sum("__t").cast("long").alias(out_col))
-    )
-    return df.join(sums, id_col, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(0)).cast("long")
-    )
+    return df.withColumn(out_col, F.coalesce(total, F.lit(0)).cast("long"))
 
 
 # Committed production-scale piece table (parquet, one ``piece``
@@ -472,67 +528,6 @@ def bpe_piece_count_py(
         pos += m
         steps += 1
     return cnt + (L - pos)
-
-
-def bpe_token_counts_table(
-    df: DataFrame,
-    vocab: DataFrame | Sequence[str],
-    text_col: str = "text",
-    cap: int = BPE_CAP,
-    out_col: str = "bpe_tokens",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """``bpe_token_counts`` for PRODUCTION vocabularies loaded from a
-    piece table (``load_bpe_vocab``): greedy longest-match subword
-    counts where the vocab is data, not plan literals.
-
-    Execution shape (always distinct-word — the only sane shape at
-    this vocab size): the piece table is collected once (bounded model
-    artifact) into length-bucketed hash sets and broadcast to every
-    executor; the corpus explodes to words, each DISTINCT word is
-    tokenized exactly once by an Arrow-batched pandas UDF
-    (O(#lengths) set probes per char — ~7 probes vs 12,000 literal
-    comparisons for the inline CASE-ladder, which would also blow the
-    codegen method-size limit at this vocab size), counts join back
-    word-keyed, and a final per-doc sum restores the input grain.
-    Zipf does the heavy lifting: "the" is tokenized once, not 10^9
-    times. The word join is skew-prone by the same Zipf argument — AQE
-    skew-join splits the hot word keys, and the distinct-word side
-    broadcasts when small.
-
-    Counts are bit-identical to ``bpe_token_counts`` given the same
-    piece set (property-tested), and the DuckDB oracle reproduces them
-    from the same parquet artifact via a recursive CTE.
-    """
-    if isinstance(vocab, DataFrame):
-        pieces = [r[0] for r in vocab.select("piece").collect()]
-    else:
-        pieces = list(vocab)
-    tables = _piece_tables(pieces)
-    bc = df.sparkSession.sparkContext.broadcast(tables)
-
-    @F.pandas_udf("long")
-    def _tok(words: pd.Series) -> pd.Series:
-        t = bc.value
-        return words.map(lambda w: bpe_piece_count_py(w, t, cap)).astype(
-            "int64"
-        )
-
-    warr = F.filter(
-        F.split(normalized_text(text_col), " "), lambda w: F.length(w) > 0
-    )
-    words = df.select(F.col(id_col), F.explode(warr).alias("__w"))
-    wcounts = (
-        words.select("__w").distinct().withColumn("__t", _tok(F.col("__w")))
-    )
-    sums = (
-        words.join(wcounts, "__w")
-        .groupBy(id_col)
-        .agg(F.sum("__t").cast("long").alias(out_col))
-    )
-    return df.join(sums, id_col, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(0)).cast("long")
-    )
 
 
 # Committed ranked-merge BPE artifacts — see tools/build_bpe_merges.py
@@ -621,47 +616,20 @@ def bpe_merge_token_counts(
     max_word_len: int = BPE_MERGE_MAX_WORD_LEN,
 ) -> DataFrame:
     """Per-document merge-rank BPE token counts — the TRUE-BPE
-    counterpart of ``bpe_token_counts_table`` (which stays as the
-    WordPiece-style greedy variant). Same execution shape, because the
-    shape is what scales: the ranked-merge table is a bounded model
-    artifact, collected once into a broadcast ``(left, right) -> rank``
-    dict; the corpus explodes to words; each DISTINCT word is
-    tokenized exactly once by an Arrow-batched pandas UDF (Zipf: "the"
-    merges once, not 10^9 times); counts join back word-keyed (AQE
-    skew-join handles the hot words) and a per-doc sum restores the
-    input grain. Counts are parity-locked to the naive reference
-    implementation in tools/build_bpe_merges.py, whose precomputed
-    per-word outputs are the DuckDB oracle artifact."""
-    if isinstance(merges, DataFrame):
-        ranks = {
-            (r["left"], r["right"]): int(r["rank"])
-            for r in merges.select("left", "right", "rank").collect()
-        }
-    else:
-        ranks = dict(merges)
-    bc = df.sparkSession.sparkContext.broadcast(ranks)
-
-    @F.pandas_udf("long")
-    def _tok(words: pd.Series) -> pd.Series:
-        t = bc.value
-        return words.map(
-            lambda w: bpe_merge_tokens_py(w, t, max_word_len)
-        ).astype("int64")
-
-    warr = F.filter(
-        F.split(normalized_text(text_col), " "), lambda w: F.length(w) > 0
-    )
-    words = df.select(F.col(id_col), F.explode(warr).alias("__w"))
-    wcounts = (
-        words.select("__w").distinct().withColumn("__t", _tok(F.col("__w")))
-    )
-    sums = (
-        words.join(wcounts, "__w")
-        .groupBy(id_col)
-        .agg(F.sum("__t").cast("long").alias(out_col))
-    )
-    return df.join(sums, id_col, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(0)).cast("long")
+    counterpart of ``bpe_token_counts`` (which stays as the
+    WordPiece-style greedy variant). The ranked-merge table is a
+    bounded model artifact, collected once into a ``(left, right) ->
+    rank`` dict, and ``bpe_merge_tokens_py`` runs once per DISTINCT
+    word (``_distinct_word_apply``). Counts are parity-locked to the
+    naive reference implementation in tools/build_bpe_merges.py, whose
+    precomputed per-word outputs are the DuckDB oracle artifact."""
+    return _distinct_word_apply(
+        df,
+        text_col,
+        id_col,
+        _collect_artifact(merges, ["left", "right"], "rank"),
+        lambda w, t: (bpe_merge_tokens_py(w, t, max_word_len),),
+        [out_col],
     )
 
 
@@ -1312,47 +1280,26 @@ def unigram_tokens_py(
     logp: Mapping[str, int],
     max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
     max_word_len: int = UNIGRAM_MAX_WORD_LEN,
+    unk: int = UNIGRAM_UNK_LOGP_MICRO,
 ) -> tuple[int, int]:
     """Unigram-LM Viterbi token count for one word (Kudo 2018, the
-    SentencePiece ``unigram`` model): choose the segmentation
-    maximizing ``(Σ logp_micro(piece), -n_pieces)`` lexicographically —
-    integer micro-nat scores, so the optimum is exact and
-    engine-portable. Returns ``(n_tokens, nll_micro)``.
+    SentencePiece ``unigram`` model): the segmentation maximizing
+    ``(Σ logp(piece), -n_pieces)`` lexicographically — integer scores
+    (micro-nats for the committed artifact, Q20 log2 for a trained
+    vocab), so the optimum is exact and engine-portable. Returns
+    ``(n_tokens, nll)``.
 
-    Iterative LEFT-TO-RIGHT DP — deliberately a different
-    implementation from the recursive best-suffix reference in
-    tools/build_unigram_vocab.py it is parity-tested against. Unknown
-    single chars segment with a fixed ``UNIGRAM_UNK_LOGP_MICRO``
-    penalty (byte-fallback stand-in); words longer than
+    The DP is ``unigram_train_viterbi_py`` (iterative, left to right)
+    — deliberately a different implementation from the recursive
+    best-suffix reference in tools/build_unigram_vocab.py it is
+    parity-tested against. Unknown single chars segment with the
+    fixed ``unk`` penalty (byte-fallback stand-in); words longer than
     ``max_word_len`` tokenize as chars (O(L²) guard, same rule as
     ``bpe_merge_tokens_py``)."""
-    L = len(word)
-    if L > max_word_len:
-        nll = -sum(
-            logp.get(c, UNIGRAM_UNK_LOGP_MICRO) for c in word
-        )
-        return L, nll
-    # dp[i] = best (score_micro, -count) over segmentations of word[:i]
-    dp: list[tuple[int, int] | None] = [None] * (L + 1)
-    dp[0] = (0, 0)
-    for i in range(1, L + 1):
-        best = None
-        for j in range(max(0, i - max_piece_len), i):
-            piece = word[j:i]
-            lp = logp.get(piece)
-            if lp is None:
-                if i - j != 1:
-                    continue
-                lp = UNIGRAM_UNK_LOGP_MICRO
-            prev = dp[j]
-            if prev is None:
-                continue
-            cand = (prev[0] + lp, prev[1] - 1)
-            if best is None or cand > best:
-                best = cand
-        dp[i] = best
-    score, negc = dp[L]  # type: ignore[misc]
-    return -negc, -score
+    if len(word) > max_word_len:
+        return len(word), -sum(logp.get(c, unk) for c in word)
+    n, score, _ = unigram_train_viterbi_py(word, logp, max_piece_len, unk)
+    return n, -score
 
 
 def unigram_token_counts(
@@ -1364,66 +1311,20 @@ def unigram_token_counts(
 ) -> DataFrame:
     """Per-document unigram-LM token counts and total negative
     log-prob — the third tokenizer family next to greedy
-    longest-match (WordPiece inference, ``bpe_token_counts_table``)
-    and merge-rank BPE (``bpe_merge_token_counts``).
+    longest-match (WordPiece inference, ``bpe_token_counts``) and
+    merge-rank BPE (``bpe_merge_token_counts``).
 
-    Execution shape is the one that scales (identical to the other
-    two): the piece table is a bounded model artifact collected once
-    into a broadcast ``piece -> logp_micro`` dict; the corpus explodes
-    to words; each DISTINCT word runs Viterbi exactly once in an
-    Arrow-batched pandas UDF (Zipf collapses the work); results join
-    back word-keyed and one per-doc sum restores the input grain.
-    ``nll_micro`` is an integer micro-nat sum, so it is
-    shuffle-order-free and SQL-oracle exact."""
-    if isinstance(vocab, DataFrame):
-        table = {
-            r["piece"]: int(r["logp_micro"])
-            for r in vocab.select("piece", "logp_micro").collect()
-        }
-    else:
-        table = dict(vocab)
-    bc = df.sparkSession.sparkContext.broadcast(table)
-
-    @F.pandas_udf("n_tokens long, nll_micro long")
-    def _tok(words: pd.Series) -> pd.DataFrame:
-        t = bc.value
-        out = words.map(
-            lambda w: unigram_tokens_py(w, t, max_piece_len)
-        )
-        return pd.DataFrame(
-            {
-                "n_tokens": out.map(lambda p: p[0]).astype("int64"),
-                "nll_micro": out.map(lambda p: p[1]).astype("int64"),
-            }
-        )
-
-    warr = F.filter(
-        F.split(normalized_text(text_col), " "), lambda w: F.length(w) > 0
-    )
-    words = df.select(F.col(id_col), F.explode(warr).alias("__w"))
-    wcounts = (
-        words.select("__w")
-        .distinct()
-        .withColumn("__t", _tok(F.col("__w")))
-        .select("__w", "__t.n_tokens", "__t.nll_micro")
-    )
-    sums = (
-        words.join(wcounts, "__w")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n_tokens").cast("long").alias("unigram_tokens"),
-            F.sum("nll_micro").cast("long").alias("nll_micro"),
-        )
-    )
-    return df.join(sums, id_col, "left").withColumns(
-        {
-            "unigram_tokens": F.coalesce(
-                F.col("unigram_tokens"), F.lit(0)
-            ).cast("long"),
-            "nll_micro": F.coalesce(F.col("nll_micro"), F.lit(0)).cast(
-                "long"
-            ),
-        }
+    The piece table is a bounded model artifact collected once into a
+    ``piece -> logp_micro`` dict, and Viterbi runs once per DISTINCT
+    word (``_distinct_word_apply``). ``nll_micro`` is an integer
+    micro-nat sum, so it is shuffle-order-free and SQL-oracle exact."""
+    return _distinct_word_apply(
+        df,
+        text_col,
+        id_col,
+        _collect_artifact(vocab, ["piece"], "logp_micro"),
+        lambda w, t: unigram_tokens_py(w, t, max_piece_len),
+        ["unigram_tokens", "nll_micro"],
     )
 
 
@@ -2272,6 +2173,7 @@ def unigram_train_viterbi_py(
     word: str,
     scores: Mapping[str, int],
     max_piece_len: int = UNIGRAM_TRAIN_MAX_PIECE_LEN,
+    unk: int = UNIGRAM_TRAIN_UNK_Q20,
 ) -> tuple[int, int, list[str]]:
     """Viterbi segmentation WITH backtrace for the unigram trainer's
     E-step: maximize ``(Σ score_q20, -n_pieces, last_piece_len)``
@@ -2280,8 +2182,8 @@ def unigram_train_viterbi_py(
     score and count — the trainer counts pieces, so both engines must
     pick the same ones (the DuckDB oracle's ``list_sort(...)[-1]``
     realizes the identical order). Returns
-    ``(n_tokens, total_score_q20, pieces)``. Unknown single chars take
-    ``UNIGRAM_TRAIN_UNK_Q20``."""
+    ``(n_tokens, total_score, pieces)``. Unknown single chars take the
+    ``unk`` penalty."""
     L = len(word)
     # dp[i] = best (score, -count, piece_len) for word[:i]
     dp: list[tuple[int, int, int]] = [(0, 0, 0)] + [None] * L  # type: ignore[list-item]
@@ -2292,7 +2194,7 @@ def unigram_train_viterbi_py(
             if s is None:
                 if l != 1:
                     continue
-                s = UNIGRAM_TRAIN_UNK_Q20
+                s = unk
             prev = dp[i - l]
             cand = (prev[0] + s, prev[1] - 1, l)
             if best is None or cand > best:
@@ -2520,64 +2422,18 @@ def unigram_apply_token_counts(
     with ``piece``/``logp2_q20``, or an equivalent mapping); the
     tokenization itself is ``unigram_train_token_counts``'s total
     apply (Viterbi + UNK single-char fallback + char segmentation
-    beyond the DP length guard)."""
-    if isinstance(vocab, DataFrame):
-        scores = {
-            r["piece"]: int(r["logp2_q20"])
-            for r in vocab.select("piece", "logp2_q20").collect()
-        }
-    else:
-        scores = dict(vocab)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(scores)
-
-    @F.pandas_udf("n_tokens long, nll_q20 long")
-    def _tok(words: pd.Series) -> pd.DataFrame:
-        t = bc.value
-
-        def one(w: str) -> tuple[int, int]:
-            if len(w) > apply_max_word_len:
-                s = sum(t.get(c, UNIGRAM_TRAIN_UNK_Q20) for c in w)
-                return len(w), -s
-            n, s, _ = unigram_train_viterbi_py(w, t, max_piece_len)
-            return n, -s
-
-        out = words.map(one)
-        return pd.DataFrame(
-            {
-                "n_tokens": out.map(lambda p: p[0]).astype("int64"),
-                "nll_q20": out.map(lambda p: p[1]).astype("int64"),
-            }
-        )
-
-    nt = normalized_text(F.col(text_col), lowercase=True)
-    warr = F.filter(F.split(nt, " "), lambda w: F.length(w) > 0)
-    words = df.select(F.col(id_col), F.explode(warr).alias("__w"))
-    percw = (
-        words.select("__w")
-        .distinct()
-        .withColumn("__t", _tok(F.col("__w")))
-        .select("__w", "__t.n_tokens", "__t.nll_q20")
-    )
-    sums = (
-        words.join(F.broadcast(percw), "__w")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n_tokens").cast("long").alias(out_col),
-            F.sum("nll_q20").cast("long").alias("nll_q20"),
-        )
-    )
-    return (
-        df.select(id_col)
-        .distinct()
-        .join(sums, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col(out_col), F.lit(0)).cast("long").alias(out_col),
-            F.coalesce(F.col("nll_q20"), F.lit(0)).cast("long").alias(
-                "nll_q20"
-            ),
-        )
+    beyond the DP length guard). Output: one row per distinct
+    ``id_col`` — ``(id_col, out_col, nll_q20)``."""
+    return _distinct_word_apply(
+        df,
+        text_col,
+        id_col,
+        _collect_artifact(vocab, ["piece"], "logp2_q20"),
+        lambda w, t: unigram_tokens_py(
+            w, t, max_piece_len, apply_max_word_len, UNIGRAM_TRAIN_UNK_Q20
+        ),
+        [out_col, "nll_q20"],
+        grain=df.select(id_col).distinct(),
     )
 
 
