@@ -304,31 +304,70 @@ def test_bpe_token_counts_doc_sum_and_nulls(spark):
     assert out[2] == 0 and out[3] == 0 and out[4] == 0
 
 
-def test_bpe_greedy_paths_agree(spark, documents):
-    """Both greedy longest-match paths of bpe_token_counts count
-    identically: (a) the column kernel equals the Python kernel on
-    every distinct word of the fixture and on the cap-boundary words;
-    (b) the demo vocab (inline CASE ladder) and the same vocab padded
-    past the threshold with pieces no lowercased word can match (the
-    distinct-word UDF path) give the same per-doc counts; (c) null,
-    empty and all-space docs count 0 on both paths."""
-    from traits_data_spark.operators.dedup import normalized_text
+def _bpe_parity_docs(spark, documents):
+    """The first 120 fixture docs plus a null, an empty and an
+    all-space doc (ids -1, -2, -3)."""
+    return documents.select("doc_id", "text").limit(120).unionByName(
+        spark.createDataFrame(
+            [(-1, None), (-2, ""), (-3, "   ")], "doc_id long, text string"
+        )
+    )
+
+
+def _bpe_padded_vocab():
+    """The demo vocab padded past the threshold with pieces no
+    lowercased word can match: same counts, distinct-word UDF path."""
     from traits_data_spark.operators.text import (
         BPE_AUTO_DISTINCT_MIN_VOCAB,
+        BPE_VOCAB,
+        bpe_effective_vocab,
+    )
+
+    padded = list(BPE_VOCAB) + [
+        f"ZZ{i:04d}" for i in range(BPE_AUTO_DISTINCT_MIN_VOCAB)
+    ]
+    assert len(bpe_effective_vocab(BPE_VOCAB)) <= BPE_AUTO_DISTINCT_MIN_VOCAB
+    assert len(bpe_effective_vocab(padded)) > BPE_AUTO_DISTINCT_MIN_VOCAB
+    return padded
+
+
+def test_bpe_distinct_words_path_parity(spark, documents):
+    """The scale shape (tokenize each DISTINCT word once, join back)
+    must count identically to the inline projection: the demo vocab
+    (inline CASE ladder) and the padded vocab (distinct-word UDF path)
+    give the same per-doc counts, and null, empty and all-space docs
+    count 0 on both paths."""
+    from traits_data_spark.operators.text import bpe_token_counts
+
+    docs = _bpe_parity_docs(spark, documents)
+    inline = {
+        r["doc_id"]: r["bpe_tokens"] for r in bpe_token_counts(docs).collect()
+    }
+    via_distinct = {
+        r["doc_id"]: r["bpe_tokens"]
+        for r in bpe_token_counts(docs, vocab=_bpe_padded_vocab()).collect()
+    }
+    assert inline == via_distinct and len(inline) == 123
+    assert inline[-1] == inline[-2] == inline[-3] == 0
+
+
+def test_bpe_table_vocab_matches_column_tokenizer(spark, documents):
+    """The Python kernel the table-vocab path runs must count
+    bit-identically to the pure-column CASE-ladder kernel given the
+    same piece set: per word on every distinct word of the fixture and
+    on the cap-boundary words, and per doc when the vocab arrives as a
+    piece table rather than a piece list."""
+    from traits_data_spark.operators.dedup import normalized_text
+    from traits_data_spark.operators.text import (
         BPE_CAP,
         BPE_VOCAB,
         _piece_tables,
-        bpe_effective_vocab,
         bpe_piece_count,
         bpe_piece_count_py,
         bpe_token_counts,
     )
 
-    docs = documents.select("doc_id", "text").limit(120).unionByName(
-        spark.createDataFrame(
-            [(-1, None), (-2, ""), (-3, "   ")], "doc_id long, text string"
-        )
-    )
+    docs = _bpe_parity_docs(spark, documents)
     words = [
         r[0]
         for r in docs.select(
@@ -353,20 +392,17 @@ def test_bpe_greedy_paths_agree(spark, documents):
     for w in words:
         assert col[w] == bpe_piece_count_py(w, tables), w
 
-    padded = list(BPE_VOCAB) + [
-        f"ZZ{i:04d}" for i in range(BPE_AUTO_DISTINCT_MIN_VOCAB)
-    ]
-    assert len(bpe_effective_vocab(BPE_VOCAB)) <= BPE_AUTO_DISTINCT_MIN_VOCAB
-    assert len(bpe_effective_vocab(padded)) > BPE_AUTO_DISTINCT_MIN_VOCAB
+    table = spark.createDataFrame(
+        [(p,) for p in _bpe_padded_vocab()], "piece string"
+    )
     inline = {
         r["doc_id"]: r["bpe_tokens"] for r in bpe_token_counts(docs).collect()
     }
-    via_udf = {
+    via_table = {
         r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_token_counts(docs, vocab=padded).collect()
+        for r in bpe_token_counts(docs, vocab=table).collect()
     }
-    assert inline == via_udf and len(inline) == 123
-    assert inline[-1] == inline[-2] == inline[-3] == 0
+    assert inline == via_table and len(inline) == 123
 
 
 def test_bpe_table_vocab_loads_artifact_and_handles_nulls(spark):
